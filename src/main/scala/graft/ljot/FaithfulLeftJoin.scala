@@ -1,8 +1,11 @@
 package graft.ljot
 
+import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -26,7 +29,8 @@ private[ljot] case class Pending(value: String, ts: Long, deadlineMs: Long)
  * last arrival) bounds idle-state lifetime: a key that stops receiving
  * records is dropped wholesale after the retention period, the same net
  * effect as the reference's window-store retention reaper — without it the
- * state (and its re-armed timers) would live forever. */
+ * state (and its re-armed timers) would live forever. Stored through
+ * [[KeyStateCodec]]. */
 private[ljot] case class KeyState(
     lefts: List[(String, Long)],
     rights: List[(String, Long)],
@@ -34,6 +38,58 @@ private[ljot] case class KeyState(
     maxEventTs: Long,
     lastActiveMs: Long,
     epoch: Long = 0L)
+
+/** The state row's single BINARY column: [[KeyState]] laid out flat, so the
+ * state store holds one opaque byte array per key instead of a nested
+ * struct-of-arrays the engine would decode and re-encode through generated
+ * object projections on every task.
+ *
+ * {{{
+ * maxEventTs:i64 lastActiveMs:i64 epoch:i64
+ * n:i32 (value ts:i64)*             lefts
+ * n:i32 (value ts:i64)*             rights
+ * n:i32 (value ts:i64 deadline:i64)* pending
+ * value = len:i32 utf8[len]         len = -1 for a null value (tombstone)
+ * }}} */
+private[ljot] object KeyStateCodec {
+
+  def encode(s: KeyState): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream(64)
+    val out = new DataOutputStream(bytes)
+    def value(v: String): Unit =
+      if (v == null) out.writeInt(-1)
+      else { val b = v.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+    def entries(es: List[(String, Long)]): Unit = {
+      out.writeInt(es.size)
+      es.foreach { case (v, ts) => value(v); out.writeLong(ts) }
+    }
+    out.writeLong(s.maxEventTs)
+    out.writeLong(s.lastActiveMs)
+    out.writeLong(s.epoch)
+    entries(s.lefts)
+    entries(s.rights)
+    out.writeInt(s.pending.size)
+    s.pending.foreach { p => value(p.value); out.writeLong(p.ts); out.writeLong(p.deadlineMs) }
+    bytes.toByteArray
+  }
+
+  def decode(b: Array[Byte]): KeyState = {
+    val in = ByteBuffer.wrap(b)
+    def value(): String = {
+      val n = in.getInt()
+      if (n < 0) null
+      else { val v = new String(b, in.position(), n, UTF_8); in.position(in.position() + n); v }
+    }
+    def entries(): List[(String, Long)] = List.fill(in.getInt())((value(), in.getLong()))
+    val maxEventTs = in.getLong()
+    val lastActiveMs = in.getLong()
+    val epoch = in.getLong()
+    val lefts = entries()
+    val rights = entries()
+    val pending = List.fill(in.getInt())(Pending(value(), in.getLong(), in.getLong()))
+    KeyState(lefts, rights, pending, maxEventTs, lastActiveMs, epoch)
+  }
+}
 
 /**
  * Faithful re-implementation of the reference semantics that the idiomatic
@@ -54,9 +110,13 @@ private[ljot] case class KeyState(
  *    config, not stored state (`ScheduledStateStore.java:123-137`,
  *    restore-into-shorter-window test `LeftJoinOnTimeoutTest.java:131-153`).
  *
- * Single stateful operator: tagged union of both sides → `groupByKey(key)`
- * → `flatMapGroupsWithState(Append, ProcessingTimeTimeout)`. Each group is
- * processed single-threaded, so the reference's concurrency machinery
+ * Single stateful operator: tagged union of both sides → `groupBy(col("key"))`
+ * → `flatMapGroupsWithState(Append, ProcessingTimeTimeout)` over
+ * `GroupState[Array[Byte]]`. Grouping by the key column needs no per-row
+ * key-extraction step, and the per-key [[KeyState]] is stored as one binary
+ * column through [[KeyStateCodec]]: decoded once per trigger of the key,
+ * encoded once on update. Each group is processed single-threaded, so the
+ * reference's concurrency machinery
  * (`MultiMapUtils.java:15-35`, `BlockingScheduledExecutor.java:6-129`)
  * reduces to plain List updates — the shuffle partitioning by key is the
  * scale mechanism, identical in role to the reference's per-partition state
@@ -73,7 +133,7 @@ object FaithfulLeftJoin {
       df.select(col("key").cast("long").as("key"),
                 col("value").cast("string").as("value"),
                 col("ts").cast("timestamp").as("ts"),
-                lit(isLeft).as("left")).as[TaggedRec]
+                lit(isLeft).as("left"))
 
     val union = tag(lhs, true).unionByName(tag(rhs, false))
 
@@ -89,8 +149,8 @@ object FaithfulLeftJoin {
     // are restored state and get their pending deadlines re-armed.
     val runEpoch = System.currentTimeMillis()
     val out: Dataset[PairOut] = union
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KeyState, PairOut](
+      .groupBy(col("key")).as[Long, TaggedRec]
+      .flatMapGroupsWithState[Array[Byte], PairOut](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (key, records, state) =>
           processKey(key, records, state, d, r, timeoutMs, maxScheduled, runEpoch)
@@ -116,7 +176,7 @@ object FaithfulLeftJoin {
   private[ljot] def processKey(
       key: Long,
       records: Iterator[TaggedRec],
-      state: GroupState[KeyState],
+      state: GroupState[Array[Byte]],
       bandMs: Long,
       retentionMs: Long,
       timeoutMs: Long,
@@ -124,14 +184,14 @@ object FaithfulLeftJoin {
       runEpoch: Long = 0L): Iterator[PairOut] = {
 
     val now = state.getCurrentProcessingTimeMs()
-    val s0 = state.getOption.getOrElse(
+    val s0 = state.getOption.map(KeyStateCodec.decode).getOrElse(
       KeyState(Nil, Nil, Nil, Long.MinValue, now, runEpoch))
     val out = List.newBuilder[PairOut]
     var maxEventTs = s0.maxEventTs
     var lastActiveMs = s0.lastActiveMs
 
     // Hot-key safe accumulation: O(1) append/removeHead buffers, converted
-    // from/to the encoded List state exactly once per trigger (a `:+` on
+    // from/to the decoded List state exactly once per trigger (a `:+` on
     // List is an O(n) copy — quadratic over a hot key's micro-batch).
     val pending = scala.collection.mutable.ArrayDeque.empty[Pending]
     val lefts = scala.collection.mutable.ListBuffer.empty[(String, Long)]
@@ -220,7 +280,7 @@ object FaithfulLeftJoin {
     if (s.pending.isEmpty && (idle || (s.lefts.isEmpty && s.rights.isEmpty))) {
       state.remove()
     } else {
-      state.update(s)
+      state.update(KeyStateCodec.encode(s))
       if (s.pending.nonEmpty) {
         // Wake at the earliest deadline, but at least every timeout/4
         // (floor 1 s): Spark exposes no restore hook, so the run-epoch

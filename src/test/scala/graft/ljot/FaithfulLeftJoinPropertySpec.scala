@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Randomized interleaving property for the faithful variant's per-key
@@ -21,7 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
  * schedules (record mix, event-time jitter wider than the band, clock
  * advances spanning the timeout, occasional restarts) drive both
  * implementations through the same triggers; per-trigger outputs must
- * agree as multisets and the engine's pending list must respect the cap. */
+ * agree as multisets and the engine's pending list must respect the cap.
+ *
+ * The binary state layout ([[KeyStateCodec]]) round-trips every generated
+ * [[KeyState]] exactly, edge values included. */
 class FaithfulLeftJoinPropertySpec extends AnyFunSuite {
 
   /** Independent re-derivation of the reference semantics; deliberately a
@@ -104,7 +109,7 @@ class FaithfulLeftJoinPropertySpec extends AnyFunSuite {
     var now = 1000L
     var eventTs = 1000L
     var epoch = 1L
-    var st: Option[KeyState] = None
+    var st: Option[Array[Byte]] = None
     var vid = 0
 
     for (step <- 1 to 80) {
@@ -116,7 +121,7 @@ class FaithfulLeftJoinPropertySpec extends AnyFunSuite {
         val ts = eventTs + rng.nextInt(2 * bandMs.toInt + 1) - bandMs // band jitter
         TaggedRec(1L, s"v$vid", new Timestamp(math.max(0L, ts)), rng.nextBoolean())
       }
-      val gs = TestGroupState.create[KeyState](
+      val gs = TestGroupState.create[Array[Byte]](
         Optional.fromNullable(st.orNull),
         GroupStateTimeout.ProcessingTimeTimeout,
         now, Optional.empty[Long](),
@@ -128,7 +133,7 @@ class FaithfulLeftJoinPropertySpec extends AnyFunSuite {
         s"seed=$seed step=$step now=$now band=$bandMs ret=$retentionMs " +
           s"timeout=$timeoutMs cap=$maxScheduled recs=$recs")
       st = if (gs.exists) {
-        assert(gs.get.pending.size <= math.min(maxScheduled, Int.MaxValue),
+        assert(KeyStateCodec.decode(gs.get).pending.size <= math.min(maxScheduled, Int.MaxValue),
           s"seed=$seed step=$step: pending exceeds maxScheduled")
         Some(gs.get)
       } else None
@@ -139,4 +144,37 @@ class FaithfulLeftJoinPropertySpec extends AnyFunSuite {
     test(s"randomized interleaving matches the naive reference oracle (seed $seed)") {
       simulate(seed)
     }
+
+  // null (a Kafka tombstone), empty, ASCII and multi-byte UTF-8 values
+  private val valueGen: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(""),
+    4 -> Gen.choose(1, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("a", "Z", "0", " ", "+", "\u0000", "é", "ß",
+        "日本", "🙂")).map(_.mkString)))
+
+  private val tsGen: Gen[Long] =
+    Gen.oneOf(Gen.const(Long.MinValue), Gen.const(Long.MaxValue), Gen.const(0L),
+      Gen.choose(-1000000L, 1L << 42))
+
+  private def listGen[T](g: Gen[T]): Gen[List[T]] =
+    Gen.frequency(1 -> Gen.const(Nil), 3 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, g)))
+
+  private val keyStateGen: Gen[KeyState] = for {
+    lefts <- listGen(Gen.zip(valueGen, tsGen))
+    rights <- listGen(Gen.zip(valueGen, tsGen))
+    pending <- listGen(Gen.zip(valueGen, tsGen, tsGen).map((Pending.apply _).tupled))
+    maxEventTs <- Gen.frequency(1 -> Gen.const(Long.MinValue), 2 -> tsGen)
+    lastActiveMs <- tsGen
+    epoch <- tsGen
+  } yield KeyState(lefts, rights, pending, maxEventTs, lastActiveMs, epoch)
+
+  test("binary state codec round-trips every KeyState exactly") {
+    val empty = KeyState(Nil, Nil, Nil, Long.MinValue, 0L)
+    assert(KeyStateCodec.decode(KeyStateCodec.encode(empty)) === empty)
+    for (seed <- 1L to 500L) {
+      val s = keyStateGen.pureApply(Gen.Parameters.default, Seed(seed))
+      assert(KeyStateCodec.decode(KeyStateCodec.encode(s)) === s, s"seed=$seed state=$s")
+    }
+  }
 }

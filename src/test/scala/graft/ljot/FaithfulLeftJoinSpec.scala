@@ -18,14 +18,18 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
   private val retentionMs = 300L
   private val timeoutMs = 200L
 
-  private def state(s: Option[KeyState], nowMs: Long,
-                    timedOut: Boolean = false): TestGroupState[KeyState] =
-    TestGroupState.create[KeyState](
+  private def state(s: Option[Array[Byte]], nowMs: Long,
+                    timedOut: Boolean = false): TestGroupState[Array[Byte]] =
+    TestGroupState.create[Array[Byte]](
       org.apache.spark.api.java.Optional.fromNullable(s.orNull),
       GroupStateTimeout.ProcessingTimeTimeout,
       nowMs, org.apache.spark.api.java.Optional.empty[Long](), timedOut)
 
-  private def run(s: TestGroupState[KeyState], recs: TaggedRec*): Seq[PairOut] =
+  /** The stored per-key state, read back through the binary codec. */
+  private def decoded(s: TestGroupState[Array[Byte]]): KeyState =
+    KeyStateCodec.decode(s.get)
+
+  private def run(s: TestGroupState[Array[Byte]], recs: TaggedRec*): Seq[PairOut] =
     FaithfulLeftJoin.processKey(1L, recs.iterator, s,
       bandMs, retentionMs, timeoutMs).toSeq
 
@@ -37,14 +41,14 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     val out = run(s, r("right", 10L), l("left_1", 1L), l("left_2", 20L))
     assert(out.map(p => (p.lvalue, p.rvalue)) ===
       Seq(("left_1", Some("right")), ("left_2", Some("right"))))
-    assert(s.get.pending.isEmpty)
+    assert(decoded(s).pending.isEmpty)
   }
 
   test("unmatched left schedules a pending timeout with arrival deadline") {
     val s = state(None, 1000L)
     val out = run(s, l("left", 1L))
     assert(out.isEmpty)
-    assert(s.get.pending === List(Pending("left", 1L, 1000L + timeoutMs)))
+    assert(decoded(s).pending === List(Pending("left", 1L, 1000L + timeoutMs)))
     assert(s.getTimeoutTimestampMs.get() === 1000L + timeoutMs)
   }
 
@@ -55,7 +59,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     val s1 = state(s0.getOption, 1000L + timeoutMs + 1, timedOut = true)
     val out = run(s1)
     assert(out === Seq(PairOut(1L, "left", None, new Timestamp(42L))))
-    assert(!s1.exists || s1.get.pending.isEmpty)
+    assert(!s1.exists || decoded(s1).pending.isEmpty)
   }
 
   test("key-level cancel quirk: a join output cancels ALL pending lefts, " +
@@ -63,7 +67,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     // SURVEY.md §2.3-3 (`ScheduledStateStore.java:87-115`)
     val s = state(None, 1000L)
     val out1 = run(s, l("far_left", 1L)) // pending; window [−99, 101]
-    assert(out1.isEmpty && s.get.pending.nonEmpty)
+    assert(out1.isEmpty && decoded(s).pending.nonEmpty)
     // right at ts 500 joins a NEW left at 450 — far_left's window excludes
     // ts 500, yet its pending emission is cancelled too
     val s2 = state(s.getOption, 1100L)
@@ -71,7 +75,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       Iterator(l("near_left", 450L), r("right", 500L)), s2,
       bandMs, retentionMs, timeoutMs).toSeq
     assert(out2.map(p => (p.lvalue, p.rvalue)) === Seq(("near_left", Some("right"))))
-    assert(s2.get.pending.isEmpty, "far_left's pending timeout must be cancelled")
+    assert(decoded(s2).pending.isEmpty, "far_left's pending timeout must be cancelled")
   }
 
   test("late right within band still pairs with an already-fired left " +
@@ -92,7 +96,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     run(s, l("old", 0L))
     val s2 = state(s.getOption, 2000L)
     run(s2, l("new", retentionMs + bandMs + 1000L))
-    assert(s2.get.lefts.map(_._1) === List("new"))
+    assert(decoded(s2).lefts.map(_._1) === List("new"))
   }
 
   test("maxScheduled caps pending per key: oldest fires early at capacity") {
@@ -109,7 +113,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       PairOut(1L, "left_1", None, new Timestamp(1L)),
       PairOut(1L, "left_2", None, new Timestamp(2L)),
       PairOut(1L, "left_3", None, new Timestamp(3L))))
-    assert(s.get.pending.map(_.value) === List("left_4", "left_5"))
+    assert(decoded(s).pending.map(_.value) === List("left_4", "left_5"))
   }
 
   test("restore re-arms pending with the restarted run's full delay") {
@@ -118,7 +122,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     val s0 = state(None, 1000L)
     FaithfulLeftJoin.processKey(1L, Iterator(l("left", 42L)), s0,
       bandMs, retentionMs, timeoutMs, Int.MaxValue, runEpoch = 111L)
-    assert(s0.get.pending.head.deadlineMs === 1000L + timeoutMs)
+    assert(decoded(s0).pending.head.deadlineMs === 1000L + timeoutMs)
     // "restart" at t=5000 with a different epoch and a SHORTER timeout:
     // nothing fires (even though the stored deadline 1200 is long past);
     // the pending entry is re-armed to now + newTimeout
@@ -126,13 +130,33 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     val out = FaithfulLeftJoin.processKey(1L, Iterator.empty, s1,
       bandMs, retentionMs, 150L, Int.MaxValue, runEpoch = 222L).toSeq
     assert(out.isEmpty, "restored pending must wait the full new delay")
-    assert(s1.get.pending.head.deadlineMs === 5000L + 150L)
+    assert(decoded(s1).pending.head.deadlineMs === 5000L + 150L)
     assert(s1.getTimeoutTimestampMs.get() === 5000L + 150L)
     // the re-armed timer then fires normally under the same epoch
     val s2 = state(s1.getOption, 5000L + 151L, timedOut = true)
     val fired = FaithfulLeftJoin.processKey(1L, Iterator.empty, s2,
       bandMs, retentionMs, 150L, Int.MaxValue, runEpoch = 222L).toSeq
     assert(fired === Seq(PairOut(1L, "left", None, new Timestamp(42L))))
+  }
+
+  test("null values (Kafka tombstones) time out and join through the " +
+       "binary state") {
+    val s0 = state(None, 1000L)
+    assert(run(s0, l(null, 1L)).isEmpty)
+    assert(decoded(s0).pending === List(Pending(null, 1L, 1000L + timeoutMs)))
+    // the stored null-valued left times out with its own event ts
+    val s1 = state(s0.getOption, 1000L + timeoutMs + 1, timedOut = true)
+    assert(run(s1) === Seq(PairOut(1L, null, None, new Timestamp(1L))))
+    // a null-valued right joins a null-valued left per pair, and also the
+    // already-fired left it falls in band with (late-right quirk)
+    val s2 = state(s1.getOption, 1250L)
+    val out = run(s2, r(null, 60L), l(null, 80L))
+    assert(out === Seq(
+      PairOut(1L, null, Some(null), new Timestamp(1L)),
+      PairOut(1L, null, Some(null), new Timestamp(80L))))
+    assert(decoded(s2).lefts === List((null, 1L), (null, 80L)))
+    assert(decoded(s2).rights === List((null, 60L)))
+    assert(decoded(s2).pending.isEmpty)
   }
 
   /** Bounded wait until the stateful operator holds >= n state rows.

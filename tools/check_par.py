@@ -27,6 +27,7 @@ import argparse
 import json
 import multiprocessing as mp
 import os
+import re
 import sys
 import time
 
@@ -100,7 +101,9 @@ def check_one(task):
             # Casting is only sound WITHIN a numeric family: DuckDB's
             # CAST(DOUBLE AS BIGINT) rounds to nearest, so an exact-vs-
             # float family drift would mask any fractional divergence
-            # under 0.5 — fail it as schema drift instead (ADVICE r15)
+            # under 0.5 — fail it as schema drift instead (ADVICE r15).
+            # A scaled DECIMAL(p,s>0) is its own family for the same
+            # reason: casting it to BIGINT would round its fraction away.
             o_types = {r[0]: r[1] for r in con.execute(
                 "DESCRIBE ora_side").fetchall()}
 
@@ -108,6 +111,9 @@ def check_one(task):
                 t = t.upper()
                 if t in ("DOUBLE", "FLOAT", "REAL"):
                     return "float"
+                scaled = re.match(r"DECIMAL\(\s*\d+\s*,\s*(\d+)\s*\)", t)
+                if scaled and int(scaled.group(1)) > 0:
+                    return "scaled"
                 if t.startswith("DECIMAL") or "INT" in t:
                     return "exact"
                 return t
