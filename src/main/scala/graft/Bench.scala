@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
  * emits one JSON line with per-query seconds — to stdout AND to the file
@@ -92,21 +91,7 @@ object Bench {
     val rawSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sfDir = SparkLocal.stageInput(rawSfDir)
     if (sfDir != rawSfDir) System.err.println(s"[bench] input staged to $sfDir")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", SparkLocal.dir)
-      // At bench scale AQE's default 1 MB coalesce floor folds small
-      // candidate/verify exchanges into ONE partition, serializing
-      // per-pair work onto a single core; a 64k floor keeps local[32]
-      // busy. Irrelevant at cluster scale, where partitions dwarf 1 MB.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // legacy nanos events.ts encodings — see Tables.events (schema-adaptive)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.mainCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up runs at the BENCH scale factor: JIT tiers, Janino codegen

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan and wall time of one
  * `SparkEntry.queries` entry. Usage:
@@ -10,17 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", SparkLocal.dir)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // events.ts is TIMESTAMP(NANOS) parquet — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.mainCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // two timed runs: the first pays JIT/codegen warm-up, the second is
     // the steady-state number comparable to the bench's warm medians

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one `SparkEntry.queries` entry N times in one session
  * (noop sink, cache cleared between runs) and print each wall time —
@@ -12,17 +11,7 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", SparkLocal.dir)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // events.ts is TIMESTAMP(NANOS) parquet — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.mainCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // stage timing: wall duration vs summed task time exposes stalls that
     // thread sampling attributes to idle pollers

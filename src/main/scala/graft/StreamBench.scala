@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 import java.time.Duration
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ljot.{FaithfulLeftJoin, LeftJoinOnTimeout, LeftJoinOnTimeoutConfig}
@@ -28,17 +27,11 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "500000").toInt
     val chunk = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNK", "125000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // state-store ops pay a fixed per-partition commit per micro-batch;
-      // 8 partitions beats 32 at MemoryStream batch sizes (the cluster
-      // dial is partitions ∝ state size, not cores)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", SparkLocal.dir)
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.mainCores).getOrCreate()
+    // state-store ops pay a fixed per-partition commit per micro-batch;
+    // 8 partitions beats 32 at MemoryStream batch sizes (the cluster
+    // dial is partitions ∝ state size, not cores)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

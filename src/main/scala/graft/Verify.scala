@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,7 @@ object Verify {
     // Optional third arg: comma-separated query-name filter (local debugging).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", SparkLocal.dir)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // events.ts is TIMESTAMP(NANOS) parquet — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.mainCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query outcome, written as verify_status.json next to the dumps.
@@ -52,11 +41,11 @@ object Verify {
           s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}")
       }
       // Per-query isolation by default: operators persist() intermediates.
-      // SPARK_GRAFT_KEEP_CACHE=1 keeps the session caches across queries —
-      // the scale-gate accelerator: at sf10 the memoized quantized
-      // projection / minhash labeling / CountCache would otherwise be
-      // re-derived by EVERY family member (Bench shares them; a
-      // cache-cleared Verify paid the sf10 vector family 10× over).
+      // SPARK_GRAFT_KEEP_CACHE=1 keeps the persisted frames across queries
+      // — the scale-gate accelerator: ScanMemo keeps its values through a
+      // clearCache(), but each family member then recomputes the quantized
+      // projection and PCA chain it re-persists (a cache-cleared Verify
+      // paid the sf10 vector family 10× over).
       if (!sys.env.contains("SPARK_GRAFT_KEEP_CACHE")) spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

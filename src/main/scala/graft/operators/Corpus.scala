@@ -288,7 +288,7 @@ object Corpus {
    * pays a sampling pass plus a full sort; this is one cheap projection
    * and one shuffle. Output (doc_id, shard, pos). */
   def globalShuffle(docs: DataFrame): DataFrame = {
-    val shards = shuffleShardsFor(CountCache.exactCount(docs))
+    val shards = shuffleShardsFor(ScanMemo.exactCount(docs))
     val width = 65536 / shards
     val W = org.apache.spark.sql.expressions.Window
     docs
@@ -316,7 +316,7 @@ object Corpus {
    * map-side-combining (shard, source) aggregate — ≤ shards·sources
    * rows — and a shard-level rollup to O(shards) ≤ 65536 rows. */
   def shardMixAudit(docs: DataFrame): DataFrame = {
-    val shards = shuffleShardsFor(CountCache.exactCount(docs))
+    val shards = shuffleShardsFor(ScanMemo.exactCount(docs))
     val width = 65536 / shards
     val bySrc = docs
       .select(col("source"),
@@ -456,7 +456,7 @@ object Corpus {
    * Output (doc_id, pack_bucket, bin_idx, tok_offset, n_tokens); one
    * shuffle on the bucket key. */
   def packSequences(docs: DataFrame): DataFrame = {
-    val buckets = packBucketsFor(CountCache.exactCount(docs))
+    val buckets = packBucketsFor(ScanMemo.exactCount(docs))
     val h = md5(concat(lit(PackSalt), col("doc_id").cast("string")).cast("binary"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("pack_bucket")).orderBy(col("h"), col("doc_id"))
@@ -1003,7 +1003,7 @@ object Corpus {
    * cross-engine exact at any n. */
   def curriculumStages(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val n = CountCache.exactCount(docs)
+    val n = ScanMemo.exactCount(docs)
     val base = docs.select(col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("n_tokens"))
       // integer DIV, not `/`: Spark's `/` on integers is a DOUBLE divide,
@@ -1793,7 +1793,7 @@ object Corpus {
    * subquery. */
   def tfidfTopK(docs: DataFrame, k: Int = TfIdfK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nDocs = CountCache.exactCount(docs)
+    val nDocs = ScanMemo.exactCount(docs)
     // persisted: tf feeds BOTH the document-frequency rollup and the score
     // join — without it the tokenize+aggregate pipeline runs twice. The
     // cache is the (doc_id, term, tf) aggregate, already collapsed below

@@ -136,8 +136,8 @@ object DedupClusters {
       .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
 
   /** Session-lifetime memo of the corpus's STANDARD labeling —
-   * [[assign]] over [[TextDedup.minhashLsh]] pairs, keyed on (session,
-   * scan root paths) under [[CountCache]]'s immutable-input contract.
+   * [[assign]] over [[TextDedup.minhashLsh]] pairs, held by [[ScanMemo]]
+   * per (session, scan) under its immutable-input contract.
    *
    * Why: the four cluster-family checked queries (`dedup_clusters`,
    * `cluster_keepers`, `cluster_safe_split`, `dedup_savings`) are
@@ -154,24 +154,10 @@ object DedupClusters {
    * `catalog.clearCache()` drops the persist but NOT the CC fixpoint's
    * localCheckpoint blocks (held by the memoized frame's lineage), so
    * harnesses that clear between queries still skip the heavy stages. */
-  def minhashLabels(docs: DataFrame): DataFrame =
-    CountCache.scanKey(docs) match {
-      case None => assign(docs, TextDedup.minhashLsh(docs))
-      case Some(paths) =>
-        val key = System.identityHashCode(docs.sparkSession) + " " + paths
-        val hit = labelCache.get(key)
-        // identityHashCode can collide across sessions — the eq check
-        // makes a stale/foreign entry recompute instead of cross-wiring
-        if (hit != null && (hit.sparkSession eq docs.sparkSession)) hit
-        else {
-          val labeled = assign(docs, TextDedup.minhashLsh(docs)).persist()
-          labelCache.put(key, labeled)
-          labeled
-        }
-    }
-
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  def minhashLabels(docs: DataFrame): DataFrame = {
+    def labeled = assign(docs, TextDedup.minhashLsh(docs))
+    ScanMemo.getOrCompute("minhashLabels", docs)(labeled.persist()).getOrElse(labeled)
+  }
 
   /** Canonical-document selection: collapse every near-dup cluster of
    * size ≥ 2 to its best member — the longest document (token count),

@@ -611,7 +611,7 @@ object Relational {
   val SkewTopN = 20
 
   def keySkew(df: DataFrame, keyCol: String, topN: Int = SkewTopN): DataFrame = {
-    val total = CountCache.exactCount(df)
+    val total = ScanMemo.exactCount(df)
     // asc_nulls_last pins the tiebreak for NULL keys: Spark's bare ASC is
     // NULLS FIRST, DuckDB's is NULLS LAST — a NULL key tied at the top-N
     // boundary would otherwise rank differently per engine (the checked

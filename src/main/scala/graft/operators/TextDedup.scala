@@ -726,9 +726,9 @@ object TextDedup {
    * stale catalog statistic on the Spark side (an ANALYZE taken before an
    * append) could land the two engines on different sides of a
    * ceil(log2(...)) boundary — a correctness FAIL on correct code.
-   * Served by [[CountCache]] so repeat launches over the same immutable
+   * Served by [[ScanMemo]] so repeat launches over the same immutable
    * scan skip the plan-time count job. */
-  def corpusSizeEstimate(docs: DataFrame): Long = CountCache.exactCount(docs)
+  def corpusSizeEstimate(docs: DataFrame): Long = ScanMemo.exactCount(docs)
 
   /** 64-char '0'/'1' SimHash string over the token multiset: bit_j is the
    * sign of Σ_tokens (±1 by bit j of md5(token)). A bit-string, not a

@@ -6,6 +6,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel
 
 /** One banded vector record of the streaming incremental semantic dedup
  * (band key, id, quantized vector, squared norm, event time). */
@@ -131,9 +132,9 @@ object VectorOps {
   /** Exact corpus size — deliberately NOT the optimizer's rowCount
    * estimate: the oracle derives the same parameter from `count(*)`, and
    * a stale catalog statistic on the Spark side would silently diverge
-   * the two plans. Served by [[CountCache]], so only the FIRST operator
+   * the two plans. Served by [[ScanMemo]], so only the FIRST operator
    * launch over a given scan pays the plan-time count job. */
-  private def corpusSize(df: DataFrame): Long = CountCache.exactCount(df)
+  private def corpusSize(df: DataFrame): Long = ScanMemo.exactCount(df)
 
   /** The bounded ANN query-set predicate (see [[QueryBudget]]) and its
    * verbatim SQL mirror. */
@@ -147,7 +148,7 @@ object VectorOps {
   /** (vec_id, q, n2) projection — the one narrow map-side pass over the
    * corpus that everything else builds on.
    *
-   * Memoized per (session, scan-root paths) like
+   * Memoized per (session, scan) by [[ScanMemo]], like
    * [[DedupClusters.minhashLabels]]: SEVENTEEN registered vector queries
    * each start from this identical pure projection of the immutable
    * embeddings scan, so a session running the family end-to-end used to
@@ -162,75 +163,17 @@ object VectorOps {
    * the next consumer re-registers it (one recompute, then shared
    * again), so the memo never serves a silently-unpersisted frame. */
   private def quantized(embeddings: DataFrame): DataFrame =
-    CountCache.scanKey(embeddings) match {
+    ScanMemo.getOrCompute("quantized", embeddings)(quantizedFresh(embeddings).persist()) match {
       case None => quantizedFresh(embeddings)
-      case Some(paths) =>
-        val key = System.identityHashCode(embeddings.sparkSession) + " " + paths
-        val hit = quantCache.get(key)
-        // identityHashCode can collide across sessions — the eq check
-        // makes a stale/foreign entry recompute instead of cross-wiring
-        if (hit != null && (hit.sparkSession eq embeddings.sparkSession)) {
-          if (hit.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-            hit.persist()
-          hit
-        } else {
-          val qn = quantizedFresh(embeddings).persist()
-          val displaced = quantCache.put(key, qn)
-          // a displaced FOREIGN entry (identityHashCode collision — a
-          // different session) would otherwise leak its persisted blocks
-          // for the JVM lifetime. A SAME-SESSION displaced entry (compute
-          // race) is deliberately NOT unpersisted: uncacheQuery matches by
-          // canonicalized plan, which the structurally-identical fresh
-          // projection shares — unpersisting the loser would silently
-          // evict the winner's cache entry (ADVICE r15; the pcaCache
-          // displacement logic below uses the same session-eq guard)
-          if (displaced != null && !(displaced eq qn)
-              && !(displaced.sparkSession eq embeddings.sparkSession))
-            safeUnpersist(displaced)
-          evictStoppedSessions()
-          qn
-        }
+      case Some(qn) =>
+        if (qn.storageLevel == StorageLevel.NONE) qn.persist()
+        qn
     }
-
-  private def safeUnpersist(df: DataFrame): Unit =
-    try if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    catch { case _: Throwable => () }
-
-  private def evictStoppedSessions(): Unit = {
-    val it = quantCache.entrySet().iterator()
-    while (it.hasNext) {
-      val stopped =
-        try it.next().getValue.sparkSession.sparkContext.isStopped
-        catch { case _: Throwable => true }
-      if (stopped) it.remove()
-    }
-    val it2 = pcaCache.entrySet().iterator()
-    while (it2.hasNext) {
-      val stopped =
-        try it2.next().getValue._1.sparkSession.sparkContext.isStopped
-        catch { case _: Throwable => true }
-      if (stopped) it2.remove()
-    }
-  }
-
-  /** Drop every memoized quantized projection and PCA chain
-   * (unpersisting live ones) — the [[CountCache.invalidate]] analog for
-   * harnesses that rewrite the embeddings parquet in place within one
-   * session. */
-  def invalidateQuantCache(): Unit = {
-    quantCache.forEach((_, df) => safeUnpersist(df))
-    quantCache.clear()
-    pcaCache.forEach((_, v) => v._2.foreach(safeUnpersist))
-    pcaCache.clear()
-  }
 
   private def quantizedFresh(embeddings: DataFrame): DataFrame =
     embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("q"))
       .select(col("vec_id"), col("q"), norm2(col("q")).as("n2"))
-
-  private val quantCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def quantizedSql(table: String): String =
     s"""q0 AS (SELECT vec_id, ${quantizeSql("embedding")} AS q FROM $table),
@@ -1115,7 +1058,7 @@ object VectorOps {
       .withColumn("n2", norm2(col("q")))
       .filter(col("n2") > 0L) // token-free chunks have no direction
       .persist() // four consumers (caller-lazy; one-shot mains drop the session)
-    val dstride = ivfStrideFor(CountCache.exactCount(docs))
+    val dstride = ivfStrideFor(ScanMemo.exactCount(docs))
     val cents = qn.filter(col("chunk_id") === 0L && col("doc_id") % dstride === 0)
       .select(col("cvid").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
     val assign = nearestCentroid(
@@ -1848,7 +1791,7 @@ object VectorOps {
    *
    * Scale shape: [[kmeansAssign]]'s partial-agg output (N rows) reduced
    * again to O(C) rows by a map-side-combining count; share is one IEEE
-   * divide by the plan-time exact count ([[CountCache]], mirrored by the
+   * divide by the plan-time exact count ([[ScanMemo]], mirrored by the
    * oracle's scalar subquery — the [[Relational.keySkew]] precedent). */
   def ivfBalance(embeddings: DataFrame): DataFrame = {
     val total = corpusSize(embeddings)
@@ -1997,44 +1940,22 @@ object VectorOps {
    * DECIMAL(38,0) to n ≈ 2³⁶ ≈ 7·10¹⁰ vectors (a 100 TB corpus of
    * 4 KB embedding rows is ~2.5·10¹⁰). */
   def embPcaPower(embeddings: DataFrame): DataFrame =
-    CountCache.scanKey(embeddings) match {
+    ScanMemo.getOrCompute("embPcaPower", embeddings)(embPcaPowerFresh(embeddings)) match {
       case None => embPcaPowerFresh(embeddings)._1
-      case Some(paths) =>
-        val key = System.identityHashCode(embeddings.sparkSession) + " " + paths
-        val hit = pcaCache.get(key)
-        if (hit != null && (hit._1.sparkSession eq embeddings.sparkSession)) {
-          // a harness clearCache() drops BOTH the result's persist and the
-          // chain intermediates' — re-persist the SAME frames in dependency
-          // order (the stored Seq is leaf→root) so each re-compiled
-          // cachedPlan substitutes its inner frames again. Rebuilding fresh
-          // frames here would be WRONG: unpersisting the displaced entry
-          // evicts by canonicalized plan, which the structurally-identical
-          // rebuild shares — it would silently evict its own chain.
-          if (hit._1.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-            quantized(embeddings) // re-register the shared projection first
-            hit._2.foreach { f =>
-              if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-                f.persist()
-            }
-          }
-          hit._1
-        } else {
-          val fresh = embPcaPowerFresh(embeddings)
-          val displaced = pcaCache.put(key, fresh)
-          // only a FOREIGN entry (identityHashCode collision — different
-          // session) is safe to unpersist: a same-session displaced entry
-          // shares canonicalized plans with `fresh`, and uncacheQuery
-          // matches by canonical plan, so unpersisting it would evict the
-          // fresh chain's own cache entries
-          if (displaced != null && !(displaced._1 eq fresh._1)
-              && !(displaced._1.sparkSession eq embeddings.sparkSession))
-            displaced._2.foreach(safeUnpersist)
-          fresh._1
+      case Some((out, chain)) =>
+        // a harness clearCache() drops BOTH the result's persist and the
+        // chain intermediates' — re-persist the SAME frames in dependency
+        // order (the chain is leaf→root) so each re-compiled cachedPlan
+        // substitutes its inner frames again. Not a rebuild: the cache
+        // matches by canonicalized plan, so a structurally-identical
+        // rebuild shares (and, unpersisted, evicts) the memoized frames'
+        // cache entries.
+        if (out.storageLevel == StorageLevel.NONE) {
+          quantized(embeddings) // re-register the shared projection first
+          chain.foreach(f => if (f.storageLevel == StorageLevel.NONE) f.persist())
         }
+        out
     }
-
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Seq[DataFrame])]()
 
   /** Sorted-by-dim array collapse of a (dim, v) frame — the 64-row →
    * 1-row-array bridge the whole spectral family rides. */
@@ -2042,8 +1963,9 @@ object VectorOps {
     transform(array_sort(collect_list(struct(d.as("d"), v.as("v")))),
       x => x.getField("v"))
 
-  /** The chain itself; returns (result, every frame this call persisted)
-   * so the memo can unpersist a displaced/stale entry completely.
+  /** The chain itself; returns (result, every frame this call persisted,
+   * leaf→root) so [[embPcaPower]] can re-persist the chain after a
+   * `clearCache()`.
    *
    * Round-16 shape (optimization round; output byte-identical to the
    * round-15 three-pass form, proven by the BigInt mirror spec + oracle

@@ -42,6 +42,15 @@ class TestdataContractSpec extends AnyFunSuite with SparkTestHarness {
     }
   }
 
+  test("every embeddings row is a VectorOps.Dim-long vector — the fused PCA " +
+       "pass's unchecked precondition") {
+    import org.apache.spark.sql.functions.{col, size}
+    val bad = Tables.embeddings(spark, dir)
+      .filter(col("embedding").isNull || size(col("embedding")) =!= graft.operators.VectorOps.Dim)
+      .count()
+    assert(bad == 0L, s"$bad embeddings rows are null or not ${graft.operators.VectorOps.Dim} long")
+  }
+
   test("events.ts normalizes to session TIMESTAMP regardless of physical encoding") {
     val df = Tables.events(spark, dir)
     assert(df.schema("ts").dataType == TimestampType,
