@@ -9,8 +9,9 @@ import graft.ljot.{FaithfulLeftJoin, LeftJoinOnTimeout, LeftJoinOnTimeoutConfig}
 
 /** Streaming-throughput measurement for the flagship operator: drives N
  * left + N right events through the idiomatic streaming
- * left-join-on-timeout (stream-stream left-outer join with watermark
- * state) via MemoryStream → noop sink and reports events/second.
+ * left-join-on-timeout (one event-time `flatMapGroupsWithState` over the
+ * side-tagged union, per-key state bounded by the watermark) via
+ * MemoryStream → noop sink and reports events/second.
  *
  * The reference publishes no throughput numbers (BASELINE.md §ref) — its
  * integration test only bounds small event counts under 30 s against an
@@ -181,9 +182,9 @@ object StreamBench {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     run() // warm-up: state store init, codegen, JIT
     val eps = run()
-    // idiomatic stream-stream join under the RocksDB state store — the
-    // spill-to-disk configuration a production cluster runs the headline
-    // operator with once keyed join state outgrows the executor heap
+    // idiomatic variant under the RocksDB state store — the spill-to-disk
+    // configuration a production cluster runs the headline operator with
+    // once keyed join state outgrows the executor heap
     // (the conf is read at query START, so setting it here scopes it)
     spark.conf.set(providerKey, rocksProvider)
     run() // warm-up: native lib load, column families
@@ -208,7 +209,7 @@ object StreamBench {
     spark.conf.unset(rocksTrackKey)
     spark.conf.unset(rocksChangelogKey)
     spark.conf.unset(providerKey)
-    val nF = n / 2 // per-key List state is heavier than join state rows
+    val nF = n / 2 // the faithful runs keep every row (retention dwarfs the span)
     runFaithful(nF, "warm") // warm-up
     val fps = runFaithful(nF, "main")
     // faithful variant under RocksDB, same rationale

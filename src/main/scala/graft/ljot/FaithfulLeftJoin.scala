@@ -5,18 +5,20 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One input record, side-tagged. `left = true` → lhs arm (the reference's
  * `ScheduleProcessor` input, `ScheduleProcessor.java:23-25`); `left = false`
- * → rhs arm feeding the windowed join. */
-private[ljot] case class TaggedRec(key: Long, value: String, ts: Timestamp, left: Boolean)
+ * → rhs arm feeding the windowed join. The key is boxed: a Kafka record
+ * without a key arrives as a null key (see `LeftJoinOnTimeout.taggedUnion`). */
+private[ljot] case class TaggedRec(key: java.lang.Long, value: String, ts: Timestamp, left: Boolean)
 
 /** Un-joined output row; the user joiner is applied afterwards as a Column
  * over (lvalue, rvalue) so batch/streaming/faithful share one joiner type. */
-private[ljot] case class PairOut(key: Long, lvalue: String, rvalue: Option[String], ts: Timestamp)
+private[ljot] case class PairOut(key: java.lang.Long, lvalue: String, rvalue: Option[String],
+                                 ts: Timestamp)
 
 /** Mirror of the reference state row `Scheduled<K,V>{key,value,timestamp}`
  * (`Scheduled.java:9-24`) plus the wall-clock deadline that replaces the
@@ -110,8 +112,10 @@ private[ljot] object KeyStateCodec {
  *    config, not stored state (`ScheduledStateStore.java:123-137`,
  *    restore-into-shorter-window test `LeftJoinOnTimeoutTest.java:131-153`).
  *
- * Single stateful operator: tagged union of both sides → `groupBy(col("key"))`
- * → `flatMapGroupsWithState(Append, ProcessingTimeTimeout)` over
+ * Single stateful operator: tagged union of both sides
+ * (`LeftJoinOnTimeout.taggedUnion`, shared with the idiomatic variant) →
+ * `groupBy(col("key"))` → `flatMapGroupsWithState(Append,
+ * ProcessingTimeTimeout)` over
  * `GroupState[Array[Byte]]`. Grouping by the key column needs no per-row
  * key-extraction step, and the per-key [[KeyState]] is stored as one binary
  * column through [[KeyStateCodec]]: decoded once per trigger of the key,
@@ -129,14 +133,6 @@ object FaithfulLeftJoin {
     val spark = lhs.sparkSession
     import spark.implicits._
 
-    val tag = (df: DataFrame, isLeft: Boolean) =>
-      df.select(col("key").cast("long").as("key"),
-                col("value").cast("string").as("value"),
-                col("ts").cast("timestamp").as("ts"),
-                lit(isLeft).as("left"))
-
-    val union = tag(lhs, true).unionByName(tag(rhs, false))
-
     val d = cfg.joinWindow.toMillis
     val r = cfg.retention.toMillis
     val timeoutMs = cfg.effectiveTimeout.toMillis
@@ -148,18 +144,15 @@ object FaithfulLeftJoin {
     // plan build on the driver; state rows written under a different epoch
     // are restored state and get their pending deadlines re-armed.
     val runEpoch = System.currentTimeMillis()
-    val out: Dataset[PairOut] = union
-      .groupBy(col("key")).as[Long, TaggedRec]
+    val out = LeftJoinOnTimeout.taggedUnion(lhs, rhs, watermark = None)
+      .groupBy(col("key")).as[java.lang.Long, TaggedRec]
       .flatMapGroupsWithState[Array[Byte], PairOut](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (key, records, state) =>
           processKey(key, records, state, d, r, timeoutMs, maxScheduled, runEpoch)
       }
 
-    out.toDF()
-      .select(col("key"),
-              joiner(col("lvalue"), col("rvalue")).as("joined"),
-              col("ts"))
+    LeftJoinOnTimeout.joined(out, joiner)
   }
 
   /** Core per-key transition. Pulled out for direct unit testing.
@@ -174,7 +167,7 @@ object FaithfulLeftJoin {
    * `maxScheduled` entries; the divergence (early emission instead of
    * delayed ingestion) is the documented block→fire mapping. */
   private[ljot] def processKey(
-      key: Long,
+      key: java.lang.Long,
       records: Iterator[TaggedRec],
       state: GroupState[Array[Byte]],
       bandMs: Long,
@@ -227,7 +220,7 @@ object FaithfulLeftJoin {
         rights.foreach { case (rv, rts) =>
           if (math.abs(rts - ts) <= bandMs) {
             matched = true
-            out += PairOut(key, rec.value, Some(rv), rec.ts)
+            out += PairOut(key, rec.value, Option(rv), rec.ts)
           }
         }
         if (matched) {
@@ -251,7 +244,7 @@ object FaithfulLeftJoin {
         lefts.foreach { case (lv, lts) =>
           if (math.abs(lts - ts) <= bandMs) {
             matched = true
-            out += PairOut(key, lv, Some(rec.value), new Timestamp(lts))
+            out += PairOut(key, lv, Option(rec.value), new Timestamp(lts))
           }
         }
         if (matched) pending.clear() // key-level cancel

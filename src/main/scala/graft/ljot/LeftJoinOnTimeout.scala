@@ -1,9 +1,13 @@
 package graft.ljot
 
+import java.sql.Timestamp
 import java.time.Duration
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ListBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Configuration for the left-join-on-timeout operator.
@@ -73,9 +77,11 @@ object LeftJoinOnTimeoutConfig {
  * extraction keys the shuffle on `key` and applies the time band as a
  * join-level filter; the reference's schedule/cancel machinery
  * (~400 LoC of timers, semaphores and changelogs) has no batch analog to
- * preserve. Streaming inputs use the stream-stream left-outer join with
- * watermarks: Spark's symmetric-hash join state + watermark expiry IS the
- * schedule/cancel mechanism (SURVEY.md §2.1-O5).
+ * preserve. Streaming inputs run as ONE event-time keyed-state operator
+ * over the side-tagged union of both watermarked inputs: the per-key band
+ * probe is the join, and the event-time group timer at `l.ts + D` is the
+ * schedule/cancel mechanism (SURVEY.md §2.1-O5). Streaming keys are long
+ * and values string (see [[streamingJoin]]).
  */
 object LeftJoinOnTimeout {
 
@@ -153,23 +159,127 @@ object LeftJoinOnTimeout {
   }
 
   /**
-   * Idiomatic streaming variant: stream-stream left-outer join. The
-   * watermark (delay = retention R) bounds both sides' state exactly like
-   * `JoinWindows.until(R)`; null-padded rows emit once the watermark passes
+   * Idiomatic streaming variant: ONE event-time keyed-state operator over
+   * the side-tagged union of both inputs —
+   * `groupBy(col("key")).flatMapGroupsWithState(Append, EventTimeTimeout)`
+   * running [[joinKey]]. Each side keeps its own `withWatermark("ts", R)`,
+   * so the global (min) watermark, late-row dropping and idle-side
+   * behaviour are those of a watermarked stream-stream join; the
+   * null-padded row emits in the micro-batch whose watermark passes
    * `l.ts + D` — the event-time restatement of the reference's wall-clock
    * timer (SURVEY.md §2.3-4; deliberate, deterministic divergence).
+   *
+   * Keys and values go through the faithful variant's casts (long key,
+   * string value — what `KafkaTopics.decodeKeyedStream` produces), so the
+   * streaming path narrows the batch path's any-type `(key, value)`.
    */
   private def streamingJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
                             cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val wm = s"${cfg.retention.toMillis} milliseconds"
-    val (l0, r0) = tagged(lhs, rhs, cfg)
-    val l = l0.withWatermark("lts", wm)
-    val r = r0.withWatermark("rts", wm)
-    l.join(r, bandCondition(cfg), "left_outer")
-      .select(col("lkey").as("key"),
-              joiner(col("lvalue"), col("rvalue")).as("joined"),
-              col("lts").as("ts"))
+    val spark = lhs.sparkSession
+    import spark.implicits._
+    val d = cfg.joinWindow.toMillis
+    val pairs = taggedUnion(lhs, rhs, Some(cfg.retention))
+      .groupBy(col("key")).as[java.lang.Long, TaggedRec]
+      .flatMapGroupsWithState[Array[Byte], PairOut](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (key, records, state) => joinKey(key, records, state, d)
+      }
+    joined(pairs, joiner)
   }
+
+  /** Event-time per-key transition of the streaming left-outer join; the
+   * state is one [[KeyStateCodec]] row: the retained lefts, the retained
+   * rights, and the unmatched lefts as `pending` (deadline = `l.ts + D`).
+   *
+   *  - Arrivals are processed in order: a left probes the retained rights,
+   *    a right probes the retained lefts, so every in-band pair emits
+   *    exactly once, stamped with the left's ts. A right takes every left
+   *    it matches off the unmatched list (per-pair, not key-level, cancel).
+   *  - Then everything whose `ts + D` lies below the watermark is evicted:
+   *    no later, non-late row can fall in its band. An evicted unmatched
+   *    left emits `joiner(l, null)`.
+   *  - The group timer is the earliest retained `ts + D` of either side, so
+   *    the key is revisited in the micro-batch whose watermark passes it —
+   *    which also reaps keys that hold only orphan rights. */
+  private[ljot] def joinKey(key: java.lang.Long, records: Iterator[TaggedRec],
+                            state: GroupState[Array[Byte]],
+                            bandMs: Long): Iterator[PairOut] = {
+    val lefts = ListBuffer.empty[(String, Long)]
+    val rights = ListBuffer.empty[(String, Long)]
+    val unmatched = ListBuffer.empty[Pending]
+    state.getOption.map(KeyStateCodec.decode).foreach { s =>
+      lefts ++= s.lefts; rights ++= s.rights; unmatched ++= s.pending
+    }
+    val out = List.newBuilder[PairOut]
+
+    records.foreach { rec =>
+      val ts = rec.ts.getTime
+      if (rec.left) {
+        var matched = false
+        rights.foreach { case (rv, rts) =>
+          if (math.abs(rts - ts) <= bandMs) {
+            matched = true
+            out += PairOut(key, rec.value, Option(rv), rec.ts)
+          }
+        }
+        if (!matched) unmatched += Pending(rec.value, ts, ts + bandMs)
+        lefts += ((rec.value, ts))
+      } else {
+        lefts.foreach { case (lv, lts) =>
+          if (math.abs(lts - ts) <= bandMs)
+            out += PairOut(key, lv, Option(rec.value), new Timestamp(lts))
+        }
+        unmatched.filterInPlace(p => math.abs(p.ts - ts) > bandMs)
+        rights += ((rec.value, ts))
+      }
+    }
+
+    val wm = state.getCurrentWatermarkMs()
+    unmatched.foreach { p =>
+      if (p.deadlineMs < wm) out += PairOut(key, p.value, None, new Timestamp(p.ts))
+    }
+    unmatched.filterInPlace(_.deadlineMs >= wm)
+    lefts.filterInPlace(_._2 + bandMs >= wm)
+    rights.filterInPlace(_._2 + bandMs >= wm)
+
+    if (lefts.isEmpty && rights.isEmpty) state.remove()
+    else {
+      state.update(KeyStateCodec.encode(
+        KeyState(lefts.toList, rights.toList, unmatched.toList, 0L, 0L)))
+      val earliest = (lefts.iterator ++ rights.iterator).map(_._2).min + bandMs
+      state.setTimeoutTimestamp(math.max(1L, earliest))
+    }
+    out.result().iterator
+  }
+
+  /** The side-tagged union both per-key operators consume: columns
+   * `(key: long, value: string, ts: timestamp, left: boolean)`, the shape
+   * of [[TaggedRec]]. With `watermark` set, each side gets its own
+   * `withWatermark("ts", ...)` before the union, so the global watermark
+   * is the minimum over the two inputs.
+   *
+   * A null key never equals a key (SQL join semantics, which batch
+   * [[apply]] follows): a null-key right joins nothing and is dropped
+   * here, so the null-key group holds only lefts, each of which times out
+   * with `joiner(l, null)` like any unmatched left. */
+  private[ljot] def taggedUnion(lhs: DataFrame, rhs: DataFrame,
+                                watermark: Option[Duration]): DataFrame = {
+    def tag(df: DataFrame, isLeft: Boolean): DataFrame = {
+      val t = df.select(col("key").cast("long").as("key"),
+                        col("value").cast("string").as("value"),
+                        col("ts").cast("timestamp").as("ts"),
+                        lit(isLeft).as("left"))
+      watermark.fold(t)(w => t.withWatermark("ts", s"${w.toMillis} milliseconds"))
+    }
+    tag(lhs, true).unionByName(tag(rhs, false))
+      .filter(col("left") || col("key").isNotNull)
+  }
+
+  /** Apply the user joiner to the un-joined pairs: `(key, joined, ts)`. */
+  private[ljot] def joined(pairs: Dataset[PairOut], joiner: Joiner): DataFrame =
+    pairs.toDF().select(col("key"),
+                        joiner(col("lvalue"), col("rvalue")).as("joined"),
+                        col("ts"))
 
   /** Rename to side-tagged column names so self-joins (lhs and rhs carved
    * from the same source) never hit ambiguous-attribute resolution. */

@@ -12,8 +12,9 @@ import graft.ljot.{LeftJoinOnTimeout, LeftJoinOnTimeoutConfig}
  * (`kStreamBuilder.stream(...)` consumption at
  * `LeftJoinOnTimeoutTest.java:201-202`, framework sink at
  * `LeftJoinOnTimeoutBuilder.java:119`, raw-producer timeout sink at
- * `:158-172`). In Spark both output branches fall out of ONE left-outer
- * join, so a single sink suffices (SURVEY.md §2.1-O3).
+ * `:158-172`). In Spark both output branches fall out of ONE
+ * left-join-on-timeout operator, so a single sink suffices
+ * (SURVEY.md §2.1-O3).
  *
  * Runtime note: needs the `spark-sql-kafka-0-10` connector on the
  * cluster classpath. The connector is NOT shippable in this build
