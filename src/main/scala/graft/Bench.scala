@@ -88,6 +88,12 @@ object Bench {
     catch { case _: Throwable => -1L }
 
   def main(args: Array[String]): Unit = {
+    // optional comma-separated name filter — targeted runs (e.g. the
+    // dedup/ANN family against generated sf1 data, which has only the
+    // documents/embeddings tables) without timing the whole registry.
+    // A filter naming one query also prints its formatted plan after the
+    // last rep.
+    val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val rawSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sfDir = SparkLocal.stageInput(rawSfDir)
     if (sfDir != rawSfDir) System.err.println(s"[bench] input staged to $sfDir")
@@ -117,21 +123,6 @@ object Bench {
       }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // optional comma-separated name filter — targeted runs (e.g. the
-    // dedup/ANN family against generated sf1 data, which has only the
-    // documents/embeddings tables) without timing the whole registry
-    // names are trimmed and validated: "a, b" must not silently drop b, and
-    // a typo'd name must not produce an empty run that still writes a bench
-    // artifact a reader could mistake for a real measurement
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").iterator.map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        sys.error(s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // round-robin: pass r runs every query once, so the three samples of
     // any one query are separated by a full pass (~minutes) — longer than
     // most noise episodes
@@ -154,12 +145,19 @@ object Bench {
     // diagnosable from the artifact alone (round 7's DATATYPE_MISMATCH was
     // only visible in the sbt test log, not in BENCH_r07.json)
     val failureDetail = scala.collection.mutable.Map.empty[String, String]
-    for (r <- 1 to reps; (name, fn) <- queries) {
+    var lastBuilt: Option[org.apache.spark.sql.DataFrame] = None
+    for (r <- 1 to reps; q <- queries) {
+      val name = q.name
       val (ioS0, ioF0, cpu0) = psiStall()
       val steal0 = stealMs()
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try {
+          val df = q.build(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+          if (queries.size == 1) lastBuilt = Some(df)
+          true
+        }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
           failureDetail.getOrElseUpdate(name,
@@ -180,7 +178,10 @@ object Bench {
       } else failures(name) = failures.getOrElse(name, 0) + 1
       System.err.println(f"[bench] pass $r $name%-22s $dt%8.3f s  stall io ${ioS}ms/${ioF}ms cpu ${cpu}ms steal ${steal}ms${if (ok) "" else "  FAILED"}")
     }
-    val results = queries.map { case (name, _) =>
+    // printed outside the timed window, after the caches are cleared: the
+    // plan the query runs from a cold start
+    lastBuilt.foreach(_.explain("formatted"))
+    val results = queries.map(_.name).map { name =>
       samples.get(name) match {
         case Some(ss) =>
           val dt = ss.sorted.apply(ss.size / 2) // median: stall-immune

@@ -1,13 +1,12 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each SparkEntry.table query's result →
+  * parquet, plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: comma-separated query-name filter (local debugging).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val selected = SparkEntry.select(args.lift(2))
     val spark = GraftSession.builder(GraftSession.mainCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -19,16 +18,15 @@ object Verify {
     // per query, or the first exception line, so a lost driver artifact
     // can be reconstructed from the dump directory alone.
     val status = scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Long]]
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { q =>
+      val name = q.name
       try {
         // coalesce(1) keeps the per-query dump a single tidy file; the
         // scale gates override it (SPARK_GRAFT_NO_COALESCE=1) because a
         // single write task pulling a 245M-row result (sf10
         // decontaminate) stalls the whole run — the DuckDB compare
         // reads <name>/*.parquet either way.
-        val res = fn(spark, sfDir)
+        val res = q.build(spark, sfDir)
         val out = if (sys.env.contains("SPARK_GRAFT_NO_COALESCE")) res
                   else res.coalesce(1)
         out.write.mode("overwrite").parquet(s"$outDir/$name")
@@ -60,8 +58,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val oracles = SparkEntry.table.flatMap(e => e.oracle.map(e.name -> _))
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val statusJson = {
       val entries = status.map {
@@ -70,12 +68,12 @@ object Verify {
       }.mkString(", ")
       val failed = status.count(_._2.isLeft)
       s"""{"sf": ${q(sfDir)}, "n_queries": ${status.size}, "n_failed": $failed, """ +
-        s""""n_oracles": ${SparkEntry.oracleSql.size}, "queries": {$entries}}"""
+        s""""n_oracles": ${oracles.size}, "queries": {$entries}}"""
     }
     Files.writeString(Paths.get(s"$outDir/verify_status.json"), statusJson)
     // last-stdout-line summary, tail-survivable like Bench's compact line
     println(s"""{"metric":"verify","queries":${status.size},""" +
-      s""""failed":${status.count(_._2.isLeft)},"oracles":${SparkEntry.oracleSql.size}}""")
+      s""""failed":${status.count(_._2.isLeft)},"oracles":${oracles.size}}""")
     spark.stop()
   }
 }

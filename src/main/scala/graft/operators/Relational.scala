@@ -825,8 +825,9 @@ object Relational {
        |ELSE CAST(${k - 1} AS DOUBLE) /
        |     (CAST(${hexVal13("hk")} AS DOUBLE) / ${1L << 52}.0) END""".stripMargin
 
+  // DuckDB's date_trunc('day'|'week', TIMESTAMP) is a DATE, Spark's a TIMESTAMP
   def kmvUsersByDaySql: String =
-    s"""WITH uh AS (SELECT DISTINCT event_type, date_trunc('day', ts) AS day,
+    s"""WITH uh AS (SELECT DISTINCT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
        |                   md5(CAST(user_id AS VARCHAR)) AS h FROM events),
        |bot AS (SELECT event_type, day, h,
        |               row_number() OVER (PARTITION BY event_type, day ORDER BY h) AS rn
@@ -1449,9 +1450,10 @@ object Relational {
         (col("dau").cast("double") / col("wau").cast("double")).as("stickiness"))
   }
 
+  // DuckDB's date_trunc('day'|'week', TIMESTAMP) is a DATE, Spark's a TIMESTAMP
   def activeUsersRollupSql: String =
     """WITH dau AS (
-      |  SELECT date_trunc('day', ts) AS day, count(DISTINCT user_id) AS dau
+      |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, count(DISTINCT user_id) AS dau
       |  FROM events GROUP BY 1),
       |wau AS (
       |  SELECT date_trunc('week', ts) AS wk, count(DISTINCT user_id) AS wau
@@ -1791,8 +1793,9 @@ object Relational {
         expr("CAST(datediff(CAST(active_week AS DATE), CAST(cohort_week AS DATE)) DIV 7 AS BIGINT)"))
   }
 
+  // DuckDB's date_trunc('day'|'week', TIMESTAMP) is a DATE, Spark's a TIMESTAMP
   def userRetentionSql: String =
-    """WITH w AS (SELECT user_id, date_trunc('week', ts) AS wk FROM events),
+    """WITH w AS (SELECT user_id, CAST(date_trunc('week', ts) AS TIMESTAMP) AS wk FROM events),
       |c AS (SELECT user_id, min(wk) AS cohort_week FROM w GROUP BY user_id),
       |d AS (SELECT DISTINCT w.user_id, c.cohort_week, w.wk AS active_week
       |      FROM w JOIN c ON w.user_id = c.user_id)

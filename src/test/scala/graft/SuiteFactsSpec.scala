@@ -24,13 +24,26 @@ class SuiteFactsSpec extends AnyFunSuite {
     assert(total.contains(SparkEntry.queries.size),
       s"SKILL.md says $total queries total; SparkEntry.queries has " +
         s"${SparkEntry.queries.size} — update .claude/skills/verify/SKILL.md")
-    assert(oracles.contains(SparkEntry.oracleSql.size),
-      s"SKILL.md says $oracles oracle queries; SparkEntry.oracleSql has " +
-        s"${SparkEntry.oracleSql.size} — update .claude/skills/verify/SKILL.md")
+    val nOracles = SparkEntry.table.count(_.oracle.isDefined)
+    assert(oracles.contains(nOracles),
+      s"SKILL.md says $oracles oracle queries; SparkEntry.table has " +
+        s"$nOracles — update .claude/skills/verify/SKILL.md")
   }
 
-  test("every oracle entry names a registered query") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracleSql entries without a query: $missing")
+  private def stub(name: String) = SparkEntry.Query(name, (s, _) => s.emptyDataFrame)
+
+  test("the registry rejects a duplicate query name") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.registry(stub("a"), stub("b"), stub("a")))
+    assert(e.getMessage.contains("duplicate query names: a"))
+  }
+
+  test("a query list selects trimmed names and rejects unknown ones") {
+    assert(SparkEntry.select(Some("q1_pricing, ljot_events")).map(_.name) ==
+      Seq("ljot_events", "q1_pricing"))
+    assert(SparkEntry.select(None).size == SparkEntry.table.size)
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Some("ljot_events,ljot_evnets")))
+    assert(e.getMessage.contains("ljot_evnets"))
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
   }
 }
