@@ -87,6 +87,13 @@ object Bench {
       "/sys/devices/system/cpu/cpu0/cpufreq/scaling_cur_freq")).trim.toLong
     catch { case _: Throwable => -1L }
 
+  /** A query's median sample, stall-immune: the middle sample of an odd
+   * count, the mean of the two middle ones of an even count. */
+  private[graft] def median(ss: Seq[Double]): Double = {
+    val s = ss.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     // optional comma-separated name filter — targeted runs (e.g. the
     // dedup/ANN family against generated sf1 data, which has only the
@@ -184,7 +191,7 @@ object Bench {
     val results = queries.map(_.name).map { name =>
       samples.get(name) match {
         case Some(ss) =>
-          val dt = ss.sorted.apply(ss.size / 2) // median: stall-immune
+          val dt = median(ss)
           System.err.println(f"[bench] $name%-22s $dt%8.3f s  (samples ${ss.map(s => f"$s%.3f").mkString(" ")})")
           name -> Some(dt)
         case None =>

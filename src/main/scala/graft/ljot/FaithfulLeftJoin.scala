@@ -5,6 +5,8 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 
+import scala.collection.mutable.{ArrayDeque, ListBuffer}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -113,7 +115,8 @@ private[ljot] object KeyStateCodec {
  *    restore-into-shorter-window test `LeftJoinOnTimeoutTest.java:131-153`).
  *
  * Single stateful operator: tagged union of both sides
- * (`LeftJoinOnTimeout.taggedUnion`, shared with the idiomatic variant) →
+ * (`LeftJoinOnTimeout.taggedUnion`, shared with the idiomatic variant, as
+ * is the per-arrival band probe `LeftJoinOnTimeout.arrive`) →
  * `groupBy(col("key"))` → `flatMapGroupsWithState(Append,
  * ProcessingTimeTimeout)` over
  * `GroupState[Array[Byte]]`. Grouping by the key column needs no per-row
@@ -186,11 +189,9 @@ object FaithfulLeftJoin {
     // Hot-key safe accumulation: O(1) append/removeHead buffers, converted
     // from/to the decoded List state exactly once per trigger (a `:+` on
     // List is an O(n) copy — quadratic over a hot key's micro-batch).
-    val pending = scala.collection.mutable.ArrayDeque.empty[Pending]
-    val lefts = scala.collection.mutable.ListBuffer.empty[(String, Long)]
-    val rights = scala.collection.mutable.ListBuffer.empty[(String, Long)]
-    lefts ++= s0.lefts
-    rights ++= s0.rights
+    val pending = ArrayDeque.empty[Pending]
+    val lefts = ListBuffer.from(s0.lefts)
+    val rights = ListBuffer.from(s0.rights)
 
     // 1a. Restore re-arm (ref §2.3-7): state written by a previous run
     //     means this is the first trigger after a checkpoint restart —
@@ -209,46 +210,23 @@ object FaithfulLeftJoin {
     }
 
     // 2. Process arrivals in order (single stream thread per key, like the
-    //    reference's per-task processing).
+    //    reference's per-task processing): every in-window pair emits
+    //    (per-pair join, `LeftJoinOnTimeoutTest.java:89-91`).
     records.foreach { rec =>
-      val ts = rec.ts.getTime
-      maxEventTs = math.max(maxEventTs, ts)
+      maxEventTs = math.max(maxEventTs, rec.ts.getTime)
       lastActiveMs = now
-      if (rec.left) {
-        // windowed join probe: left vs retained rights (O4)
-        var matched = false
-        rights.foreach { case (rv, rts) =>
-          if (math.abs(rts - ts) <= bandMs) {
-            matched = true
-            out += PairOut(key, rec.value, Option(rv), rec.ts)
-          }
+      if (LeftJoinOnTimeout.arrive(key, rec, lefts, rights, bandMs, out)) {
+        // join output → CancelProcessor cancels ALL pending for the key
+        // (`ScheduledStateStore.java:87-115`) — including this left.
+        pending.clear()
+      } else if (rec.left) {
+        // ScheduleProcessor: register the deferred joiner(l, null);
+        // at capacity the oldest fires early (see scaladoc).
+        pending.append(Pending(rec.value, rec.ts.getTime, now + timeoutMs))
+        if (pending.size > maxScheduled) {
+          val oldest = pending.removeHead()
+          out += PairOut(key, oldest.value, None, new Timestamp(oldest.ts))
         }
-        if (matched) {
-          // join output → CancelProcessor cancels ALL pending for the key
-          // (`ScheduledStateStore.java:87-115`) — including this left.
-          pending.clear()
-        } else {
-          // ScheduleProcessor: register the deferred joiner(l, null);
-          // at capacity the oldest fires early (see scaladoc).
-          pending.append(Pending(rec.value, ts, now + timeoutMs))
-          if (pending.size > maxScheduled) {
-            val oldest = pending.removeHead()
-            out += PairOut(key, oldest.value, None, new Timestamp(oldest.ts))
-          }
-        }
-        lefts += ((rec.value, ts))
-      } else {
-        // right arrival probes retained lefts — every in-window pair emits
-        // (per-pair semantics, `LeftJoinOnTimeoutTest.java:89-91`)
-        var matched = false
-        lefts.foreach { case (lv, lts) =>
-          if (math.abs(lts - ts) <= bandMs) {
-            matched = true
-            out += PairOut(key, lv, Option(rec.value), new Timestamp(lts))
-          }
-        }
-        if (matched) pending.clear() // key-level cancel
-        rights += ((rec.value, ts))
       }
     }
 

@@ -3,7 +3,7 @@ package graft.ljot
 import java.sql.Timestamp
 import java.time.Duration
 
-import scala.collection.mutable.ListBuffer
+import scala.collection.mutable.{Growable, ListBuffer}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -108,20 +108,15 @@ object LeftJoinOnTimeout {
             cfg: LeftJoinOnTimeoutConfig): DataFrame = {
     val streaming = lhs.isStreaming || rhs.isStreaming
     if (streaming) streamingJoin(lhs, rhs, joiner, cfg)
-    else batchJoin(lhs, rhs, joiner, cfg)
+    else bandJoin(lhs, rhs, joiner, cfg, "left_outer")
   }
 
   /** Inner windowed interval equi-join only (reference O4,
    * `LeftJoinOnTimeoutBuilder.java:112-115`): one output per in-window
    * (l, r) pair. */
   def innerJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
-                cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val (l, r) = tagged(lhs, rhs, cfg)
-    l.join(r, bandCondition(cfg), "inner")
-      .select(col("lkey").as("key"),
-              joiner(col("lvalue"), col("rvalue")).as("joined"),
-              col("lts").as("ts"))
-  }
+                cfg: LeftJoinOnTimeoutConfig): DataFrame =
+    bandJoin(lhs, rhs, joiner, cfg, "inner")
 
   /** Full-outer windowed interval equi-join — the symmetric completion
    * of the family (inner = O4, left = O5): unmatched LEFTS and unmatched
@@ -135,7 +130,7 @@ object LeftJoinOnTimeout {
    * null-left form to mirror. */
   def fullOuterJoin(lhs: DataFrame, rhs: DataFrame,
                     cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val (l0, r0) = tagged(lhs, rhs, cfg)
+    val (l0, r0) = tagged(lhs, rhs)
     // streaming full-outer needs both watermarks (each side's orphans
     // emit when the OTHER side's watermark clears its band) — same
     // retention→watermark mapping as the streaming left join
@@ -149,10 +144,12 @@ object LeftJoinOnTimeout {
               col("lvalue"), col("rvalue"), col("lts"), col("rts"))
   }
 
-  private def batchJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
-                        cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val (l, r) = tagged(lhs, rhs, cfg)
-    l.join(r, bandCondition(cfg), "left_outer")
+  /** The band join as one `joinType` join (`inner` = O4, `left_outer` =
+   * batch O5): `(key, joiner(l.value, r.value), l.ts)`. */
+  private def bandJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
+                       cfg: LeftJoinOnTimeoutConfig, joinType: String): DataFrame = {
+    val (l, r) = tagged(lhs, rhs)
+    l.join(r, bandCondition(cfg), joinType)
       .select(col("lkey").as("key"),
               joiner(col("lvalue"), col("rvalue")).as("joined"),
               col("lts").as("ts"))
@@ -191,10 +188,10 @@ object LeftJoinOnTimeout {
    * state is one [[KeyStateCodec]] row: the retained lefts, the retained
    * rights, and the unmatched lefts as `pending` (deadline = `l.ts + D`).
    *
-   *  - Arrivals are processed in order: a left probes the retained rights,
-   *    a right probes the retained lefts, so every in-band pair emits
-   *    exactly once, stamped with the left's ts. A right takes every left
-   *    it matches off the unmatched list (per-pair, not key-level, cancel).
+   *  - Arrivals go through [[arrive]] in order, so every in-band pair emits
+   *    exactly once. A right takes every left in its band off the
+   *    unmatched list (per-pair, not key-level, cancel); a left that
+   *    matched nothing joins it.
    *  - Then everything whose `ts + D` lies below the watermark is evicted:
    *    no later, non-late row can fall in its band. An evicted unmatched
    *    left emits `joiner(l, null)`.
@@ -213,25 +210,10 @@ object LeftJoinOnTimeout {
     val out = List.newBuilder[PairOut]
 
     records.foreach { rec =>
+      val matched = arrive(key, rec, lefts, rights, bandMs, out)
       val ts = rec.ts.getTime
-      if (rec.left) {
-        var matched = false
-        rights.foreach { case (rv, rts) =>
-          if (math.abs(rts - ts) <= bandMs) {
-            matched = true
-            out += PairOut(key, rec.value, Option(rv), rec.ts)
-          }
-        }
-        if (!matched) unmatched += Pending(rec.value, ts, ts + bandMs)
-        lefts += ((rec.value, ts))
-      } else {
-        lefts.foreach { case (lv, lts) =>
-          if (math.abs(lts - ts) <= bandMs)
-            out += PairOut(key, lv, Option(rec.value), new Timestamp(lts))
-        }
-        unmatched.filterInPlace(p => math.abs(p.ts - ts) > bandMs)
-        rights += ((rec.value, ts))
-      }
+      if (!rec.left) unmatched.filterInPlace(p => math.abs(p.ts - ts) > bandMs)
+      else if (!matched) unmatched += Pending(rec.value, ts, ts + bandMs)
     }
 
     val wm = state.getCurrentWatermarkMs()
@@ -250,6 +232,29 @@ object LeftJoinOnTimeout {
       state.setTimeoutTimestamp(math.max(1L, earliest))
     }
     out.result().iterator
+  }
+
+  /** One arrival at a key — the band probe both per-key transitions
+   * ([[joinKey]], [[FaithfulLeftJoin.processKey]]) share. The record
+   * probes the OTHER side's retained rows, every in-band pair emits to
+   * `out` stamped with the left's ts, and the record is retained on its
+   * own side. Returns whether it matched; what a match cancels is the
+   * caller's policy. */
+  private[ljot] def arrive(key: java.lang.Long, rec: TaggedRec,
+                           lefts: ListBuffer[(String, Long)],
+                           rights: ListBuffer[(String, Long)], bandMs: Long,
+                           out: Growable[PairOut]): Boolean = {
+    val ts = rec.ts.getTime
+    var matched = false
+    (if (rec.left) rights else lefts).foreach { case (v, vts) =>
+      if (math.abs(vts - ts) <= bandMs) {
+        matched = true
+        out += (if (rec.left) PairOut(key, rec.value, Option(v), rec.ts)
+                else PairOut(key, v, Option(rec.value), new Timestamp(vts)))
+      }
+    }
+    (if (rec.left) lefts else rights) += ((rec.value, ts))
+    matched
   }
 
   /** The side-tagged union both per-key operators consume: columns
@@ -283,14 +288,9 @@ object LeftJoinOnTimeout {
 
   /** Rename to side-tagged column names so self-joins (lhs and rhs carved
    * from the same source) never hit ambiguous-attribute resolution. */
-  private def tagged(lhs: DataFrame, rhs: DataFrame,
-                     cfg: LeftJoinOnTimeoutConfig): (DataFrame, DataFrame) = {
-    val l = lhs.select(col("key").as("lkey"), col("value").as("lvalue"),
-                       col("ts").as("lts"))
-    val r = rhs.select(col("key").as("rkey"), col("value").as("rvalue"),
-                       col("ts").as("rts"))
-    (l, r)
-  }
+  private def tagged(lhs: DataFrame, rhs: DataFrame): (DataFrame, DataFrame) =
+    (lhs.select(col("key").as("lkey"), col("value").as("lvalue"), col("ts").as("lts")),
+     rhs.select(col("key").as("rkey"), col("value").as("rvalue"), col("ts").as("rts")))
 
   /** `l.key = r.key AND r.ts ∈ [l.ts − D, l.ts + D]` — the symmetric
    * Kafka-0.11 `JoinWindows.of(D)` band (SURVEY.md §2.3-1). Expressed with

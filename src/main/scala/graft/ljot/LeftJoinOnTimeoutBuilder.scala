@@ -7,18 +7,17 @@ import org.apache.spark.sql.DataFrame
 /**
  * Fluent builder mirroring the reference's public API surface
  * (`LeftJoinOnTimeoutBuilder.java:19-122`): ctor takes the two streams, the
- * joiner and the window/retention; `timeout`, `scheduledCapacity`,
- * `enableStateLog`, `sinkTo` configure; `buildTopology()` validates and
- * wires.
+ * joiner and the window/retention; `timeout`, `scheduledCapacity` and
+ * `faithful` configure; `build()` (`buildTopology()`) validates and wires.
  *
  * Spark differences, kept deliberately:
  *  - serdes are unnecessary (`serdes(...)` in the reference,
  *    `LeftJoinOnTimeoutBuilder.java:70-77`) — DataFrames carry schemas;
- *  - `enableStateLog` maps to a checkpoint location (Structured Streaming's
- *    WAL + state snapshots replace the changelog topic,
- *    `StateStoreLogger.java:22-31`);
  *  - `build()` returns the joined DataFrame (lazy plan = the topology);
- *    callers attach their own sink, or use `sinkTo` for parquet output.
+ *    callers attach their own sink (`sinkTo`, `:44-53`), and the
+ *    changelog topic (`enableStateLog`, `:62-68`,
+ *    `StateStoreLogger.java:22-31`) is the sink's `checkpointLocation`
+ *    option — Structured Streaming's WAL + state snapshots.
  *
  * Validation parity with `validateArguments()`
  * (`LeftJoinOnTimeoutBuilder.java:124-143`): non-null inputs, D > 0,
@@ -32,7 +31,6 @@ final class LeftJoinOnTimeoutBuilder private (
     retention: Duration,
     timeoutOpt: Option[Duration],
     capacity: Int,
-    checkpoint: Option[String],
     faithfulMode: Boolean) {
 
   /** `timeout(ms)` — override the default `D + 100 ms` (`:55-60`). */
@@ -41,11 +39,6 @@ final class LeftJoinOnTimeoutBuilder private (
   /** `scheduledCapacity(n)` (`:84-87`) — maps to source rate limiting. */
   def scheduledCapacity(n: Int): LeftJoinOnTimeoutBuilder = copy(capacity = n)
 
-  /** `enableStateLog(...)` (`:62-68`) — fault tolerance; in Spark this is a
-   * checkpoint location used by the streaming variant. */
-  def enableStateLog(checkpointLocation: String): LeftJoinOnTimeoutBuilder =
-    copy(checkpoint = Some(checkpointLocation))
-
   /** Select the faithful `flatMapGroupsWithState` variant: key-level cancel
    * + processing-time timers (SURVEY.md §2.3-3/-4). */
   def faithful(enabled: Boolean = true): LeftJoinOnTimeoutBuilder =
@@ -53,8 +46,6 @@ final class LeftJoinOnTimeoutBuilder private (
 
   def config: LeftJoinOnTimeoutConfig =
     LeftJoinOnTimeoutConfig(joinWindow, retention, timeoutOpt, capacity)
-
-  def checkpointLocation: Option[String] = checkpoint
 
   /** `buildTopology()` (`:95-122`): validate and produce the joined plan.
    * Nothing executes until an action / `writeStream.start()` — same
@@ -66,19 +57,12 @@ final class LeftJoinOnTimeoutBuilder private (
     else LeftJoinOnTimeout(lhs, rhs, joiner, cfg)
   }
 
-  /** `sinkTo(topic, producer)` (`:44-53`) analog: build and write to a
-   * parquet path (batch) — one sink for both branches, because the outer
-   * join already unions them (SURVEY.md §2.1-O3). */
-  def sinkTo(path: String): Unit =
-    build().write.mode("overwrite").parquet(path)
-
   private def copy(
       timeoutOpt: Option[Duration] = timeoutOpt,
       capacity: Int = capacity,
-      checkpoint: Option[String] = checkpoint,
       faithfulMode: Boolean = faithfulMode): LeftJoinOnTimeoutBuilder =
     new LeftJoinOnTimeoutBuilder(lhs, rhs, joiner, joinWindow, retention,
-      timeoutOpt, capacity, checkpoint, faithfulMode)
+      timeoutOpt, capacity, faithfulMode)
 }
 
 object LeftJoinOnTimeoutBuilder {
@@ -90,6 +74,6 @@ object LeftJoinOnTimeoutBuilder {
     require(lhs != null && rhs != null && joiner != null,
       "lhs, rhs and joiner must be non-null (ref :133-136)")
     new LeftJoinOnTimeoutBuilder(lhs, rhs, joiner, joinWindow, retention,
-      None, LeftJoinOnTimeoutConfig.DefaultScheduledCapacity, None, false)
+      None, LeftJoinOnTimeoutConfig.DefaultScheduledCapacity, false)
   }
 }

@@ -30,6 +30,12 @@ class SuiteFactsSpec extends AnyFunSuite {
         s"$nOracles — update .claude/skills/verify/SKILL.md")
   }
 
+  test("Bench's median is the middle sample of an odd count and the mean " +
+       "of the two middle samples of an even one") {
+    assert(Bench.median(Seq(0.455, 0.370, 0.512)) === 0.455)
+    assert(Bench.median(Seq(0.455, 0.370)) === (0.455 + 0.370) / 2)
+  }
+
   private def stub(name: String) = SparkEntry.Query(name, (s, _) => s.emptyDataFrame)
 
   test("the registry rejects a duplicate query name") {

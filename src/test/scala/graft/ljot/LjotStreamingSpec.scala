@@ -283,11 +283,14 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
 
   test("a late row is dropped and counted in numRowsDroppedByWatermark of the " +
        "query's single state operator") {
+    // the sentinels are queued before the query starts: a trigger that
+    // finds no data before the first executed batch posts an idle progress
+    // with no state operator, which the per-progress assert below would see
     val l = MemoryStream[Rec]; val r = MemoryStream[Rec]
+    l.addData(rec(98, "wm", sentinelTs)); r.addData(rec(99, "wm", sentinelTs))
     val q = startQuery(LeftJoinOnTimeout(l.toDF(), r.toDF(),
       LeftJoinOnTimeout.testJoiner, cfg), "late_out")
     try {
-      l.addData(rec(98, "wm", sentinelTs)); r.addData(rec(99, "wm", sentinelTs))
       awaitWatermark(q, sentinelTs - R)
       l.addData(rec(1, "late", base + 1)) // far below the watermark
       q.processAllAvailable()
