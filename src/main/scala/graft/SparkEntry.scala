@@ -68,12 +68,7 @@ object SparkEntry {
         .select(col("key").as("lkey"), col("value").as("lvalue"), col("ts").as("lts"))
       val r = eventsSide(s, dir, "error")
         .select(col("key").as("rkey"), col("ts").as("rts"))
-      val dMs = D.toMillis
-      l.join(r,
-          col("lkey") === col("rkey") &&
-            col("rts") >= expr(s"lts - INTERVAL $dMs MILLISECONDS") &&
-            col("rts") <= expr(s"lts + INTERVAL $dMs MILLISECONDS"),
-          "left_anti")
+      l.join(r, LeftJoinOnTimeout.bandCondition(ljotCfg), "left_anti")
         .select(col("lkey").as("key"),
                 concat(col("lvalue"), lit("+")).as("joined"),
                 col("lts").as("ts"))

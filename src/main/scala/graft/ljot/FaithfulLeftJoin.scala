@@ -8,8 +8,7 @@ import java.sql.Timestamp
 import scala.collection.mutable.{ArrayDeque, ListBuffer}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** One input record, side-tagged. `left = true` → lhs arm (the reference's
  * `ScheduleProcessor` input, `ScheduleProcessor.java:23-25`); `left = false`
@@ -27,21 +26,24 @@ private[ljot] case class PairOut(key: java.lang.Long, lvalue: String, rvalue: Op
  * transient `ScheduledFuture`. */
 private[ljot] case class Pending(value: String, ts: Long, deadlineMs: Long)
 
-/** Per-key join state: both sides' in-retention records (the window-store
- * role Kafka Streams' join plays internally) + the pending-timeout multimap
+/** Per-key join state, the one working copy both transitions
+ * ([[LeftJoinOnTimeout.joinKey]], [[FaithfulLeftJoin.processKey]]) change
+ * in place: both sides' in-retention records (the window-store role Kafka
+ * Streams' join plays internally) + the pending-timeout multimap
  * (`ScheduledStateStore.java:29`). `lastActiveMs` (processing time of the
  * last arrival) bounds idle-state lifetime: a key that stops receiving
  * records is dropped wholesale after the retention period, the same net
  * effect as the reference's window-store retention reaper — without it the
- * state (and its re-armed timers) would live forever. Stored through
- * [[KeyStateCodec]]. */
+ * state (and its re-armed timers) would live forever. The buffers append
+ * and drop their head in O(1), so a hot key's micro-batch stays linear.
+ * Stored through [[KeyStateCodec]]. */
 private[ljot] case class KeyState(
-    lefts: List[(String, Long)],
-    rights: List[(String, Long)],
-    pending: List[Pending],
-    maxEventTs: Long,
-    lastActiveMs: Long,
-    epoch: Long = 0L)
+    lefts: ListBuffer[(String, Long)] = ListBuffer.empty[(String, Long)],
+    rights: ListBuffer[(String, Long)] = ListBuffer.empty[(String, Long)],
+    pending: ArrayDeque[Pending] = ArrayDeque.empty[Pending],
+    var maxEventTs: Long = 0L,
+    var lastActiveMs: Long = 0L,
+    var epoch: Long = 0L)
 
 /** The state row's single BINARY column: [[KeyState]] laid out flat, so the
  * state store holds one opaque byte array per key instead of a nested
@@ -63,7 +65,7 @@ private[ljot] object KeyStateCodec {
     def value(v: String): Unit =
       if (v == null) out.writeInt(-1)
       else { val b = v.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
-    def entries(es: List[(String, Long)]): Unit = {
+    def entries(es: ListBuffer[(String, Long)]): Unit = {
       out.writeInt(es.size)
       es.foreach { case (v, ts) => value(v); out.writeLong(ts) }
     }
@@ -84,13 +86,13 @@ private[ljot] object KeyStateCodec {
       if (n < 0) null
       else { val v = new String(b, in.position(), n, UTF_8); in.position(in.position() + n); v }
     }
-    def entries(): List[(String, Long)] = List.fill(in.getInt())((value(), in.getLong()))
+    def entries(): ListBuffer[(String, Long)] = ListBuffer.fill(in.getInt())((value(), in.getLong()))
     val maxEventTs = in.getLong()
     val lastActiveMs = in.getLong()
     val epoch = in.getLong()
     val lefts = entries()
     val rights = entries()
-    val pending = List.fill(in.getInt())(Pending(value(), in.getLong(), in.getLong()))
+    val pending = ArrayDeque.fill(in.getInt())(Pending(value(), in.getLong(), in.getLong()))
     KeyState(lefts, rights, pending, maxEventTs, lastActiveMs, epoch)
   }
 }
@@ -114,32 +116,23 @@ private[ljot] object KeyStateCodec {
  *    config, not stored state (`ScheduledStateStore.java:123-137`,
  *    restore-into-shorter-window test `LeftJoinOnTimeoutTest.java:131-153`).
  *
- * Single stateful operator: tagged union of both sides
- * (`LeftJoinOnTimeout.taggedUnion`, shared with the idiomatic variant, as
- * is the per-arrival band probe `LeftJoinOnTimeout.arrive`) →
- * `groupBy(col("key"))` → `flatMapGroupsWithState(Append,
- * ProcessingTimeTimeout)` over
- * `GroupState[Array[Byte]]`. Grouping by the key column needs no per-row
- * key-extraction step, and the per-key [[KeyState]] is stored as one binary
- * column through [[KeyStateCodec]]: decoded once per trigger of the key,
- * encoded once on update. Each group is processed single-threaded, so the
- * reference's concurrency machinery
+ * Single stateful operator: the keyed-state stage it shares with the
+ * idiomatic variant (`LeftJoinOnTimeout.keyedJoin`: tagged union →
+ * `groupBy(col("key"))` → `flatMapGroupsWithState(Append, timeout)`), here
+ * without a watermark and with a processing-time timeout. Each group is
+ * processed single-threaded, so the reference's concurrency machinery
  * (`MultiMapUtils.java:15-35`, `BlockingScheduledExecutor.java:6-129`)
- * reduces to plain List updates — the shuffle partitioning by key is the
- * scale mechanism, identical in role to the reference's per-partition state
- * (`StateStoreLogger.java:22-23`).
+ * reduces to in-place buffer updates on the decoded [[KeyState]] — the
+ * shuffle partitioning by key is the scale mechanism, identical in role to
+ * the reference's per-partition state (`StateStoreLogger.java:22-23`).
  */
 object FaithfulLeftJoin {
 
   def apply(lhs: DataFrame, rhs: DataFrame, joiner: LeftJoinOnTimeout.Joiner,
             cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val spark = lhs.sparkSession
-    import spark.implicits._
-
     val d = cfg.joinWindow.toMillis
     val r = cfg.retention.toMillis
     val timeoutMs = cfg.effectiveTimeout.toMillis
-
     val maxScheduled = cfg.maxScheduled
     // Run marker for restore detection (ref §2.3-7: changelog restore
     // re-schedules every entry with the FULL configured delay —
@@ -147,15 +140,10 @@ object FaithfulLeftJoin {
     // plan build on the driver; state rows written under a different epoch
     // are restored state and get their pending deadlines re-armed.
     val runEpoch = System.currentTimeMillis()
-    val out = LeftJoinOnTimeout.taggedUnion(lhs, rhs, watermark = None)
-      .groupBy(col("key")).as[java.lang.Long, TaggedRec]
-      .flatMapGroupsWithState[Array[Byte], PairOut](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (key, records, state) =>
-          processKey(key, records, state, d, r, timeoutMs, maxScheduled, runEpoch)
-      }
-
-    LeftJoinOnTimeout.joined(out, joiner)
+    LeftJoinOnTimeout.keyedJoin(lhs, rhs, joiner, None, GroupStateTimeout.ProcessingTimeTimeout) {
+      (key, records, state) =>
+        processKey(key, records, state, d, r, timeoutMs, maxScheduled, runEpoch)
+    }
   }
 
   /** Core per-key transition. Pulled out for direct unit testing.
@@ -180,18 +168,10 @@ object FaithfulLeftJoin {
       runEpoch: Long = 0L): Iterator[PairOut] = {
 
     val now = state.getCurrentProcessingTimeMs()
-    val s0 = state.getOption.map(KeyStateCodec.decode).getOrElse(
-      KeyState(Nil, Nil, Nil, Long.MinValue, now, runEpoch))
+    val s = state.getOption.fold(
+      KeyState(maxEventTs = Long.MinValue, lastActiveMs = now, epoch = runEpoch))(
+      KeyStateCodec.decode)
     val out = List.newBuilder[PairOut]
-    var maxEventTs = s0.maxEventTs
-    var lastActiveMs = s0.lastActiveMs
-
-    // Hot-key safe accumulation: O(1) append/removeHead buffers, converted
-    // from/to the decoded List state exactly once per trigger (a `:+` on
-    // List is an O(n) copy — quadratic over a hot key's micro-batch).
-    val pending = ArrayDeque.empty[Pending]
-    val lefts = ListBuffer.from(s0.lefts)
-    val rights = ListBuffer.from(s0.rights)
 
     // 1a. Restore re-arm (ref §2.3-7): state written by a previous run
     //     means this is the first trigger after a checkpoint restart —
@@ -199,32 +179,36 @@ object FaithfulLeftJoin {
     //     delay measured from NOW (delay comes from the restarted query's
     //     config, not the stored deadline — the reference restores into a
     //     possibly different window, `LeftJoinOnTimeoutTest.java:131-153`).
-    val restored = s0.epoch != runEpoch
-    // 1b. Fire overdue timers (the `ScheduledThreadPoolExecutor` role,
-    //     `ScheduledStateStore.java:69-82`): emit joiner(l, null) with the
-    //     LEFT's original event ts (`LeftJoinOnTimeoutBuilder.java:165-168`).
-    s0.pending.foreach { p =>
-      if (restored) pending.append(p.copy(deadlineMs = now + timeoutMs))
-      else if (p.deadlineMs <= now) out += PairOut(key, p.value, None, new Timestamp(p.ts))
-      else pending.append(p)
+    // 1b. Otherwise fire overdue timers (the `ScheduledThreadPoolExecutor`
+    //     role, `ScheduledStateStore.java:69-82`): emit joiner(l, null)
+    //     with the LEFT's original event ts
+    //     (`LeftJoinOnTimeoutBuilder.java:165-168`).
+    if (s.epoch != runEpoch) {
+      s.pending.mapInPlace(_.copy(deadlineMs = now + timeoutMs))
+      s.epoch = runEpoch
+    } else {
+      s.pending.foreach { p =>
+        if (p.deadlineMs <= now) out += PairOut(key, p.value, None, new Timestamp(p.ts))
+      }
+      s.pending.filterInPlace(_.deadlineMs > now)
     }
 
     // 2. Process arrivals in order (single stream thread per key, like the
     //    reference's per-task processing): every in-window pair emits
     //    (per-pair join, `LeftJoinOnTimeoutTest.java:89-91`).
     records.foreach { rec =>
-      maxEventTs = math.max(maxEventTs, rec.ts.getTime)
-      lastActiveMs = now
-      if (LeftJoinOnTimeout.arrive(key, rec, lefts, rights, bandMs, out)) {
+      s.maxEventTs = math.max(s.maxEventTs, rec.ts.getTime)
+      s.lastActiveMs = now
+      if (LeftJoinOnTimeout.arrive(key, rec, s, bandMs, out)) {
         // join output → CancelProcessor cancels ALL pending for the key
         // (`ScheduledStateStore.java:87-115`) — including this left.
-        pending.clear()
+        s.pending.clear()
       } else if (rec.left) {
         // ScheduleProcessor: register the deferred joiner(l, null);
         // at capacity the oldest fires early (see scaladoc).
-        pending.append(Pending(rec.value, rec.ts.getTime, now + timeoutMs))
-        if (pending.size > maxScheduled) {
-          val oldest = pending.removeHead()
+        s.pending.append(Pending(rec.value, rec.ts.getTime, now + timeoutMs))
+        if (s.pending.size > maxScheduled) {
+          val oldest = s.pending.removeHead()
           out += PairOut(key, oldest.value, None, new Timestamp(oldest.ts))
         }
       }
@@ -232,14 +216,9 @@ object FaithfulLeftJoin {
 
     // 3. Evict join state past retention R (`JoinWindows.until(R)`,
     //    `LeftJoinOnTimeoutBuilder.java:114`) by stream time.
-    val horizon = maxEventTs - retentionMs
-    val s = KeyState(
-      lefts.filter(_._2 >= horizon).toList,
-      rights.filter(_._2 >= horizon).toList,
-      pending.toList,
-      maxEventTs,
-      lastActiveMs,
-      runEpoch)
+    val horizon = s.maxEventTs - retentionMs
+    s.lefts.filterInPlace(_._2 >= horizon)
+    s.rights.filterInPlace(_._2 >= horizon)
 
     // 4. Persist + re-arm the group timer for the earliest pending deadline
     //    (restore after checkpoint re-evaluates this per trigger —
@@ -260,7 +239,7 @@ object FaithfulLeftJoin {
         // instead of waiting out a stale long deadline from the previous
         // run's config. Steady-state cost: at most 4 no-op wakes per
         // pending lifetime per key.
-        val earliest = s.pending.map(_.deadlineMs).min
+        val earliest = s.pending.iterator.map(_.deadlineMs).min
         val heartbeat = math.max(1000L, timeoutMs / 4)
         state.setTimeoutDuration(math.max(1L, math.min(earliest - now, heartbeat)))
       } else {

@@ -3,9 +3,9 @@ package graft.ljot
 import java.sql.Timestamp
 import java.time.Duration
 
-import scala.collection.mutable.{Growable, ListBuffer}
+import scala.collection.mutable.Growable
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -81,7 +81,7 @@ object LeftJoinOnTimeoutConfig {
  * over the side-tagged union of both watermarked inputs: the per-key band
  * probe is the join, and the event-time group timer at `l.ts + D` is the
  * schedule/cancel mechanism (SURVEY.md §2.1-O5). Streaming keys are long
- * and values string (see [[streamingJoin]]).
+ * and values string (see [[keyedJoin]]).
  */
 object LeftJoinOnTimeout {
 
@@ -156,37 +156,61 @@ object LeftJoinOnTimeout {
   }
 
   /**
-   * Idiomatic streaming variant: ONE event-time keyed-state operator over
-   * the side-tagged union of both inputs —
-   * `groupBy(col("key")).flatMapGroupsWithState(Append, EventTimeTimeout)`
-   * running [[joinKey]]. Each side keeps its own `withWatermark("ts", R)`,
-   * so the global (min) watermark, late-row dropping and idle-side
+   * Idiomatic streaming variant: the keyed-state stage ([[keyedJoin]]) with
+   * each side watermarked at R and an event-time timeout, running
+   * [[joinKey]]. The global (min) watermark, late-row dropping and idle-side
    * behaviour are those of a watermarked stream-stream join; the
    * null-padded row emits in the micro-batch whose watermark passes
    * `l.ts + D` — the event-time restatement of the reference's wall-clock
    * timer (SURVEY.md §2.3-4; deliberate, deterministic divergence).
-   *
-   * Keys and values go through the faithful variant's casts (long key,
-   * string value — what `KafkaTopics.decodeKeyedStream` produces), so the
-   * streaming path narrows the batch path's any-type `(key, value)`.
    */
   private def streamingJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
                             cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val spark = lhs.sparkSession
-    import spark.implicits._
     val d = cfg.joinWindow.toMillis
-    val pairs = taggedUnion(lhs, rhs, Some(cfg.retention))
-      .groupBy(col("key")).as[java.lang.Long, TaggedRec]
-      .flatMapGroupsWithState[Array[Byte], PairOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key, records, state) => joinKey(key, records, state, d)
-      }
-    joined(pairs, joiner)
+    keyedJoin(lhs, rhs, joiner, Some(cfg.retention), GroupStateTimeout.EventTimeTimeout) {
+      (key, records, state) => joinKey(key, records, state, d)
+    }
   }
 
-  /** Event-time per-key transition of the streaming left-outer join; the
-   * state is one [[KeyStateCodec]] row: the retained lefts, the retained
-   * rights, and the unmatched lefts as `pending` (deadline = `l.ts + D`).
+  /** The keyed-state stage both streaming variants run: the side-tagged
+   * union → `groupBy(col("key"))` → ONE `flatMapGroupsWithState(Append,
+   * timeout)` over a [[KeyStateCodec]] row per key → the joiner over the
+   * emitted pairs: `(key, joined, ts)`. The variants differ only in the
+   * watermark, the timeout mode and the per-key transition.
+   *
+   * Keys and values are cast to long and string (what
+   * `KafkaTopics.decodeKeyedStream` produces), so the streaming path
+   * narrows the batch path's any-type `(key, value)`. With `watermark` set,
+   * each side gets its own `withWatermark("ts", ...)` before the union, so
+   * the global watermark is the minimum over the two inputs. A null key
+   * never equals a key (SQL join semantics, which batch [[apply]]
+   * follows): a null-key right joins nothing and is dropped, so the
+   * null-key group holds only lefts, each of which times out with
+   * `joiner(l, null)` like any unmatched left. */
+  private[ljot] def keyedJoin(
+      lhs: DataFrame, rhs: DataFrame, joiner: Joiner, watermark: Option[Duration],
+      timeout: GroupStateTimeout)(
+      transition: (java.lang.Long, Iterator[TaggedRec], GroupState[Array[Byte]]) =>
+        Iterator[PairOut]): DataFrame = {
+    import lhs.sparkSession.implicits._
+    def tag(df: DataFrame, isLeft: Boolean): DataFrame = {
+      val t = df.select(col("key").cast("long").as("key"),
+                        col("value").cast("string").as("value"),
+                        col("ts").cast("timestamp").as("ts"),
+                        lit(isLeft).as("left"))
+      watermark.fold(t)(w => t.withWatermark("ts", s"${w.toMillis} milliseconds"))
+    }
+    tag(lhs, true).unionByName(tag(rhs, false))
+      .filter(col("left") || col("key").isNotNull)
+      .groupBy(col("key")).as[java.lang.Long, TaggedRec]
+      .flatMapGroupsWithState[Array[Byte], PairOut](OutputMode.Append, timeout)(transition)
+      .toDF()
+      .select(col("key"), joiner(col("lvalue"), col("rvalue")).as("joined"), col("ts"))
+  }
+
+  /** Event-time per-key transition of the streaming left-outer join over
+   * the key's [[KeyState]]: the retained lefts, the retained rights, and
+   * the unmatched lefts as `pending` (deadline = `l.ts + D`).
    *
    *  - Arrivals go through [[arrive]] in order, so every in-band pair emits
    *    exactly once. A right takes every left in its band off the
@@ -201,34 +225,28 @@ object LeftJoinOnTimeout {
   private[ljot] def joinKey(key: java.lang.Long, records: Iterator[TaggedRec],
                             state: GroupState[Array[Byte]],
                             bandMs: Long): Iterator[PairOut] = {
-    val lefts = ListBuffer.empty[(String, Long)]
-    val rights = ListBuffer.empty[(String, Long)]
-    val unmatched = ListBuffer.empty[Pending]
-    state.getOption.map(KeyStateCodec.decode).foreach { s =>
-      lefts ++= s.lefts; rights ++= s.rights; unmatched ++= s.pending
-    }
+    val s = state.getOption.fold(KeyState())(KeyStateCodec.decode)
     val out = List.newBuilder[PairOut]
 
     records.foreach { rec =>
-      val matched = arrive(key, rec, lefts, rights, bandMs, out)
+      val matched = arrive(key, rec, s, bandMs, out)
       val ts = rec.ts.getTime
-      if (!rec.left) unmatched.filterInPlace(p => math.abs(p.ts - ts) > bandMs)
-      else if (!matched) unmatched += Pending(rec.value, ts, ts + bandMs)
+      if (!rec.left) s.pending.filterInPlace(p => math.abs(p.ts - ts) > bandMs)
+      else if (!matched) s.pending += Pending(rec.value, ts, ts + bandMs)
     }
 
     val wm = state.getCurrentWatermarkMs()
-    unmatched.foreach { p =>
+    s.pending.foreach { p =>
       if (p.deadlineMs < wm) out += PairOut(key, p.value, None, new Timestamp(p.ts))
     }
-    unmatched.filterInPlace(_.deadlineMs >= wm)
-    lefts.filterInPlace(_._2 + bandMs >= wm)
-    rights.filterInPlace(_._2 + bandMs >= wm)
+    s.pending.filterInPlace(_.deadlineMs >= wm)
+    s.lefts.filterInPlace(_._2 + bandMs >= wm)
+    s.rights.filterInPlace(_._2 + bandMs >= wm)
 
-    if (lefts.isEmpty && rights.isEmpty) state.remove()
+    if (s.lefts.isEmpty && s.rights.isEmpty) state.remove()
     else {
-      state.update(KeyStateCodec.encode(
-        KeyState(lefts.toList, rights.toList, unmatched.toList, 0L, 0L)))
-      val earliest = (lefts.iterator ++ rights.iterator).map(_._2).min + bandMs
+      state.update(KeyStateCodec.encode(s))
+      val earliest = (s.lefts.iterator ++ s.rights.iterator).map(_._2).min + bandMs
       state.setTimeoutTimestamp(math.max(1L, earliest))
     }
     out.result().iterator
@@ -238,53 +256,22 @@ object LeftJoinOnTimeout {
    * ([[joinKey]], [[FaithfulLeftJoin.processKey]]) share. The record
    * probes the OTHER side's retained rows, every in-band pair emits to
    * `out` stamped with the left's ts, and the record is retained on its
-   * own side. Returns whether it matched; what a match cancels is the
-   * caller's policy. */
-  private[ljot] def arrive(key: java.lang.Long, rec: TaggedRec,
-                           lefts: ListBuffer[(String, Long)],
-                           rights: ListBuffer[(String, Long)], bandMs: Long,
-                           out: Growable[PairOut]): Boolean = {
+   * own side of `s`. Returns whether it matched; what a match cancels is
+   * the caller's policy. */
+  private[ljot] def arrive(key: java.lang.Long, rec: TaggedRec, s: KeyState,
+                           bandMs: Long, out: Growable[PairOut]): Boolean = {
     val ts = rec.ts.getTime
     var matched = false
-    (if (rec.left) rights else lefts).foreach { case (v, vts) =>
+    (if (rec.left) s.rights else s.lefts).foreach { case (v, vts) =>
       if (math.abs(vts - ts) <= bandMs) {
         matched = true
         out += (if (rec.left) PairOut(key, rec.value, Option(v), rec.ts)
                 else PairOut(key, v, Option(rec.value), new Timestamp(vts)))
       }
     }
-    (if (rec.left) lefts else rights) += ((rec.value, ts))
+    (if (rec.left) s.lefts else s.rights) += ((rec.value, ts))
     matched
   }
-
-  /** The side-tagged union both per-key operators consume: columns
-   * `(key: long, value: string, ts: timestamp, left: boolean)`, the shape
-   * of [[TaggedRec]]. With `watermark` set, each side gets its own
-   * `withWatermark("ts", ...)` before the union, so the global watermark
-   * is the minimum over the two inputs.
-   *
-   * A null key never equals a key (SQL join semantics, which batch
-   * [[apply]] follows): a null-key right joins nothing and is dropped
-   * here, so the null-key group holds only lefts, each of which times out
-   * with `joiner(l, null)` like any unmatched left. */
-  private[ljot] def taggedUnion(lhs: DataFrame, rhs: DataFrame,
-                                watermark: Option[Duration]): DataFrame = {
-    def tag(df: DataFrame, isLeft: Boolean): DataFrame = {
-      val t = df.select(col("key").cast("long").as("key"),
-                        col("value").cast("string").as("value"),
-                        col("ts").cast("timestamp").as("ts"),
-                        lit(isLeft).as("left"))
-      watermark.fold(t)(w => t.withWatermark("ts", s"${w.toMillis} milliseconds"))
-    }
-    tag(lhs, true).unionByName(tag(rhs, false))
-      .filter(col("left") || col("key").isNotNull)
-  }
-
-  /** Apply the user joiner to the un-joined pairs: `(key, joined, ts)`. */
-  private[ljot] def joined(pairs: Dataset[PairOut], joiner: Joiner): DataFrame =
-    pairs.toDF().select(col("key"),
-                        joiner(col("lvalue"), col("rvalue")).as("joined"),
-                        col("ts"))
 
   /** Rename to side-tagged column names so self-joins (lhs and rhs carved
    * from the same source) never hit ambiguous-attribute resolution. */
@@ -292,11 +279,12 @@ object LeftJoinOnTimeout {
     (lhs.select(col("key").as("lkey"), col("value").as("lvalue"), col("ts").as("lts")),
      rhs.select(col("key").as("rkey"), col("value").as("rvalue"), col("ts").as("rts")))
 
-  /** `l.key = r.key AND r.ts ∈ [l.ts − D, l.ts + D]` — the symmetric
-   * Kafka-0.11 `JoinWindows.of(D)` band (SURVEY.md §2.3-1). Expressed with
+  /** `l.key = r.key AND r.ts ∈ [l.ts − D, l.ts + D]` over the tagged
+   * `lkey`/`lts`/`rkey`/`rts` columns — the symmetric Kafka-0.11
+   * `JoinWindows.of(D)` band (SURVEY.md §2.3-1). Expressed with
    * `expr` interval arithmetic so Catalyst extracts the equi-key for the
    * shuffle and keeps the band as a range predicate. */
-  private def bandCondition(cfg: LeftJoinOnTimeoutConfig): Column = {
+  private[graft] def bandCondition(cfg: LeftJoinOnTimeoutConfig): Column = {
     val d = cfg.joinWindow.toMillis
     col("lkey") === col("rkey") &&
       col("rts") >= expr(s"lts - INTERVAL $d MILLISECONDS") &&

@@ -927,6 +927,12 @@ object Corpus {
   private val EntropyAlphabet: Seq[String] =
     (('a' to 'z') ++ ('0' to '9')).map(_.toString) :+ " "
 
+  /** ⌊log₂ c⌋ for an integral c ≥ 1 as the binary digit count − 1: the
+   * integer discretization every surprisal/entropy query here shares, and
+   * its oracles restate, where a transcendental log2 would drift between
+   * engines. */
+  private def flog2(c: Column): Column = (length(bin(c)) - 1).cast("bigint")
+
   /** Per-document character-distribution entropy — the gibberish /
    * encoding-junk / base64-blob detector (natural English ≈ 4 bits per
    * char; uniform noise over this alphabet ≈ 5.2; single-char runs ≈ 0).
@@ -944,7 +950,6 @@ object Corpus {
    * 100 TB corpus runs this at scan speed; the per-char relation a
    * naive explode would shuffle never exists. */
   def charEntropy(docs: DataFrame): DataFrame = {
-    def flog2(c: Column): Column = (length(bin(c.cast("bigint"))) - 1).cast("bigint")
     val nt = TextFunctions.normText(col("text"))
     val n = length(nt).cast("bigint")
     val bits = EntropyAlphabet.map { ch =>
@@ -1057,7 +1062,6 @@ object Corpus {
    * rollup to O(langs) rows. */
   def zipfSlope(docs: DataFrame, r: Int = ZipfR): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def flog2(c: Column): Column = (length(bin(c.cast("bigint"))) - 1).cast("bigint")
     val tf = docs.select(col("lang"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("lang")).orderBy(col("cnt").desc, col("token"))
@@ -1854,7 +1858,6 @@ object Corpus {
    * precedent — no driver-side count action). Docs with zero tokens
    * have no tf rows and are absent, identically in the oracle. */
   def docSurprisal(docs: DataFrame): DataFrame = {
-    def flog2(c: Column): Column = (length(bin(c)) - 1).cast("bigint")
     // persisted: tf feeds the corpus count chain AND the bits join —
     // without it the tokenize+aggregate pipeline runs twice (tfidfTopK's
     // trade, same shape)
@@ -1916,7 +1919,6 @@ object Corpus {
    * realistic vocabulary), and (c) the final per-doc partial-agg
    * rollup. No window, no global sort, nothing driver-side. */
   def bigramSurprisal(docs: DataFrame): DataFrame = {
-    def flog2(c: Column): Column = (length(bin(c)) - 1).cast("bigint")
     val tfb = TextFunctions.withTokens(
         docs.select(col("doc_id"), col("text")), "text", "toks")
       .select(col("doc_id"), explode(expr(
@@ -1972,6 +1974,16 @@ object Corpus {
    * idiom; two is a lifted passage. */
   val ContamMinShared = 2
 
+  /** (doc_id, gr): each document's distinct sampled character grams, the
+   * native [[graft.plans.CharGramSeq]] pass the n-gram dedup runs — the
+   * join key of all three decontamination queries. */
+  private def grams(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
+    df.select(col("doc_id"),
+      explode(toCol(graft.plans.CharGramSeq(toExpr(col("text")),
+        TextDedup.CharGram, TextDedup.SampleHexMax))).as("gr"))
+  }
+
   /** Benchmark decontamination: flag training documents sharing character
    * n-gram content with an evaluation/benchmark set — the leakage check
    * every LLM data pipeline runs before training. Output
@@ -1987,10 +1999,6 @@ object Corpus {
    * no hint, so a genuinely huge benchmark degrades to a shuffle join
    * instead of a driver OOM. */
   def decontaminate(docs: DataFrame, benchSource: String = "src0"): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
-    def grams(df: DataFrame) = df.select(col("doc_id"),
-      explode(toCol(graft.plans.CharGramSeq(toExpr(col("text")),
-        TextDedup.CharGram, TextDedup.SampleHexMax))).as("gr"))
     val bench = grams(docs.filter(col("source") === benchSource))
       .withColumnRenamed("doc_id", "bench_id")
     val corpus = grams(docs.filter(col("source") =!= benchSource))
@@ -2049,9 +2057,6 @@ object Corpus {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.types.BinaryType
-    def grams(df: DataFrame) = df.select(col("doc_id"),
-      explode(toCol(graft.plans.CharGramSeq(toExpr(col("text")),
-        TextDedup.CharGram, TextDedup.SampleHexMax))).as("gr"))
     val benchAgg = grams(docs.filter(col("source") === benchSource))
       .agg(toCol(new BloomFilterAggregate(
         toExpr(xxhash64(col("gr"))),
@@ -2090,11 +2095,7 @@ object Corpus {
    * to a shuffle join instead of a driver OOM. */
   def bloomDecontaminateVerified(docs: DataFrame,
                                  benchSource: String = "src0"): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     val flagged = bloomDecontaminate(docs, benchSource).select(col("doc_id"))
-    def grams(df: DataFrame) = df.select(col("doc_id"),
-      explode(toCol(graft.plans.CharGramSeq(toExpr(col("text")),
-        TextDedup.CharGram, TextDedup.SampleHexMax))).as("gr"))
     val bench = grams(docs.filter(col("source") === benchSource))
       .withColumnRenamed("doc_id", "bench_id")
     val corpus = grams(docs.filter(col("source") =!= benchSource)
@@ -2925,7 +2926,6 @@ object Corpus {
     val tots = byBucket.agg(
       sum(col("t_cnt")).cast("bigint").as("tt"),
       sum(col("r_cnt")).cast("bigint").as("rt"))
-    def flog2(c: Column): Column = (length(bin(c)) - 1).cast("bigint")
     // O(buckets) rows, persisted: referenced by the per-doc weight join
     // AND the corpus-mean cut below (Σ_b r_cnt·λ_b ≡ Σ_d w_d, so the
     // raw totals never need the per-doc relation a second time)

@@ -852,15 +852,6 @@ object TextDedup {
    * quadratic. Bounds per-gram join fan-out at DfMax·(DfMax−1)/2 pairs. */
   val DfMax = 8
 
-  /** Raw (with duplicates) character 4-grams from a MATERIALIZED
-   * normalized-text column (attribute, not expression — see
-   * [[shinglesFromToks]]). De-duplication happens relationally. */
-  def charGramSeq(nt: Column): Column =
-    when(length(nt) >= CharGram,
-      transform(sequence(lit(1), length(nt) - (CharGram - 1)),
-        i => substr(nt, i, lit(CharGram))))
-    .otherwise(array().cast("array<string>"))
-
   /** Near-duplicate pairs by character-n-gram Jaccard with an
    * inverted-index candidate stage (the scalable shape: an earlier
    * length-blocked all-pairs version was quadratic within blocks —

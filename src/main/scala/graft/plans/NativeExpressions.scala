@@ -76,6 +76,23 @@ case class LongDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Lowercase hex of a digest, as SQL `md5` renders it — shared by
+ * [[MinHashSig]] and [[LshBandKeys]]. */
+private object LowerHex {
+  private val digits = "0123456789abcdef".toCharArray
+
+  def apply(bytes: Array[Byte]): String = {
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = digits((bytes(i) >> 4) & 0xf)
+      out(2 * i + 1) = digits(bytes(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+}
+
 /**
  * `MinHashSig(shingles, k)`: per-document minhash signature —
  * sig_j = min over shingles of md5(j ":" shingle) as a lowercase hex
@@ -99,19 +116,6 @@ case class MinHashSig(child: Expression, k: Int)
   // size(sh) > 0; this guard is for the public SQL surface.
   override def nullable: Boolean = true
 
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      out(2 * i) = hexDigits((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(bytes(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   // hoisted off the per-row path (allocation-free hot loop)
   @transient private lazy val prefixes =
     Array.tabulate(k)(j => s"${j + 1}:".getBytes(StandardCharsets.UTF_8))
@@ -130,7 +134,7 @@ case class MinHashSig(child: Expression, k: Int)
         md.reset()
         md.update(prefixes(j))
         md.update(s)
-        val h = hex(md.digest())
+        val h = LowerHex(md.digest())
         if (mins(j) == null || h.compareTo(mins(j)) < 0) mins(j) = h
         j += 1
       }
@@ -163,19 +167,6 @@ case class LshBandKeys(child: Expression, bands: Int, rows: Int)
   override def prettyName: String = "lsh_band_keys"
   override def nullable: Boolean = true
 
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(bytes: Array[Byte]): String = {
-    val out = new Array[Char](bytes.length * 2)
-    var i = 0
-    while (i < bytes.length) {
-      out(2 * i) = hexDigits((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexDigits(bytes(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val sig = input.asInstanceOf[ArrayData]
     if (sig.numElements() < bands * rows) return null
@@ -192,7 +183,7 @@ case class LshBandKeys(child: Expression, bands: Int, rows: Int)
       }
       md.reset()
       out(j - 1) = UTF8String.fromString(
-        hex(md.digest(sb.toString.getBytes(StandardCharsets.UTF_8))))
+        LowerHex(md.digest(sb.toString.getBytes(StandardCharsets.UTF_8))))
       j += 1
     }
     new GenericArrayData(out)

@@ -264,13 +264,4 @@ object StreamingOps {
    * dimension rewrite cannot tear mid-batch. */
   def enrich(stream: DataFrame, dim: DataFrame, dimCols: Seq[String]): DataFrame =
     stream.join(dim.select((col("key") +: dimCols.map(col)): _*), Seq("key"), "left")
-
-  /** Rate-limit options for a streaming reader — the Spark mapping of the
-   * reference's `scheduledCapacity` backpressure (`maxScheduled` pending
-   * timers blocking ingestion, `BlockingScheduledExecutor.java:19-31`,
-   * SURVEY.md §2.1-O10). Spark bounds per-trigger intake instead of
-   * blocking a thread; state is disk-backed rather than heap-capped. */
-  def rateLimitOptions(maxPerTrigger: Long): Map[String, String] =
-    Map("maxOffsetsPerTrigger" -> maxPerTrigger.toString,
-        "maxFilesPerTrigger" -> math.max(1L, maxPerTrigger / 10000L).toString)
 }

@@ -2,6 +2,8 @@ package graft.ljot
 
 import java.sql.Timestamp
 
+import scala.collection.mutable.{ArrayDeque, ListBuffer}
+
 import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 import org.scalacheck.Gen
@@ -167,14 +169,34 @@ class FaithfulLeftJoinPropertySpec extends AnyFunSuite {
     maxEventTs <- Gen.frequency(1 -> Gen.const(Long.MinValue), 2 -> tsGen)
     lastActiveMs <- tsGen
     epoch <- tsGen
-  } yield KeyState(lefts, rights, pending, maxEventTs, lastActiveMs, epoch)
+  } yield KeyState(ListBuffer.from(lefts), ListBuffer.from(rights), ArrayDeque.from(pending),
+                   maxEventTs, lastActiveMs, epoch)
 
   test("binary state codec round-trips every KeyState exactly") {
-    val empty = KeyState(Nil, Nil, Nil, Long.MinValue, 0L)
+    val empty = KeyState(maxEventTs = Long.MinValue)
     assert(KeyStateCodec.decode(KeyStateCodec.encode(empty)) === empty)
     for (seed <- 1L to 500L) {
       val s = keyStateGen.pureApply(Gen.Parameters.default, Seed(seed))
       assert(KeyStateCodec.decode(KeyStateCodec.encode(s)) === s, s"seed=$seed state=$s")
     }
+  }
+
+  // A state row in the layout existing checkpoints hold: maxEventTs 1005,
+  // lastActiveMs 1700000000000, epoch 7; lefts ("é日", 1000), (null, 1005);
+  // rights ("r+", 990); pending ("é日", ts 1000, deadline 1200).
+  private val goldenRow =
+    "00000000000003ed0000018bcfe5680000000000000000070000000200000005" +
+    "c3a9e697a500000000000003e8ffffffff00000000000003ed00000001000000" +
+    "02722b00000000000003de0000000100000005c3a9e697a500000000000003e8" +
+    "00000000000004b0"
+
+  test("binary state codec reads a fixed checkpoint row and rewrites it byte for byte") {
+    val bytes = goldenRow.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val s = KeyStateCodec.decode(bytes)
+    assert((s.maxEventTs, s.lastActiveMs, s.epoch) === ((1005L, 1700000000000L, 7L)))
+    assert(s.lefts === List(("é日", 1000L), (null, 1005L)))
+    assert(s.rights === List(("r+", 990L)))
+    assert(s.pending === List(Pending("é日", 1000L, 1200L)))
+    assert(KeyStateCodec.encode(s).toSeq === bytes.toSeq)
   }
 }

@@ -1,7 +1,8 @@
 package graft.ljot
 
 import java.sql.Timestamp
-import java.time.Duration
+import java.time.{Duration, Instant}
+import java.time.temporal.ChronoUnit
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,10 +47,15 @@ class LjotBatchSpec extends AnyFunSuite with SparkTestHarness {
 
   test("band is symmetric: r.ts in [l.ts - D, l.ts + D]") {
     val d = cfg.joinWindow.toMillis
+    def at(us: Long) = Timestamp.from(Instant.EPOCH.plus(us, ChronoUnit.MICROS))
+    // one microsecond past either edge stays out of the band
+    val justOutside = Seq((1L, "justEarly", at((200000L - d) * 1000L - 1L)),
+                          (1L, "justLate", at((200000L + d) * 1000L + 1L)))
     val out = LeftJoinOnTimeout(
       df((1L, "l", 200000L)),
       df((1L, "early", 200000L - d), (1L, "late", 200000L + d),
-         (1L, "tooEarly", 200000L - d - 1), (1L, "tooLate", 200000L + d + 1)),
+         (1L, "tooEarly", 200000L - d - 1), (1L, "tooLate", 200000L + d + 1))
+        .union(justOutside.toDF("key", "value", "ts")),
       LeftJoinOnTimeout.testJoiner, cfg)
     assert(result(out) === Seq((1L, "l+early", 200000L), (1L, "l+late", 200000L)))
   }

@@ -267,8 +267,11 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
     val fCfg = LeftJoinOnTimeoutConfig(Duration.ofMillis(100), Duration.ofMillis(300),
       timeout = Some(Duration.ofMillis(500)))
     val fl = MemoryStream[Rec]; val fr = MemoryStream[Rec]
+    // an explicit checkpoint: the memory sink's temporary one is deleted on
+    // stop while the still-running timer batches commit their state
     val fq = startQuery(FaithfulLeftJoin(fl.toDF(), fr.toDF(),
-      LeftJoinOnTimeout.testJoiner, fCfg), "idle_faithful_out")
+      LeftJoinOnTimeout.testJoiner, fCfg), "idle_faithful_out",
+      Some(Files.createTempDirectory("ljot_idle_ckpt").toString))
     try {
       fr.addData(rec(99, "last_right", base))
       fl.addData(rec(1, "left", base + 1))
