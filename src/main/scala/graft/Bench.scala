@@ -98,8 +98,8 @@ object Bench {
     // optional comma-separated name filter — targeted runs (e.g. the
     // dedup/ANN family against generated sf1 data, which has only the
     // documents/embeddings tables) without timing the whole registry.
-    // A filter naming one query also prints its formatted plan after the
-    // last rep.
+    // A filter naming one query also prints a stderr line per stage over
+    // 0.3 s of its timed reps, and its formatted plan after the last rep.
     val queries = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val rawSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sfDir = SparkLocal.stageInput(rawSfDir)
@@ -153,6 +153,21 @@ object Bench {
     // only visible in the sbt test log, not in BENCH_r07.json)
     val failureDetail = scala.collection.mutable.Map.empty[String, String]
     var lastBuilt: Option[org.apache.spark.sql.DataFrame] = None
+    // stage timing: wall duration vs summed task time exposes stalls
+    // (scheduling gaps, GC, task deserialization) inside one query
+    if (queries.size == 1)
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(
+            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          val si = sc.stageInfo
+          val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
+          val m = si.taskMetrics
+          if (wall > 0.3)
+            System.err.println(f"[stage] ${si.stageId}%4d ${si.numTasks}%4d tasks wall=$wall%7.2fs " +
+              f"taskSum=${m.executorRunTime / 1e3}%8.2fs cpuSum=${m.executorCpuTime / 1e9}%8.2fs " +
+              f"gcSum=${m.jvmGCTime / 1e3}%6.2fs deser=${m.executorDeserializeTime / 1e3}%6.2fs  ${si.name.take(40)}")
+        }
+      })
     for (r <- 1 to reps; q <- queries) {
       val name = q.name
       val (ioS0, ioF0, cpu0) = psiStall()

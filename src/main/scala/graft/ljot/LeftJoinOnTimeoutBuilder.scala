@@ -7,8 +7,9 @@ import org.apache.spark.sql.DataFrame
 /**
  * Fluent builder mirroring the reference's public API surface
  * (`LeftJoinOnTimeoutBuilder.java:19-122`): ctor takes the two streams, the
- * joiner and the window/retention; `timeout`, `scheduledCapacity` and
- * `faithful` configure; `build()` (`buildTopology()`) validates and wires.
+ * joiner and the window/retention; `timeout` and `scheduledCapacity`
+ * configure; `build()` (`buildTopology()`) validates and wires the
+ * idiomatic variant. The faithful variant is `FaithfulLeftJoin.apply`.
  *
  * Spark differences, kept deliberately:
  *  - serdes are unnecessary (`serdes(...)` in the reference,
@@ -30,19 +31,13 @@ final class LeftJoinOnTimeoutBuilder private (
     joinWindow: Duration,
     retention: Duration,
     timeoutOpt: Option[Duration],
-    capacity: Int,
-    faithfulMode: Boolean) {
+    capacity: Int) {
 
   /** `timeout(ms)` — override the default `D + 100 ms` (`:55-60`). */
   def timeout(t: Duration): LeftJoinOnTimeoutBuilder = copy(timeoutOpt = Some(t))
 
   /** `scheduledCapacity(n)` (`:84-87`) — maps to source rate limiting. */
   def scheduledCapacity(n: Int): LeftJoinOnTimeoutBuilder = copy(capacity = n)
-
-  /** Select the faithful `flatMapGroupsWithState` variant: key-level cancel
-   * + processing-time timers (SURVEY.md §2.3-3/-4). */
-  def faithful(enabled: Boolean = true): LeftJoinOnTimeoutBuilder =
-    copy(faithfulMode = enabled)
 
   def config: LeftJoinOnTimeoutConfig =
     LeftJoinOnTimeoutConfig(joinWindow, retention, timeoutOpt, capacity)
@@ -51,18 +46,14 @@ final class LeftJoinOnTimeoutBuilder private (
    * Nothing executes until an action / `writeStream.start()` — same
    * laziness as the reference (execution starts at `KafkaStreams.start()`,
    * SURVEY.md §3.1). */
-  def build(): DataFrame = {
-    val cfg = config // constructor runs the validations
-    if (faithfulMode) FaithfulLeftJoin(lhs, rhs, joiner, cfg)
-    else LeftJoinOnTimeout(lhs, rhs, joiner, cfg)
-  }
+  def build(): DataFrame =
+    LeftJoinOnTimeout(lhs, rhs, joiner, config) // config's constructor validates
 
   private def copy(
       timeoutOpt: Option[Duration] = timeoutOpt,
-      capacity: Int = capacity,
-      faithfulMode: Boolean = faithfulMode): LeftJoinOnTimeoutBuilder =
+      capacity: Int = capacity): LeftJoinOnTimeoutBuilder =
     new LeftJoinOnTimeoutBuilder(lhs, rhs, joiner, joinWindow, retention,
-      timeoutOpt, capacity, faithfulMode)
+      timeoutOpt, capacity)
 }
 
 object LeftJoinOnTimeoutBuilder {
@@ -74,6 +65,6 @@ object LeftJoinOnTimeoutBuilder {
     require(lhs != null && rhs != null && joiner != null,
       "lhs, rhs and joiner must be non-null (ref :133-136)")
     new LeftJoinOnTimeoutBuilder(lhs, rhs, joiner, joinWindow, retention,
-      None, LeftJoinOnTimeoutConfig.DefaultScheduledCapacity, false)
+      None, LeftJoinOnTimeoutConfig.DefaultScheduledCapacity)
   }
 }

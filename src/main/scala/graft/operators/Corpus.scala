@@ -260,11 +260,10 @@ object Corpus {
   val ShuffleShardsMax = 65536
 
   /** Power-of-two shard count for a corpus of `n` docs: next pow2 of
-   * ceil(n/target), clamped. Bit-length form — integer-exact, the
-   * `lshPlanesFor` contract. */
-  def shuffleShardsFor(n: Long, target: Long = ShuffleTargetShard): Int = {
-    val m = (math.max(n, 1L) + target - 1) / target
-    val w = if (m <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(m - 1)
+   * ceil(n/[[ShuffleTargetShard]]) via [[TextDedup.bucketBits]],
+   * clamped. */
+  def shuffleShardsFor(n: Long): Int = {
+    val w = TextDedup.bucketBits(n, ShuffleTargetShard)
     math.max(ShuffleShardsMin, math.min(ShuffleShardsMax, 1 << math.min(w, 16)))
   }
 
@@ -384,9 +383,10 @@ object Corpus {
 
   /** Salt decorrelating the sampling buckets from the split buckets. */
   val StratSalt = "strat:"
-  /** Default stratum keep-rates in buckets-of-256: downsample the
-   * dominant language to a quarter, keep the long-tail languages whole —
-   * the classic multilingual rebalance. */
+  /** Stratum keep-rates in buckets-of-256: downsample the dominant
+   * language to a quarter; every other language keeps all 256 buckets,
+   * i.e. the long tail stays whole — the classic multilingual
+   * rebalance. */
   val StratKeep: Map[String, Int] = Map("en" -> 64)
 
   /** Deterministic per-stratum downsampling: keep a row iff its salted
@@ -394,10 +394,8 @@ object Corpus {
    * Same append-stability story as [[sampleSplit]]; the salt keeps the
    * sample independent of the split assignment. Pure projection+filter —
    * scan-speed at any scale, exact expected rates per stratum. */
-  def stratifiedSample(docs: DataFrame,
-                       keep: Map[String, Int] = StratKeep,
-                       defaultKeep: Int = 256): DataFrame = {
-    val thr = keep.foldLeft(lit(defaultKeep): Column) { case (acc, (k, v)) =>
+  def stratifiedSample(docs: DataFrame): DataFrame = {
+    val thr = StratKeep.foldLeft(lit(256): Column) { case (acc, (k, v)) =>
       when(col("lang") === k, lit(v)).otherwise(acc)
     }
     docs.select(col("doc_id"), col("lang"),
@@ -406,16 +404,9 @@ object Corpus {
       .select(col("doc_id"), col("lang"))
   }
 
-  def stratifiedSampleSql(table: String,
-                          keep: Map[String, Int] = StratKeep,
-                          defaultKeep: Int = 256): String = {
-    // an empty keep map must not emit a zero-WHEN CASE (a parse error);
-    // the Spark twin handles the same configuration as a plain literal
-    val thr =
-      if (keep.isEmpty) defaultKeep.toString
-      else "(CASE " + keep.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"WHEN lang = ${sqlLit(k)} THEN $v" }.mkString(" ") +
-        s" ELSE $defaultKeep END)"
+  def stratifiedSampleSql(table: String): String = {
+    val thr = "(CASE " + StratKeep.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"WHEN lang = ${sqlLit(k)} THEN $v" }.mkString(" ") + " ELSE 256 END)"
     s"""SELECT doc_id, lang FROM (
        |  SELECT doc_id, lang, ${hashBucketSqlDuck("doc_id", StratSalt)} AS b FROM $table)
        |WHERE b < $thr""".stripMargin
@@ -878,17 +869,17 @@ object Corpus {
    * ties broken by token, so the k-set is total-ordered. The df count
    * (exact distinct) rides the same aggregate via Spark's two-phase
    * distinct expansion; still vocabulary-keyed. */
-  def vocabTopK(docs: DataFrame, k: Int = VocabK): DataFrame =
+  def vocabTopK(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n"), count_distinct(col("doc_id")).as("df"))
       .orderBy(col("n").desc, col("token"))
-      .limit(k)
+      .limit(VocabK)
 
-  def vocabTopKSql(table: String, k: Int = VocabK): String =
+  def vocabTopKSql(table: String): String =
     s"""SELECT token, count(*) AS n, count(DISTINCT doc_id) AS df
        |FROM (SELECT doc_id, unnest(${TextSql.tokens("text")}) AS token FROM $table)
-       |GROUP BY token ORDER BY n DESC, token LIMIT $k""".stripMargin
+       |GROUP BY token ORDER BY n DESC, token LIMIT $VocabK""".stripMargin
 
   /** Per-language token-LENGTH histogram — the fine-grained companion
    * of [[tokenFertility]]'s chars/token average: how token mass spreads
@@ -1060,13 +1051,13 @@ object Corpus {
    * language to the rank exchange — the head is O(langs·R) everywhere
    * past the first aggregate, and the regression is a partial-agg
    * rollup to O(langs) rows. */
-  def zipfSlope(docs: DataFrame, r: Int = ZipfR): DataFrame = {
+  def zipfSlope(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tf = docs.select(col("lang"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("lang")).orderBy(col("cnt").desc, col("token"))
     val pts = tf.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= r)
+      .filter(col("rank") <= ZipfR)
       .select(col("lang"), flog2(col("rank")).as("x"), flog2(col("cnt")).as("y"))
     val s = pts.groupBy(col("lang")).agg(
       count(lit(1)).as("r_used"),
@@ -1078,7 +1069,7 @@ object Corpus {
       when(den =!= 0L, num.cast("double") / den.cast("double")).as("zipf_slope"))
   }
 
-  def zipfSlopeSql(table: String, r: Int = ZipfR): String =
+  def zipfSlopeSql(table: String): String =
     s"""WITH tf AS (
        |  SELECT lang, token, CAST(count(*) AS BIGINT) AS cnt
        |  FROM (SELECT lang, unnest(${TextSql.tokens("text")}) AS token FROM $table)
@@ -1086,7 +1077,7 @@ object Corpus {
        |head AS (
        |  SELECT lang, cnt,
        |         row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS rank
-       |  FROM tf QUALIFY rank <= $r),
+       |  FROM tf QUALIFY rank <= $ZipfR),
        |pts AS (
        |  SELECT lang, CAST(length(bin(rank)) - 1 AS BIGINT) AS x,
        |         CAST(length(bin(cnt)) - 1 AS BIGINT) AS y
@@ -1122,7 +1113,7 @@ object Corpus {
    * plus a TakeOrdered — no stage sees more than vocabulary-sized data
    * after the first exchange. Ties at the cut broken by pair, so the
    * k-set is total-ordered at any parallelism. */
-  def bpeMergeCandidates(docs: DataFrame, k: Int = BpePairK): DataFrame =
+  def bpeMergeCandidates(docs: DataFrame): DataFrame =
     docs.select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .filter(length(col("token")) >= 2)
@@ -1131,9 +1122,9 @@ object Corpus {
         .as("pair"))
       .groupBy(col("pair")).agg(sum(col("cnt")).as("n"))
       .orderBy(col("n").desc, col("pair"))
-      .limit(k)
+      .limit(BpePairK)
 
-  def bpeMergeCandidatesSql(table: String, k: Int = BpePairK): String =
+  def bpeMergeCandidatesSql(table: String): String =
     s"""WITH tok AS (SELECT unnest(${TextSql.tokens("text")}) AS token FROM $table),
        |tf AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1),
        |pairs AS (
@@ -1141,7 +1132,7 @@ object Corpus {
        |                i -> substring(token, CAST(i AS INT), 2))) AS pair
        |  FROM tf WHERE length(token) >= 2)
        |SELECT pair, CAST(sum(cnt) AS BIGINT) AS n
-       |FROM pairs GROUP BY pair ORDER BY n DESC, pair LIMIT $k""".stripMargin
+       |FROM pairs GROUP BY pair ORDER BY n DESC, pair LIMIT $BpePairK""".stripMargin
 
   /** Iterations of the BPE merge loop in [[bpeMerges]]. */
   val BpeIters = 3
@@ -1172,7 +1163,7 @@ object Corpus {
    * alphabet, and closes with a TakeOrdered(1). Iteration k's plan
    * re-derives merges 1..k−1 over the persisted relation — O(k²·vocab)
    * total work, never a second corpus scan. */
-  def bpeMerges(docs: DataFrame, iters: Int = BpeIters): DataFrame = {
+  def bpeMerges(docs: DataFrame): DataFrame = {
     val tf = docs.select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), concat_ws(" ",
@@ -1192,7 +1183,7 @@ object Corpus {
       v.crossJoin(broadcast(best.select(col("pair"))))
         .select(col("cnt"),
           replace(col("syms"), col("pair"), replace(col("pair"), lit(" "), lit(""))).as("syms"))
-    val (_, outs) = (1 to iters).foldLeft((tf, Vector.empty[DataFrame])) {
+    val (_, outs) = (1 to BpeIters).foldLeft((tf, Vector.empty[DataFrame])) {
       case ((v, acc), it) =>
         val best = bestPair(v)
         (applyMerge(v, best),
@@ -1201,7 +1192,7 @@ object Corpus {
     outs.reduce(_ unionByName _)
   }
 
-  def bpeMergesSql(table: String, iters: Int = BpeIters): String = {
+  def bpeMergesSql(table: String): String = {
     def pairCte(src: String): String =
       s"""(SELECT pair, CAST(sum(cnt) AS BIGINT) AS n FROM (
          |    SELECT cnt, unnest(list_transform(range(1, len(a)), j -> a[j] || ' ' || a[j+1])) AS pair
@@ -1214,13 +1205,13 @@ object Corpus {
          |         [substring(token, CAST(i AS INT), 1) for i in range(1, length(token) + 1)],
          |         ' ') AS syms FROM tf),
          |p1 AS ${pairCte("v1")}""".stripMargin)
-    for (k <- 2 to iters) {
+    for (k <- 2 to BpeIters) {
       ctes.append(s""",
          |v$k AS (SELECT cnt, replace(syms, (SELECT pair FROM p${k - 1}),
          |          replace((SELECT pair FROM p${k - 1}), ' ', '')) AS syms FROM v${k - 1}),
          |p$k AS ${pairCte(s"v$k")}""".stripMargin)
     }
-    val sel = (1 to iters)
+    val sel = (1 to BpeIters)
       .map(k => s"SELECT CAST($k AS BIGINT) AS iter, pair, n FROM p$k")
       .mkString("\nUNION ALL ")
     ctes.append("\n" + sel).toString
@@ -1250,7 +1241,7 @@ object Corpus {
    * from the [[graft.plans.MisraGriesAgg]] sketch (O(k) state per task,
    * one pass) and accept its deterministic error bound. oov_rate is ONE
    * IEEE division of two exact BIGINTs — bit-identical cross-engine. */
-  def oovRate(docs: DataFrame, v: Int = OovVocabV): DataFrame = {
+  def oovRate(docs: DataFrame): DataFrame = {
     // persisted: the token stream feeds BOTH the vocabulary derivation and
     // the membership probe — without it the corpus tokenizes twice (the
     // scaladoc's raw-100 TB note, now the default: spill-backed cache of
@@ -1261,7 +1252,7 @@ object Corpus {
     val vocab = tok.groupBy(col("token"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
-      .limit(v)
+      .limit(OovVocabV)
       .select(col("token"), lit(1).as("in_vocab"))
     tok.join(broadcast(vocab), Seq("token"), "left")
       .groupBy(col("lang"))
@@ -1273,12 +1264,12 @@ object Corpus {
           .as("oov_rate"))
   }
 
-  def oovRateSql(table: String, v: Int = OovVocabV): String =
+  def oovRateSql(table: String): String =
     s"""WITH tok AS (
        |  SELECT lang, unnest(${TextSql.tokens("text")}) AS token FROM $table),
        |vocab AS (
        |  SELECT token FROM tok GROUP BY token
-       |  ORDER BY count(*) DESC, token LIMIT $v)
+       |  ORDER BY count(*) DESC, token LIMIT $OovVocabV)
        |SELECT t.lang,
        |       CAST(count(*) AS BIGINT) AS total_tokens,
        |       CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS oov_tokens,
@@ -1310,8 +1301,7 @@ object Corpus {
    * over the count-value relation, reshaped by exploding a literal
    * struct array over the single agg row (the [[filterFunnel]]
    * pattern — no driver-side relation in the plan). */
-  def vocabCoverage(docs: DataFrame,
-                    sizes: Seq[Long] = CoverageSizes): DataFrame = {
+  def vocabCoverage(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byCount = docs.select(explode(tokens(col("text"))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -1326,12 +1316,12 @@ object Corpus {
         .when(col("terms_start") < v, (lit(v) - col("terms_start")) * col("cnt"))
         .otherwise(lit(0L))).cast("bigint")
     val cells =
-      sizes.zipWithIndex.flatMap { case (v, i) =>
+      CoverageSizes.zipWithIndex.flatMap { case (v, i) =>
         Seq(covered(v).as(s"cov$i"),
           least(sum(col("n_terms")), lit(v)).cast("bigint").as(s"nt$i"))
       } :+ sum(col("mass")).cast("bigint").as("tot")
     val one = byCount.agg(cells.head, cells.tail: _*)
-    val rows = sizes.zipWithIndex.map { case (v, i) =>
+    val rows = CoverageSizes.zipWithIndex.map { case (v, i) =>
       struct(lit(v).as("vocab_size"), col(s"nt$i").as("n_vocab_terms"),
         col(s"cov$i").as("covered_tokens"), col("tot").as("total_tokens"))
     }
@@ -1342,16 +1332,15 @@ object Corpus {
           .as("coverage"))
   }
 
-  def vocabCoverageSql(table: String,
-                       sizes: Seq[Long] = CoverageSizes): String = {
-    val cells = sizes.zipWithIndex.flatMap { case (v, i) =>
+  def vocabCoverageSql(table: String): String = {
+    val cells = CoverageSizes.zipWithIndex.flatMap { case (v, i) =>
       Seq(
         s"""CAST(sum(CASE WHEN terms_end <= $v THEN mass
            |              WHEN terms_start < $v THEN ($v - terms_start) * cnt
            |              ELSE 0 END) AS BIGINT) AS cov$i""".stripMargin,
         s"CAST(least(sum(n_terms), $v) AS BIGINT) AS nt$i")
     }.mkString(",\n       ")
-    val arms = sizes.zipWithIndex.map { case (v, i) =>
+    val arms = CoverageSizes.zipWithIndex.map { case (v, i) =>
       s"SELECT CAST($v AS BIGINT) AS vocab_size, nt$i AS n_vocab_terms, " +
         s"cov$i AS covered_tokens, tot AS total_tokens, " +
         s"CAST(cov$i AS DOUBLE) / CAST(tot AS DOUBLE) AS coverage FROM a"
@@ -1390,7 +1379,7 @@ object Corpus {
    * vocabTopK: map-side combining shrinks the shuffle to the distinct-
    * bigram relation, which Zipf-flattens far below corpus size, and the
    * top-k is a TakeOrdered, never a global sort. */
-  def bigramTopK(docs: DataFrame, k: Int = BigramK): DataFrame =
+  def bigramTopK(docs: DataFrame): DataFrame =
     TextFunctions.withTokens(docs.select(col("doc_id"), col("text")), "text", "toks")
       .select(explode(expr(
         "transform(slice(toks, 1, greatest(size(toks) - 1, 0)), (t, i) -> concat(t, ' ', toks[i + 1]))"))
@@ -1398,18 +1387,18 @@ object Corpus {
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram"))
-      .limit(k)
+      .limit(BigramK)
 
   /** DuckDB mirror: lambdas cannot nest across an index capture, so the
    * successor pairing is relational — unnest the 1..len−1 index range
    * and index the SAME doc's list at i and i+1 (1-based in DuckDB). */
-  def bigramTopKSql(table: String, k: Int = BigramK): String =
+  def bigramTopKSql(table: String): String =
     s"""WITH tf AS (SELECT doc_id, ${TextSql.tokens("text")} AS toks FROM $table),
        |idx AS (SELECT doc_id, CAST(unnest(range(1, len(toks))) AS INT) AS i FROM tf),
        |bg AS (SELECT concat(t.toks[x.i], ' ', t.toks[x.i + 1]) AS bigram
        |       FROM idx x JOIN tf t ON t.doc_id = x.doc_id)
        |SELECT bigram, count(*) AS n FROM bg
-       |GROUP BY bigram ORDER BY n DESC, bigram LIMIT $k""".stripMargin
+       |GROUP BY bigram ORDER BY n DESC, bigram LIMIT $BigramK""".stripMargin
 
   /** Minimum joint count and result size for [[collocLift]]. */
   val LiftMinCount = 5
@@ -1433,7 +1422,7 @@ object Corpus {
    * realistic vocabulary), and the k-set is a TakeOrdered, never a
    * global sort. Products accumulate in DECIMAL(38,0) — overflow-proof
    * past 10¹⁸-token corpora where `c_ab · T` exceeds BIGINT. */
-  def collocLift(docs: DataFrame, k: Int = LiftK): DataFrame = {
+  def collocLift(docs: DataFrame): DataFrame = {
     // persisted twice over: `toks` feeds the unigram AND bigram counts
     // (one tokenize pass instead of two), and `uni` — O(types) rows — has
     // THREE consumers (the total and both lift joins); unpersisted, the
@@ -1460,10 +1449,10 @@ object Corpus {
           / ( col("c_a").cast("decimal(38,0)") * col("c_b") ).cast("double"))
           .as("lift"))
       .orderBy(col("lift").desc, col("bigram"))
-      .limit(k)
+      .limit(LiftK)
   }
 
-  def collocLiftSql(table: String, k: Int = LiftK): String =
+  def collocLiftSql(table: String): String =
     s"""WITH tf AS (SELECT doc_id, ${TextSql.tokens("text")} AS toks FROM $table),
        |uni AS (SELECT token, count(*) AS c
        |        FROM (SELECT unnest(toks) AS token FROM tf) GROUP BY token),
@@ -1479,7 +1468,7 @@ object Corpus {
        |FROM bi, tot
        |JOIN uni ua ON ua.token = bi.a
        |JOIN uni ub ON ub.token = bi.b
-       |ORDER BY lift DESC, bigram LIMIT $k""".stripMargin
+       |ORDER BY lift DESC, bigram LIMIT $LiftK""".stripMargin
 
   /** Per-group result size for [[topDocsPerSource]]. */
   val TopPerSource = 3
@@ -1495,23 +1484,23 @@ object Corpus {
    * grouped analog of TakeOrdered — and the full window sort never
    * materializes. Ties (equal n_chars) break by doc_id for a total
    * order. */
-  def topDocsPerSource(docs: DataFrame, k: Int = TopPerSource): DataFrame = {
+  def topDocsPerSource(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("source"))
       .orderBy(col("n_chars").desc, col("doc_id"))
     docs.select(col("doc_id"), col("source"), col("n_chars"))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= TopPerSource)
       .select(col("source"), col("rk"), col("doc_id"), col("n_chars"))
   }
 
-  def topDocsPerSourceSql(table: String, k: Int = TopPerSource): String =
+  def topDocsPerSourceSql(table: String): String =
     s"""SELECT source, rk, doc_id, n_chars FROM (
        |  SELECT source, doc_id, n_chars,
        |         row_number() OVER (PARTITION BY source
        |                            ORDER BY n_chars DESC, doc_id) AS rk
        |  FROM $table)
-       |WHERE rk <= $k""".stripMargin
+       |WHERE rk <= $TopPerSource""".stripMargin
 
   /** Prefix length (tokens) and minimum repetition for
    * [[boilerplatePrefixes]]. */
@@ -1567,23 +1556,23 @@ object Corpus {
    * Shape: same WindowGroupLimit rank-pushdown as [[topDocsPerSource]]
    * — each map task keeps ≤ n rows PER SOURCE before the exchange; the
    * full per-source sort never materializes. */
-  def samplePerSource(docs: DataFrame, n: Int = SamplePerStratum): DataFrame = {
+  def samplePerSource(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("source"))
       .orderBy(md5(col("text")), col("doc_id"))
     docs.select(col("doc_id"), col("source"), col("text"))
       .withColumn("pick_rank", row_number().over(w))
-      .filter(col("pick_rank") <= n)
+      .filter(col("pick_rank") <= SamplePerStratum)
       .select(col("source"), col("pick_rank"), col("doc_id"))
   }
 
-  def samplePerSourceSql(table: String, n: Int = SamplePerStratum): String =
+  def samplePerSourceSql(table: String): String =
     s"""SELECT source, pick_rank, doc_id FROM (
        |  SELECT source, doc_id,
        |         row_number() OVER (PARTITION BY source
        |                            ORDER BY md5(text), doc_id) AS pick_rank
        |  FROM $table)
-       |WHERE pick_rank <= $n""".stripMargin
+       |WHERE pick_rank <= $SamplePerStratum""".stripMargin
 
   // ---- length-outlier flagging ---------------------------------------------
 
@@ -1764,7 +1753,7 @@ object Corpus {
 
   /** Oracle: the equivalent single-level running sum per language over
    * the identical (bucket, doc_id) priority order. */
-  def budgetSampleSql(table: String, budget: Long = LangTokenBudget): String =
+  def budgetSampleSql(table: String): String =
     s"""WITH base AS (
        |  SELECT doc_id, lang, ${TextSql.tokenCount("text")} AS n_tokens,
        |         ${hashBucketSqlDuck("doc_id", BudgetSalt)} AS pb
@@ -1773,7 +1762,7 @@ object Corpus {
        |        sum(n_tokens) OVER (PARTITION BY lang ORDER BY pb, doc_id
        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
        |      FROM base)
-       |SELECT doc_id, lang, n_tokens, (cum - n_tokens) < $budget AS keep FROM c""".stripMargin
+       |SELECT doc_id, lang, n_tokens, (cum - n_tokens) < $LangTokenBudget AS keep FROM c""".stripMargin
 
   // ---- 3c. TF-IDF distinctive terms ----------------------------------------
 
@@ -1816,7 +1805,7 @@ object Corpus {
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("rank"), col("score"))
   }
 
-  def tfidfTopKSql(table: String, k: Int = TfIdfK): String =
+  def tfidfTopKSql(table: String): String =
     s"""WITH tf AS (
        |  SELECT doc_id, term, count(*) AS tf
        |  FROM (SELECT doc_id, unnest(${TextSql.tokens("text")}) AS term FROM $table)
@@ -1830,7 +1819,7 @@ object Corpus {
        |  SELECT doc_id, term, tf, df, score,
        |         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS BIGINT) AS rank
        |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
+       |WHERE rank <= $TfIdfK""".stripMargin
 
   // ---- 3e. unigram-surprisal quality scoring --------------------------------
 
@@ -1984,6 +1973,10 @@ object Corpus {
         TextDedup.CharGram, TextDedup.SampleHexMax))).as("gr"))
   }
 
+  /** The `source` value playing the benchmark role in the
+   * decontamination queries. */
+  val BenchSource = "src0"
+
   /** Benchmark decontamination: flag training documents sharing character
    * n-gram content with an evaluation/benchmark set — the leakage check
    * every LLM data pipeline runs before training. Output
@@ -1998,22 +1991,26 @@ object Corpus {
    * 100 TB corpus — so AQE broadcasts it and the corpus never shuffles;
    * no hint, so a genuinely huge benchmark degrades to a shuffle join
    * instead of a driver OOM. */
-  def decontaminate(docs: DataFrame, benchSource: String = "src0"): DataFrame = {
-    val bench = grams(docs.filter(col("source") === benchSource))
+  def decontaminate(docs: DataFrame): DataFrame =
+    sharedGrams(docs, docs.filter(col("source") =!= BenchSource))
+
+  /** (doc_id, bench_id, n_shared) over the `corpus` docs: the gram join
+   * of [[decontaminate]] and [[bloomDecontaminateVerified]]. */
+  private def sharedGrams(docs: DataFrame, corpus: DataFrame): DataFrame = {
+    val bench = grams(docs.filter(col("source") === BenchSource))
       .withColumnRenamed("doc_id", "bench_id")
-    val corpus = grams(docs.filter(col("source") =!= benchSource))
     // grams are per-doc distinct, so the per-pair count is the number of
     // DISTINCT shared sampled grams — no double counting
-    corpus.join(bench, "gr")
+    grams(corpus).join(bench, "gr")
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= ContamMinShared)
   }
 
-  def decontaminateSql(table: String, benchSource: String = "src0"): String =
+  def decontaminateSql(table: String): String =
     s"""SELECT c.doc_id AS doc_id, b.doc_id AS bench_id, count(*) AS n_shared
-       |FROM ${TextDedup.sampledGramPostingsSql(table, s"source <> '$benchSource'")} c
-       |JOIN ${TextDedup.sampledGramPostingsSql(table, s"source = '$benchSource'")} b ON c.gr = b.gr
+       |FROM ${TextDedup.sampledGramPostingsSql(table, s"source <> '$BenchSource'")} c
+       |JOIN ${TextDedup.sampledGramPostingsSql(table, s"source = '$BenchSource'")} b ON c.gr = b.gr
        |GROUP BY 1, 2
        |HAVING count(*) >= $ContamMinShared""".stripMargin
 
@@ -2052,18 +2049,18 @@ object Corpus {
    * executors once via the task closure. No SQL oracle (DuckDB has no
    * matching filter implementation) — registered rows-only, twinned with
    * the hash-checked exact [[decontaminate]]. */
-  def bloomDecontaminate(docs: DataFrame, benchSource: String = "src0"): DataFrame = {
+  def bloomDecontaminate(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.types.BinaryType
-    val benchAgg = grams(docs.filter(col("source") === benchSource))
+    val benchAgg = grams(docs.filter(col("source") === BenchSource))
       .agg(toCol(new BloomFilterAggregate(
         toExpr(xxhash64(col("gr"))),
         Literal(BloomExpectedItems), Literal(BloomNumBits))
         .toAggregateExpression()).as("bf"))
     val bf = benchAgg.head().getAs[Array[Byte]](0)
-    grams(docs.filter(col("source") =!= benchSource))
+    grams(docs.filter(col("source") =!= BenchSource))
       .filter(toCol(new BloomFilterMightContain(
         Literal(bf, BinaryType), toExpr(xxhash64(col("gr"))))))
       .groupBy(col("doc_id"))
@@ -2093,17 +2090,10 @@ object Corpus {
    * flagged side is unhinted like [[decontaminate]]'s bench side — AQE
    * broadcasts the normal tiny case, a pathological flag-set degrades
    * to a shuffle join instead of a driver OOM. */
-  def bloomDecontaminateVerified(docs: DataFrame,
-                                 benchSource: String = "src0"): DataFrame = {
-    val flagged = bloomDecontaminate(docs, benchSource).select(col("doc_id"))
-    val bench = grams(docs.filter(col("source") === benchSource))
-      .withColumnRenamed("doc_id", "bench_id")
-    val corpus = grams(docs.filter(col("source") =!= benchSource)
+  def bloomDecontaminateVerified(docs: DataFrame): DataFrame = {
+    val flagged = bloomDecontaminate(docs).select(col("doc_id"))
+    sharedGrams(docs, docs.filter(col("source") =!= BenchSource)
       .join(flagged, Seq("doc_id"), "left_semi"))
-    corpus.join(bench, "gr")
-      .groupBy(col("doc_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= ContamMinShared)
   }
 
   // ---- context-window chunking ---------------------------------------------
@@ -2904,9 +2894,7 @@ object Corpus {
    * are one more partial-agg pass over the count relation. The only
    * full-width exchanges are keyed aggregates; nothing driver-side, no
    * vocabulary-sized state — the bucket table is O(4096) at 100 TB. */
-  def dsirWeights(docs: DataFrame,
-                  targetSource: String = DsirTargetSource,
-                  buckets: Int = DsirBuckets): DataFrame = {
+  def dsirWeights(docs: DataFrame): DataFrame = {
     val cnts = TextFunctions.withTokens(
         docs.select(col("doc_id"), col("source"), col("text")), "text", "toks")
       .select(col("doc_id"), col("source"), explode(expr(
@@ -2914,14 +2902,14 @@ object Corpus {
         .as("bigram"))
       .select(col("doc_id"), col("source"),
         (conv(substring(md5(col("bigram").cast("binary")), 1, 4), 16, 10)
-          .cast("int") % buckets).as("bucket"))
+          .cast("int") % DsirBuckets).as("bucket"))
       .groupBy(col("doc_id"), col("source"), col("bucket"))
       .agg(count(lit(1)).cast("bigint").as("cnt"))
       .persist()
     val byBucket = cnts.groupBy(col("bucket")).agg(
-      sum(when(col("source") === targetSource, col("cnt")).otherwise(lit(0L)))
+      sum(when(col("source") === DsirTargetSource, col("cnt")).otherwise(lit(0L)))
         .cast("bigint").as("t_cnt"),
-      sum(when(col("source") =!= targetSource, col("cnt")).otherwise(lit(0L)))
+      sum(when(col("source") =!= DsirTargetSource, col("cnt")).otherwise(lit(0L)))
         .cast("bigint").as("r_cnt"))
     val tots = byBucket.agg(
       sum(col("t_cnt")).cast("bigint").as("tt"),
@@ -2931,11 +2919,11 @@ object Corpus {
     // raw totals never need the per-doc relation a second time)
     val lambda = byBucket.crossJoin(broadcast(tots))
       .select(col("bucket"), col("r_cnt"),
-        (flog2(col("t_cnt") + 1) - flog2(col("tt") + buckets)
-          - flog2(col("r_cnt") + 1) + flog2(col("rt") + buckets))
+        (flog2(col("t_cnt") + 1) - flog2(col("tt") + DsirBuckets)
+          - flog2(col("r_cnt") + 1) + flog2(col("rt") + DsirBuckets))
           .as("lambda_bits"))
       .persist()
-    val perDoc = cnts.filter(col("source") =!= targetSource)
+    val perDoc = cnts.filter(col("source") =!= DsirTargetSource)
       .join(broadcast(lambda.select(col("bucket"), col("lambda_bits"))), "bucket")
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt") * col("lambda_bits")).cast("bigint").as("weight_bits"),
@@ -2945,7 +2933,7 @@ object Corpus {
         .cast("bigint").as("w_tot"),
       coalesce(sum(col("r_cnt")), lit(0L)).cast("bigint").as("n_tot"))
     val dec = "decimal(38,0)"
-    docs.filter(col("source") =!= targetSource).select(col("doc_id"))
+    docs.filter(col("source") =!= DsirTargetSource).select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .crossJoin(broadcast(rawTots))
       .select(col("doc_id"),
@@ -2956,17 +2944,15 @@ object Corpus {
           .as("keep"))
   }
 
-  def dsirWeightsSql(table: String,
-                     targetSource: String = DsirTargetSource,
-                     buckets: Int = DsirBuckets): String = {
-    val tgt = sqlLit(targetSource)
+  def dsirWeightsSql(table: String): String = {
+    val tgt = sqlLit(DsirTargetSource)
     s"""WITH tf AS (SELECT doc_id, source, ${TextSql.tokens("text")} AS toks FROM $table),
        |idx AS (SELECT doc_id, CAST(unnest(range(1, len(toks))) AS INT) AS i FROM tf),
        |bg AS (SELECT x.doc_id, t.source,
        |              md5(concat(t.toks[x.i], ' ', t.toks[x.i + 1])) AS h
        |       FROM idx x JOIN tf t ON t.doc_id = x.doc_id),
        |cnts AS (SELECT doc_id, source,
-       |                ${hexPrefix16SqlDuck("h")} % $buckets AS bucket,
+       |                ${hexPrefix16SqlDuck("h")} % $DsirBuckets AS bucket,
        |                CAST(count(*) AS BIGINT) AS cnt
        |         FROM bg GROUP BY 1, 2, 3),
        |byb AS (SELECT bucket,
@@ -2976,8 +2962,8 @@ object Corpus {
        |tots AS (SELECT CAST(sum(t_cnt) AS BIGINT) AS tt,
        |                CAST(sum(r_cnt) AS BIGINT) AS rt FROM byb),
        |lam AS (SELECT bucket,
-       |               CAST((length(bin(t_cnt + 1)) - 1) - (length(bin(tt + $buckets)) - 1)
-       |                  - (length(bin(r_cnt + 1)) - 1) + (length(bin(rt + $buckets)) - 1)
+       |               CAST((length(bin(t_cnt + 1)) - 1) - (length(bin(tt + $DsirBuckets)) - 1)
+       |                  - (length(bin(r_cnt + 1)) - 1) + (length(bin(rt + $DsirBuckets)) - 1)
        |                 AS BIGINT) AS lambda_bits
        |        FROM byb CROSS JOIN tots),
        |pd AS (SELECT c.doc_id,

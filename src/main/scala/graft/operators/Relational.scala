@@ -699,7 +699,7 @@ object Relational {
   /** First 13 hex chars of `h` as an exact BIGINT (52 bits — exact in
    * double too). Pure `instr`/`substring` arithmetic, valid verbatim in
    * BOTH Spark SQL and DuckDB — the one string is the cross-engine
-   * contract (the `simhashStr` trick). Each positional weight is CAST to
+   * contract. Each positional weight is CAST to
    * BIGINT: Spark parses sub-2³¹ literals as INT, and digit × 2²⁸
    * overflows INT under ANSI mode (DuckDB silently promotes — the
    * divergence only bites when hk is non-null). */

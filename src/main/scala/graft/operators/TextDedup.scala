@@ -46,28 +46,16 @@ object TextDedup {
 
   // ---- shared shingling ----------------------------------------------------
 
-  /** Word-trigram shingles (distinct) from a MATERIALIZED token-array
-   * column. The argument must be an attribute, not an expression: Spark
-   * cannot eliminate common subexpressions inside lambda bodies, so
-   * `element_at(<full tokenize expr>, i)` would re-tokenize the document
-   * once per shingle per position — materializing the tokens first makes
-   * each `element_at` a cheap row read.
+  /** (doc_id, sh): the distinct word-trigram shingles of each document
+   * with at least three tokens, via the native
+   * [[graft.plans.WordShingles]] pass — one tokenization per document,
+   * where a `transform`/`element_at` lambda over the token array would
+   * let Catalyst re-inline the tokenizer (regex split ~380× per document).
    *
    * Word n-grams, not unigrams: the synthetic corpus shares a tiny
    * vocabulary, so unigram Jaccard is ~0.8 between unrelated docs while
    * trigram Jaccard is ~0 (measured at sf0.01) — trigram sets separate
    * planted near-dups cleanly. */
-  def shinglesFromToks(toks: Column): Column = {
-    val grams = transform(
-      sequence(lit(1), size(toks) - 2),
-      i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))
-    array_distinct(when(size(toks) >= 3, grams).otherwise(array().cast("array<string>")))
-  }
-
-  /** (doc_id, sh) via the native [[graft.plans.WordShingles]] pass —
-   * value-identical to [[shinglesFromToks]] over materialized tokens, but
-   * immune to Catalyst re-inlining the tokenizer into the shingle lambda
-   * (which re-ran regex split ~380× per document). */
   private[operators] def shingleDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     docs.select(col("doc_id"),
@@ -75,8 +63,10 @@ object TextDedup {
       .filter(size(col("sh")) > 0)
   }
 
-  /** DuckDB: shingles from a `toks` list column (comprehension references
-   * the column — single-level lambda, supported). */
+  /** DuckDB: the [[shingleDf]] shingle set from a `toks` list column —
+   * distinct space-joined word trigrams, empty under three tokens
+   * (comprehension references the column — single-level lambda,
+   * supported). */
   private def shinglesFromToksSql(toks: String): String =
     s"list_distinct(CASE WHEN len($toks) >= 3 THEN " +
       s"[$toks[i] || ' ' || $toks[i+1] || ' ' || $toks[i+2] for i in range(1, len($toks) - 1)] " +
@@ -589,10 +579,9 @@ object TextDedup {
    * Dropping a new doc that matches a CAPPED old band can be missed only
    * if every shared band is oversize — the same documented miss the
    * self-dedup accepts for mega-buckets. */
-  def incremental(docs: DataFrame,
-                  newSource: String = IncrementalNewSource): DataFrame = {
-    val newDocs = docs.filter(col("source") === newSource)
-    val oldDocs = docs.filter(col("source") =!= newSource)
+  def incremental(docs: DataFrame): DataFrame = {
+    val newDocs = docs.filter(col("source") === IncrementalNewSource)
+    val oldDocs = docs.filter(col("source") =!= IncrementalNewSource)
 
     // exact: new fingerprints that already exist in the corpus
     val newFp = newDocs.select(col("doc_id"), fingerprint(col("text")).as("fp"))
@@ -643,14 +632,13 @@ object TextDedup {
 
   /** Oracle — same relational minhash shape as [[minhashLshSql]], with
    * the band join restricted to new×old and the old side bucket-capped. */
-  def incrementalSql(table: String,
-                     newSource: String = IncrementalNewSource): String =
+  def incrementalSql(table: String): String =
     s"""WITH toks AS (SELECT doc_id, source, ${TextSql.tokens("text")} AS toks FROM $table),
        |fp AS (SELECT doc_id, source, md5(array_to_string(toks, ' ')) AS fp FROM toks),
        |exact_drop AS (
        |  SELECT DISTINCT n.doc_id AS doc_id FROM fp n
-       |  WHERE n.source = '$newSource'
-       |    AND EXISTS (SELECT 1 FROM fp o WHERE o.source <> '$newSource' AND o.fp = n.fp)),
+       |  WHERE n.source = '$IncrementalNewSource'
+       |    AND EXISTS (SELECT 1 FROM fp o WHERE o.source <> '$IncrementalNewSource' AND o.fp = n.fp)),
        |sh0 AS (SELECT doc_id, source, ${shinglesFromToksSql("toks")} AS sh FROM toks),
        |shf AS (SELECT * FROM sh0 WHERE len(sh) > 0),
        |shrow AS (SELECT doc_id, unnest(sh) AS s FROM shf),
@@ -664,10 +652,10 @@ object TextDedup {
        |         unnest([md5(j::VARCHAR || '|' || sig[j*$LshRows-1] || '|' || sig[j*$LshRows])
        |                 for j in range(1, ${LshBands + 1})]) AS bv
        |  FROM sig s JOIN shf f ON f.doc_id = s.doc_id),
-       |oldb AS (SELECT doc_id, bv FROM banded WHERE source <> '$newSource'),
+       |oldb AS (SELECT doc_id, bv FROM banded WHERE source <> '$IncrementalNewSource'),
        |okb AS (SELECT bv FROM (SELECT bv, count(*) AS n FROM oldb GROUP BY 1)
        |        WHERE n <= $MaxBucket),
-       |newb AS (SELECT doc_id, bv FROM banded WHERE source = '$newSource'),
+       |newb AS (SELECT doc_id, bv FROM banded WHERE source = '$IncrementalNewSource'),
        |cand AS (
        |  SELECT DISTINCT nw.doc_id AS new_id, ob.doc_id AS old_id
        |  FROM newb nw JOIN (SELECT o.* FROM oldb o JOIN okb USING (bv)) ob
@@ -696,22 +684,29 @@ object TextDedup {
   val HammingMax = 10
 
   /** Chunk count for a corpus of `nDocs` uniform documents, keeping the
-   * EXPECTED random-collision bucket at ≤ `targetBucket` docs: a chunk of
+   * EXPECTED random-collision bucket at ≤ [[MaxBucket]] docs: a chunk of
    * width w = 64/c hashes a uniform corpus into 2^w buckets, so expected
-   * bucket size is n/2^w — solve w ≥ log2(n/targetBucket). Fewer, wider
+   * bucket size is n/2^w — solve w ≥ log2(n/MaxBucket). Fewer, wider
    * chunks at larger n (less collision mass) at the cost of the pigeonhole
    * recall bound (untouched-chunk guarantee only for distance < c); the
    * [[MaxBucket]] cap in [[simhashDedup]] bounds the residual hot buckets
    * either way. c=4 (w=16) holds to ~16M uniform docs per partition of the
-   * corpus at targetBucket=256. */
-  def simhashChunksFor(nDocs: Long, targetBucket: Int = MaxBucket): Int = {
-    // integer-exact ceil(log2(ceil(n/target))) — bit-length, no floating
-    // point; the DuckDB oracle derives the identical value from the
-    // identical count with the same integer bit-length (length(bin(m-1)))
-    val m = (math.max(nDocs, 1L) + targetBucket - 1) / targetBucket
-    val w = if (m <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(m - 1)
-    val clamped = math.max(8, math.min(32, w))       // width within [8, 32] bits
+   * corpus at MaxBucket=256. */
+  def simhashChunksFor(nDocs: Long): Int = {
+    // chunk width within [8, 32] bits
+    val clamped = math.max(8, math.min(32, bucketBits(nDocs, MaxBucket)))
     math.max(2, SimHashBits / clamped)               // at least 2 chunks (pigeonhole)
+  }
+
+  /** Integer-exact ceil(log2(ceil(n/target))) for n ≥ 1 (n < 1 counts
+   * as 1): the bit-length of m − 1 for m = ceil(n/target), 0 when one
+   * bucket holds the corpus. No floating point — the DuckDB oracles
+   * derive the identical value from the identical count with the same
+   * integer bit-length, `length(bin(m-1))`. The one width rule of every
+   * size-derived parameter. */
+  private[operators] def bucketBits(n: Long, target: Long): Int = {
+    val m = (math.max(n, 1L) + target - 1) / target
+    if (m <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(m - 1)
   }
 
   /** [[simhashDedup]] with the chunk count derived from the corpus size —
@@ -730,25 +725,6 @@ object TextDedup {
    * scan skip the plan-time count job. */
   def corpusSizeEstimate(docs: DataFrame): Long = ScanMemo.exactCount(docs)
 
-  /** 64-char '0'/'1' SimHash string over the token multiset: bit_j is the
-   * sign of Σ_tokens (±1 by bit j of md5(token)). A bit-string, not a
-   * BIGINT: lexicographic, overflow-free, identical in both engines.
-   *
-   * Shape matters for cost: tokens are hashed ONCE, then a single
-   * `aggregate` folds each hash into a 64-wide bit-sum vector via
-   * `zip_with` — O(tokens·64) integer ops + O(tokens) md5, not the naive
-   * O(64) re-tokenize/re-hash per bit. One Spark-SQL expression, fully
-   * codegen-free of UDFs; `textCol` is spliced as a column NAME. */
-  def simhashStr(textCol: String): Column = expr(
-    s"""concat_ws('', transform(
-       |  aggregate(
-       |    transform(filter(split(lower($textCol), '[^a-z0-9]+'), t -> t != ''), tk -> md5(tk)),
-       |    array_repeat(0, $SimHashBits),
-       |    (acc, h) -> zip_with(acc, sequence(0, ${SimHashBits - 1}), (a, j) ->
-       |      a + 2 * (shiftright(instr('0123456789abcdef', substring(h, (j DIV 4) + 1, 1)) - 1,
-       |                          3 - (j % 4)) & 1) - 1)),
-       |  s -> CASE WHEN s > 0 THEN '1' ELSE '0' END))""".stripMargin)
-
   /** Near-duplicate pairs by SimHash: 64-bit signature, chunk blocking
    * (default [[SimHashChunks]]×16-bit; size-derive with
    * [[simhashChunksFor]]), Hamming ≤ [[HammingMax]] verify.
@@ -757,9 +733,7 @@ object TextDedup {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     val chunkLen = SimHashBits / chunks
     // persist: the (narrow) signature relation feeds chunk blocking AND the
-    // two verify joins. Native one-pass signature ([[graft.plans.SimHash64]])
-    // — value-identical to [[simhashStr]], ~tokens·64 fewer interpreted
-    // lambda evaluations per row.
+    // two verify joins. Native one-pass signature ([[graft.plans.SimHash64]]).
     val sigs = docs
       .filter(size(tokens(col("text"))) > 0)
       .select(col("doc_id"), toCol(graft.plans.SimHash64(toExpr(col("text")))).as("sig"))

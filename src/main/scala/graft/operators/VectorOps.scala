@@ -252,18 +252,12 @@ object VectorOps {
   val NearDupBandTable: Map[Int, Int] = bandTableFor(NearDupSim)
   val NearDupRowsMax: Int = bandRowsMaxFor(NearDupSim)
 
-  /** Hyperplanes per band for a corpus of `n` vectors: integer-exact
-   * ceil(log2(ceil(n/target))) via bit-length (the
-   * `TextDedup.simhashChunksFor` contract — the oracle derives the
-   * identical value with the same length(bin(m-1))), clamped to
+  /** Hyperplanes per band for a corpus of `n` vectors:
+   * [[TextDedup.bucketBits]] of `n` over [[NearDupTargetBucket]], clamped to
    * [2, `rowsMax`] — the caller passes the budget-derived clamp for its
    * own threshold ([[bandRowsMaxFor]]). */
-  def nearDupRowsFor(n: Long, targetBucket: Int = NearDupTargetBucket,
-                     rowsMax: Int = NearDupRowsMax): Int = {
-    val m = (math.max(n, 1L) + targetBucket - 1) / targetBucket
-    val w = if (m <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(m - 1)
-    math.max(2, math.min(rowsMax, w))
-  }
+  def nearDupRowsFor(n: Long, rowsMax: Int = NearDupRowsMax): Int =
+    math.max(2, math.min(rowsMax, TextDedup.bucketBits(n, NearDupTargetBucket)))
 
   /** Canonical plane pool: band j (0-based) always uses planes
    * [j·R, (j+1)·R) of [[hyperplanesN]]'s fixed sequence, so the Spark
@@ -407,7 +401,7 @@ object VectorOps {
 
   /** Incremental (new-batch × standing-corpus) semantic dedup — the
    * vector twin of [[TextDedup.incremental]]: every NEW vector is
-   * dropped iff some OLD vector sits within cosine `threshold`. The
+   * dropped iff some OLD vector sits within cosine [[SemDedupSim]]. The
    * everyday shape of SemDeDup in production is exactly this — a fresh
    * crawl's embeddings screened against the corpus WITHOUT re-clustering
    * the corpus itself.
@@ -419,9 +413,8 @@ object VectorOps {
    * mass the standing corpus should have collapsed already); one
    * groupBy-free band shuffle + two narrow verify joins. Output
    * (vec_id, keep) over the new batch. */
-  def semanticIncremental(embeddings: DataFrame,
-                          threshold: Double = SemDedupSim): DataFrame = {
-    val table = bandTableFor(threshold)
+  def semanticIncremental(embeddings: DataFrame): DataFrame = {
+    val table = bandTableFor(SemDedupSim)
     val rows = nearDupRowsFor(corpusSize(embeddings), rowsMax = table.keys.max)
     val bands = table(rows)
     val qn = quantized(embeddings).persist() // bands + both verify sides
@@ -437,7 +430,7 @@ object VectorOps {
     val dropped = cand
       .join(qn.select(col("vec_id").as("new_id"), col("q").as("qa"), col("n2").as("na")), "new_id")
       .join(qn.select(col("vec_id").as("old_id"), col("q").as("qb"), col("n2").as("nb")), "old_id")
-      .filter(cosine(dot(col("qa"), col("qb")), col("na"), col("nb")) >= threshold)
+      .filter(cosine(dot(col("qa"), col("qb")), col("na"), col("nb")) >= SemDedupSim)
       .select(col("new_id")).distinct()
     qn.filter(isNew).select(col("vec_id"))
       .join(dropped.select(col("new_id").as("vec_id"), lit(true).as("hit")), Seq("vec_id"), "left")
@@ -519,8 +512,7 @@ object VectorOps {
    * count. */
   def streamingSemanticIncremental(newVecs: DataFrame, standing: DataFrame,
                                    retention: java.time.Duration,
-                                   rows: Int, bands: Int,
-                                   threshold: Double = SemDedupSim): DataFrame = {
+                                   rows: Int, bands: Int): DataFrame = {
     val spark = newVecs.sparkSession
     import spark.implicits._
     val retMs = retention.toMillis
@@ -550,7 +542,7 @@ object VectorOps {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             val s0 = state.getOption.getOrElse(VecBucketState(Nil, Long.MinValue))
-            val (s1, out) = semIncTransition(recs, s0, retMs, threshold)
+            val (s1, out) = semIncTransition(recs, s0, retMs, SemDedupSim)
             if (s1.entries.isEmpty) state.remove()
             else {
               state.update(s1)
@@ -600,15 +592,14 @@ object VectorOps {
   /** The exact all-pairs baseline the bucketed [[embeddingNearDup]] is
    * measured against (recall test in OperatorsSpec — NOT a checked query:
    * the O(n²) cartesian compare dies at 100× scale). */
-  private[graft] def embeddingNearDupBrute(embeddings: DataFrame,
-                                           threshold: Double = NearDupSim): DataFrame = {
+  private[graft] def embeddingNearDupBrute(embeddings: DataFrame): DataFrame = {
     val qn = quantized(embeddings)
     val a = qn.select(col("vec_id").as("id_a"), col("q").as("qa"), col("n2").as("na"))
     val b = qn.select(col("vec_id").as("id_b"), col("q").as("qb"), col("n2").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("sim"))
-      .filter(col("sim") >= threshold)
+      .filter(col("sim") >= NearDupSim)
   }
 
   // ---- 2. brute-force cosine top-k -----------------------------------------
@@ -671,7 +662,7 @@ object VectorOps {
    * rows, trivially final) on top. For full-corpus labeling swap the
    * scoring stage for [[annIvfTopK]]'s cell-local candidates; the vote
    * stage is unchanged. */
-  def knnLabel(embeddings: DataFrame, k: Int = KnnK): DataFrame = {
+  def knnLabel(embeddings: DataFrame): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val corpus = embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("q"), col("label"))
@@ -684,7 +675,7 @@ object VectorOps {
     val topk = scored
       .withColumn("rank", row_number().over(
         W.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= KnnK)
     topk.groupBy(col("query_id"), col("label"))
       .agg(count(lit(1)).as("votes"), max(col("sim")).as("best_sim"))
       .withColumn("vr", row_number().over(
@@ -694,7 +685,7 @@ object VectorOps {
         col("votes"), col("best_sim"))
   }
 
-  def knnLabelSql(table: String, k: Int = KnnK): String =
+  def knnLabelSql(table: String): String =
     s"""WITH ${quantizedSql(table)},
        |corpus AS (SELECT qn.vec_id, qn.q, qn.n2, e.label
        |           FROM qn JOIN $table e USING (vec_id)),
@@ -710,7 +701,7 @@ object VectorOps {
        |           row_number() OVER (PARTITION BY query_id
        |             ORDER BY sim DESC, neighbor_id) AS rank
        |    FROM scored)
-       |  WHERE rank <= $k),
+       |  WHERE rank <= $KnnK),
        |votes AS (
        |  SELECT query_id, label, count(*) AS votes, max(sim) AS best_sim
        |  FROM topk GROUP BY query_id, label)
@@ -744,7 +735,7 @@ object VectorOps {
    * positive side is one query-keyed partial-agg max over the same
    * scored relation (persisted, so the corpus is scanned once), and
    * the final join brokers queries × k rows. */
-  def hardNegatives(embeddings: DataFrame, k: Int = HardNegK): DataFrame = {
+  def hardNegatives(embeddings: DataFrame): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val corpus = embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("q"), col("label"))
@@ -762,14 +753,14 @@ object VectorOps {
     scored.filter(!col("same"))
       .withColumn("rank", row_number().over(
         W.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= HardNegK)
       .join(pos, Seq("query_id"), "left")
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("bigint").as("rank"), col("sim"),
         col("pos_sim"), (col("pos_sim") - col("sim")).as("margin"))
   }
 
-  def hardNegativesSql(table: String, k: Int = HardNegK): String =
+  def hardNegativesSql(table: String): String =
     s"""WITH ${quantizedSql(table)},
        |corpus AS (SELECT qn.vec_id, qn.q, qn.n2, e.label
        |           FROM qn JOIN $table e USING (vec_id)),
@@ -786,7 +777,7 @@ object VectorOps {
        |           CAST(row_number() OVER (PARTITION BY query_id
        |             ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
        |    FROM scored WHERE NOT same)
-       |  WHERE rank <= $k)
+       |  WHERE rank <= $HardNegK)
        |SELECT n.query_id AS query_id, n.neighbor_id AS neighbor_id, n.rank AS rank,
        |       n.sim AS sim, p.pos_sim AS pos_sim, p.pos_sim - n.sim AS margin
        |FROM negs n LEFT JOIN pos p ON p.query_id = n.query_id""".stripMargin
@@ -810,16 +801,11 @@ object VectorOps {
    * first P canonical planes". */
   lazy val lshPlanePool: Seq[Seq[Int]] = hyperplanesN(LshPlanesMax)
 
-  /** Bucket-key width for a corpus of `n` vectors: integer-exact
-   * ceil(log2(ceil(n/target))) via bit-length (the
-   * `TextDedup.simhashChunksFor` contract — the oracle derives the
-   * identical value with the same length(bin(m-1))), clamped to
+  /** Bucket-key width for a corpus of `n` vectors:
+   * [[TextDedup.bucketBits]] of `n` over [[LshTargetBucket]], clamped to
    * [[[LshPlanes]], [[LshPlanesMax]]]. */
-  def lshPlanesFor(n: Long, targetBucket: Int = LshTargetBucket): Int = {
-    val m = (math.max(n, 1L) + targetBucket - 1) / targetBucket
-    val w = if (m <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(m - 1)
-    math.max(LshPlanes, math.min(LshPlanesMax, w))
-  }
+  def lshPlanesFor(n: Long): Int =
+    math.max(LshPlanes, math.min(LshPlanesMax, TextDedup.bucketBits(n, LshTargetBucket)))
 
   /** `planes`-char '0'/'1' bucket key: sign bits of the hyperplane dot
    * products (integer-exact on quantized vectors). Native
@@ -1205,11 +1191,7 @@ object VectorOps {
    * corpus, so row-level widths never exceed this). */
   private[operators] def semSubWidthFor(csize: Long): Int =
     if (csize <= SemMaxBucket) 0
-    else {
-      val m = (csize + SemTargetBucket - 1) / SemTargetBucket
-      math.min(semRowsMax,
-        math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(m - 1)))
-    }
+    else math.min(semRowsMax, math.max(1, TextDedup.bucketBits(csize, SemTargetBucket)))
 
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
    * cluster the corpus by embedding, compare cosine only WITHIN a
@@ -2274,7 +2256,7 @@ object VectorOps {
    * scoring scan against two broadcast single-row arrays feeding a
    * TakeOrderedAndProject top-k — no shuffle of scored rows beyond the
    * per-partition k heads. */
-  def pcaResidualOutliers(embeddings: DataFrame, k: Int = PcaResidK): DataFrame = {
+  def pcaResidualOutliers(embeddings: DataFrame): DataFrame = {
     val qn = quantized(embeddings)
     val pca = embPcaPower(embeddings)
     val aux = pca.agg(
@@ -2299,12 +2281,12 @@ object VectorOps {
           .otherwise(col("resid_fx").cast("double") / col("c2").cast("double"))
           .as("resid_share"))
       .orderBy(col("resid_fx").desc, col("vec_id"))
-      .limit(k)
+      .limit(PcaResidK)
   }
 
   val PcaResidK = 50
 
-  def pcaResidualOutliersSql(table: String, k: Int = PcaResidK): String =
+  def pcaResidualOutliersSql(table: String): String =
     s"""WITH pca AS (${embPcaPowerSql(table)}),
        |${quantizedSql(table)},
        |aux AS (SELECT list(mean_q ORDER BY dim) AS m_arr,
@@ -2326,7 +2308,7 @@ object VectorOps {
        |       CASE WHEN c2 = 0 THEN 0.0
        |            ELSE CAST(resid_fx AS DOUBLE) / CAST(c2 AS DOUBLE) END AS resid_share
        |FROM resid
-       |ORDER BY resid_fx DESC, vec_id LIMIT $k""".stripMargin
+       |ORDER BY resid_fx DESC, vec_id LIMIT $PcaResidK""".stripMargin
 
   /** Per-label spectral drift — each label slice's distribution along
    * the corpus's dominant direction: n, mean/min/max of the exact

@@ -197,6 +197,52 @@ final class KmvSketch(val k: Int) {
 }
 
 /**
+ * The aggregate body both KMV aggregates share: one [[KmvSketch]] of
+ * size `k` per group, fed the non-null STRING (pre-hashed) input rows.
+ * Serialized as `k`, the entry count, then each hash via `writeUTF`
+ * in ascending order. Subclasses add only their `eval` and result type.
+ */
+abstract class KmvAgg extends TypedImperativeAggregate[KmvSketch]
+  with UnaryLike[Expression] with ExpectsInputTypes {
+
+  def k: Int
+
+  override def nullable: Boolean = false
+  // analysis-time type gate: without it a non-string argument surfaces as
+  // an executor-side ClassCastException in update()'s UTF8String cast
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+
+  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
+
+  override def update(buf: KmvSketch, input: InternalRow): KmvSketch = {
+    val v = child.eval(input)
+    if (v != null) buf.add(v.asInstanceOf[UTF8String].toString)
+    buf
+  }
+
+  override def merge(a: KmvSketch, b: KmvSketch): KmvSketch = a.merge(b)
+
+  override def serialize(buf: KmvSketch): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    out.writeInt(buf.k)
+    out.writeInt(buf.mins.size)
+    val it = buf.mins.iterator()
+    while (it.hasNext) out.writeUTF(it.next())
+    out.flush()
+    bos.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): KmvSketch = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val sk = new KmvSketch(in.readInt())
+    var m = in.readInt()
+    while (m > 0) { sk.mins.add(in.readUTF()); m -= 1 }
+    sk
+  }
+}
+
+/**
  * `kmv_distinct(h, k)` — native KMV bottom-k distinct-count sketch over
  * pre-hashed STRING rows (md5 hex in the checked query). The raw-scale
  * replacement for the two-level window bottom-k in
@@ -220,30 +266,15 @@ case class KmvDistinctAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch] with UnaryLike[Expression]
-  with ExpectsInputTypes {
+  extends KmvAgg {
 
   require(k >= 2, "kmv_distinct needs k >= 2 (the estimator divides by the k-th minimum)")
 
   override def prettyName: String = "kmv_distinct"
-  override def nullable: Boolean = false
-  // analysis-time type gate: without it a non-string argument surfaces as
-  // an executor-side ClassCastException in update()'s UTF8String cast
-  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("m", LongType, nullable = false),
     StructField("hk", StringType, nullable = true),
     StructField("est", DoubleType, nullable = false)))
-
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(buf: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-
-  override def merge(a: KmvSketch, b: KmvSketch): KmvSketch = a.merge(b)
 
   /** First 13 hex chars as an exact 52-bit long — the Scala twin of
    * `Relational.hexVal13` (the shared cross-engine estimator contract). */
@@ -272,25 +303,6 @@ case class KmvDistinctAgg(
     }
   }
 
-  override def serialize(buf: KmvSketch): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.k)
-    out.writeInt(buf.mins.size)
-    val it = buf.mins.iterator()
-    while (it.hasNext) out.writeUTF(it.next())
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): KmvSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val sk = new KmvSketch(in.readInt())
-    var m = in.readInt()
-    while (m > 0) { sk.mins.add(in.readUTF()); m -= 1 }
-    sk
-  }
-
   override def withNewMutableAggBufferOffset(o: Int): KmvDistinctAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): KmvDistinctAgg =
@@ -316,25 +328,12 @@ case class KmvMinsAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch] with UnaryLike[Expression]
-  with ExpectsInputTypes {
+  extends KmvAgg {
 
   require(k >= 2, "kmv_mins needs k >= 2 (downstream estimators divide by the k-th minimum)")
 
   override def prettyName: String = "kmv_mins"
-  override def nullable: Boolean = false
-  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(buf: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[UTF8String].toString)
-    buf
-  }
-
-  override def merge(a: KmvSketch, b: KmvSketch): KmvSketch = a.merge(b)
 
   override def eval(buf: KmvSketch): Any = {
     val out = new Array[Any](buf.mins.size)
@@ -342,25 +341,6 @@ case class KmvMinsAgg(
     var i = 0
     while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
     new GenericArrayData(out)
-  }
-
-  override def serialize(buf: KmvSketch): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.k)
-    out.writeInt(buf.mins.size)
-    val it = buf.mins.iterator()
-    while (it.hasNext) out.writeUTF(it.next())
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): KmvSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val sk = new KmvSketch(in.readInt())
-    var m = in.readInt()
-    while (m > 0) { sk.mins.add(in.readUTF()); m -= 1 }
-    sk
   }
 
   override def withNewMutableAggBufferOffset(o: Int): KmvMinsAgg =

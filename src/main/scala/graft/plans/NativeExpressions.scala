@@ -330,11 +330,10 @@ case class CharGramSeq(child: Expression, n: Int, sampleNibbleMax: Int)
 
 /**
  * `SimHash64(text)`: 64-char '0'/'1' SimHash string over the token
- * multiset — bit_j is the sign of Σ_tokens (±1 by bit j of md5(token)).
- * Value-identical to the `aggregate`/`zip_with` composition in
- * `TextDedup.simhashStr` (bit j of the hex string = bit (7−j%8) of md5
- * byte j/8), one native pass: md5 once per token, 64 integer adds per
- * token, instead of ~tokens·64 interpreted lambda evaluations per row.
+ * multiset (lower-cased, split on `[^a-z0-9]+`, empty tokens dropped).
+ * Char j is '1' iff Σ_tokens (+1 if bit (7−j%8) of md5(token) byte j/8
+ * is set, else −1) > 0 — bit j of md5's hex string, most significant
+ * first. One native pass: md5 once per token, 64 integer adds per token.
  */
 case class SimHash64(child: Expression)
     extends UnaryExpression with CodegenFallback {

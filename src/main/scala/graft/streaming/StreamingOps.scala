@@ -26,13 +26,12 @@ case class TrendAlert(token: String, est_count: Long)
  */
 object StreamingOps {
 
-  /** Tumbling event-time window counts+sums per key.
+  /** Tumbling event-time window counts+sums of `value` per key.
    * Output: (key, window_start, window_end, n, total). */
-  def tumblingAgg(in: DataFrame, windowDur: String, watermarkDelay: String,
-                  valueCol: String = "value"): DataFrame =
+  def tumblingAgg(in: DataFrame, windowDur: String, watermarkDelay: String): DataFrame =
     in.withWatermark("ts", watermarkDelay)
       .groupBy(col("key"), window(col("ts"), windowDur))
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
       .select(col("key"), col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("n"), col("total"))
 
@@ -169,7 +168,7 @@ object StreamingOps {
   }
 
   /** Windowed distinct-count sketch: per tumbling window, the
-   * deterministic KMV bottom-k estimate of distinct `keyCol` values —
+   * deterministic KMV bottom-k estimate of distinct `key` values —
    * the streaming form of the batch `kmv_distinct` aggregate
    * ([[graft.plans.KmvDistinctAgg]]). An exact streaming
    * `approx_count_distinct` twin exists in Spark, but its HLL state is
@@ -180,10 +179,9 @@ object StreamingOps {
    * every key seen in the window — unbounded per-user state at scale).
    * Output: (window_start, window_end, m, hk, n_distinct_kmv). */
   def windowedKmvDistinct(in: DataFrame, windowDur: String,
-                          watermarkDelay: String, k: Int,
-                          keyCol: String = "key"): DataFrame = {
+                          watermarkDelay: String, k: Int): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
-    val h = md5(col(keyCol).cast("string"))
+    val h = md5(col("key").cast("string"))
     val sk = toCol(graft.plans.KmvDistinctAgg(toExpr(h), k).toAggregateExpression())
     // batch DataFrames run the identical plan minus the watermark — the
     // backfill path of the same metric (and the spec's equality oracle)
@@ -211,11 +209,10 @@ object StreamingOps {
    * exact re-count. State per window is O(k) counters — bounded at any
    * stream rate. */
   def windowedMgHitters(in: DataFrame, windowDur: String,
-                        watermarkDelay: String, k: Int,
-                        textCol: String = "text"): DataFrame = {
+                        watermarkDelay: String, k: Int): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     val sk = toCol(graft.plans.MisraGriesAgg(
-      toExpr(graft.functions.TextFunctions.tokens(col(textCol))), k)
+      toExpr(graft.functions.TextFunctions.tokens(col("text"))), k)
       .toAggregateExpression())
     val wm = if (in.isStreaming) in.withWatermark("ts", watermarkDelay) else in
     wm.groupBy(window(col("ts"), windowDur))
@@ -236,10 +233,10 @@ object StreamingOps {
    * depth × width grid regardless of vocabulary or stream rate.
    * Output: (window_start, window_end, n_tokens, counters). */
   def windowedCmGrid(in: DataFrame, windowDur: String, watermarkDelay: String,
-                     depth: Int, width: Int, textCol: String = "text"): DataFrame = {
+                     depth: Int, width: Int): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     val toks = in.select(col("ts"),
-      explode(graft.functions.TextFunctions.tokens(col(textCol))).as("token"))
+      explode(graft.functions.TextFunctions.tokens(col("text"))).as("token"))
     val wm = if (toks.isStreaming) toks.withWatermark("ts", watermarkDelay) else toks
     val sk = toCol(graft.plans.CountMinAgg(toExpr(col("token")), depth, width)
       .toAggregateExpression())

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestHarness extends BeforeAndAfterAll { self: AnyFunSuite =>
   lazy val spark: SparkSession =
     GraftSession.builder(4).appName(getClass.getSimpleName).getOrCreate()
+
+  /** Stop `q` between triggers: a `stop()` that lands inside a trigger
+   * interrupts its in-flight state-store commit, and every aborted task
+   * prints a `CANNOT_COMMIT` stack trace. Waits up to 30 s for a running
+   * trigger to end, then stops at once; a query with timers needs a
+   * non-zero `Trigger.ProcessingTime` so that an idle gap follows. */
+  def stopBetweenTriggers(q: StreamingQuery): Unit = {
+    val deadline = System.currentTimeMillis() + 30000L
+    while (q.status.isTriggerActive && System.currentTimeMillis() < deadline)
+      Thread.sleep(1L)
+    q.stop()
+  }
 
   override protected def afterAll(): Unit = {
     // a suite that stopped the shared context has no queries or cache left

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.time.Duration
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestHarness
@@ -17,6 +17,10 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
   private val bandMs = 100L
   private val retentionMs = 300L
   private val timeoutMs = 200L
+  /** With processing-time timers armed, a default-trigger query runs
+   * no-data batches back to back; a 200 ms trigger leaves the idle gap
+   * `stopBetweenTriggers` stops in. */
+  private val Paced = Trigger.ProcessingTime(200L)
 
   private def state(s: Option[Array[Byte]], nowMs: Long,
                     timedOut: Boolean = false): TestGroupState[Array[Byte]] =
@@ -195,14 +199,15 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     def start(cfg: LeftJoinOnTimeoutConfig) =
       FaithfulLeftJoin(ls.toDF(), rs.toDF(), LeftJoinOnTimeout.testJoiner, cfg)
         .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt).outputMode("append").start()
+        .option("checkpointLocation", ckpt).outputMode("append")
+        .trigger(Paced).start()
 
     val q1 = start(longCfg)
     try {
       ls.addData(Rec(1L, "left", new Timestamp(1000L)),
                  Rec(3L, "left", new Timestamp(1000L)))
       awaitStateRows(q1, 2)
-    } finally q1.stop()
+    } finally stopBetweenTriggers(q1)
 
     val q2 = start(shortCfg)
     try {
@@ -222,7 +227,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       }
       assert(got === Seq((1L, "left+"), (3L, "left+")),
         "both restored lefts must fire with the restarted config's delay")
-    } finally q2.stop()
+    } finally stopBetweenTriggers(q2)
   }
 
   test("end-to-end: restart with different shuffle partitions keeps state " +
@@ -241,7 +246,8 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     def start() =
       FaithfulLeftJoin(ls.toDF(), rs.toDF(), LeftJoinOnTimeout.testJoiner, cfg)
         .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt).outputMode("append").start()
+        .option("checkpointLocation", ckpt).outputMode("append")
+        .trigger(Paced).start()
 
     val q1 = start()
     try {
@@ -250,7 +256,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       ls.addData(Rec(1L, "left", new Timestamp(1000L)),
                  Rec(3L, "left", new Timestamp(1000L)))
       awaitStateRows(q1, 2)
-    } finally q1.stop()
+    } finally stopBetweenTriggers(q1)
 
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "7")
@@ -268,7 +274,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       }
       assert(got === Seq((1L, "left+"), (3L, "left+")))
     } finally {
-      q2.stop()
+      stopBetweenTriggers(q2)
       spark.conf.set("spark.sql.shuffle.partitions", before)
     }
   }
@@ -282,7 +288,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     val out = FaithfulLeftJoin(ls.toDF(), rs.toDF(),
       LeftJoinOnTimeout.testJoiner, cfg)
     val q = out.writeStream.format("memory").queryName("faithful_out")
-      .outputMode("append").start()
+      .outputMode("append").trigger(Paced).start()
     try {
       ls.addData(Rec(1L, "left_1", new Timestamp(1000L)))
       rs.addData(Rec(1L, "right", new Timestamp(1010L)))
@@ -303,7 +309,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       }
       assert(got.contains((1L, "left_1+right")), s"missing join row: $got")
       assert(got.contains((7L, "lonely+")), s"missing timeout row: $got")
-    } finally q.stop()
+    } finally stopBetweenTriggers(q)
   }
 
   test("end-to-end: a null-key left times out once; a null-key right joins " +
@@ -318,7 +324,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
     val ls = MemoryStream[NRec]; val rs = MemoryStream[NRec]
     val q = FaithfulLeftJoin(ls.toDF(), rs.toDF(), LeftJoinOnTimeout.testJoiner, cfg)
       .writeStream.format("memory").queryName("faithful_null_key")
-      .outputMode("append").start()
+      .outputMode("append").trigger(Paced).start()
     try {
       ls.addData(NRec(None, "nl", new Timestamp(1000L)),
                  NRec(Some(1L), "l", new Timestamp(1000L)))
@@ -337,7 +343,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       // the keyed pair joins; its left may also time out first when the
       // wall-clock timer races the right's micro-batch (pinned above)
       assert(got.contains((Some(1L), "l+r")), s"keyed join missing: $got")
-    } finally q.stop()
+    } finally stopBetweenTriggers(q)
   }
 
   test("end-to-end: two CONCURRENT query instances stay isolated — the " +
@@ -359,7 +365,7 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       val q = FaithfulLeftJoin(ls.toDF(), rs.toDF(),
         LeftJoinOnTimeout.testJoiner, cfg)
         .writeStream.format("memory").queryName(s"faithful_conc_$tag")
-        .outputMode("append").start()
+        .outputMode("append").trigger(Paced).start()
       (ls, rs, q)
     }
     val (ls1, rs1, q1) = launch("a")
@@ -392,6 +398,6 @@ class FaithfulLeftJoinSpec extends AnyFunSuite with SparkTestHarness {
       // a_right joining b_left would be cross-query state corruption
       assert(b === Set((1L, "b_left+"), (9L, "b_lonely+")),
         s"instance B must time out its own lefts, nothing else: $b")
-    } finally { q1.stop(); q2.stop() }
+    } finally { stopBetweenTriggers(q1); stopBetweenTriggers(q2) }
   }
 }

@@ -108,12 +108,18 @@ class LjotBatchSpec extends AnyFunSuite with SparkTestHarness {
   test("builder wires the same plan as the direct API") {
     val l = df((1L, "left_1", 1L), (2L, "lonely", 5L))
     val r = df((1L, "right", 1L))
-    val viaBuilder = LeftJoinOnTimeoutBuilder(l, r, LeftJoinOnTimeout.testJoiner,
+    val builder = LeftJoinOnTimeoutBuilder(l, r, LeftJoinOnTimeout.testJoiner,
         cfg.joinWindow, cfg.retention)
-      .scheduledCapacity(10)
-      .build()
+    val viaBuilder = builder.scheduledCapacity(10).build()
     assert(result(viaBuilder) ===
       Seq((1L, "left_1+right", 1L), (2L, "lonely+", 5L)))
+    // `timeout(t)` (ref :55-60) overrides D + 100 ms and is validated at
+    // build() like the reference's validateArguments (ref :130)
+    val t = cfg.joinWindow.plusSeconds(5)
+    assert(builder.timeout(t).config.effectiveTimeout === t)
+    intercept[IllegalArgumentException] {
+      builder.timeout(cfg.joinWindow).build()
+    }
   }
 
   test("skew: a hot key holding 80% of events joins correctly " +

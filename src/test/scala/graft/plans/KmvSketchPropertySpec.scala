@@ -65,6 +65,15 @@ class KmvSketchPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("both KMV aggregates serialize to the same golden bytes") {
+    val sk = freshSketch(3, Seq("b", "a", "b"))
+    // k, entry count, then each hash ascending as writeUTF (u16 length + bytes)
+    val golden = Array[Byte](0, 0, 0, 3, 0, 0, 0, 2, 0, 1, 'a', 0, 1, 'b')
+    val child = org.apache.spark.sql.catalyst.expressions.Literal("x")
+    assert(KmvDistinctAgg(child, 3).serialize(sk) === golden)
+    assert(KmvMinsAgg(child, 3).serialize(sk) === golden)
+  }
+
   test("insertion beyond k never grows the state and only lowers the k-th min") {
     val sk = new KmvSketch(4)
     val rnd = new Random(7)

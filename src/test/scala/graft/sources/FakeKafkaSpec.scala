@@ -69,6 +69,6 @@ class FakeKafkaSpec extends AnyFunSuite with SparkTestHarness {
         s"join branch missing from sink topic; got $got")
       assert(got.contains(("2", "l2+TIMEOUT", 5000L)),
         s"timeout branch missing from sink topic; got $got")
-    } finally q.stop()
+    } finally stopBetweenTriggers(q)
   }
 }
