@@ -174,10 +174,6 @@ object TextSql {
   def tokenCountBpe(t: String): String =
     s"CAST(len(regexp_extract_all($t, '${BpePattern.replace("'", "''")}')) AS BIGINT)"
 
-  /** Relational mirror of [[TextFunctions.rollingFingerprint]] — DuckDB
-   * lambdas cannot nest, so windows × chars is a self-join on position
-   * with the SAME precomputed power table as the native expression. Emits
-   * a full SELECT over `table`; output (doc_id, rolling_fp). */
   /** The shared CTE chain (normalized text → per-window polynomial hash →
    * sorted distinct hash list per doc), used by both the fingerprint
    * mirror and the winnow-dedup oracle so the two cannot diverge. */
@@ -205,6 +201,10 @@ object TextSql {
        |  FROM wh GROUP BY doc_id)""".stripMargin
   }
 
+  /** Relational mirror of [[TextFunctions.rollingFingerprint]] — DuckDB
+   * lambdas cannot nest, so windows × chars is a self-join on position
+   * with the SAME precomputed power table as the native expression. Emits
+   * a full SELECT over `table`; output (doc_id, rolling_fp). */
   def rollingFingerprintSql(table: String): String =
     s"""WITH ${rollingChainSql(table)}
        |SELECT n.doc_id AS doc_id,

@@ -42,18 +42,9 @@ object AsOfJoin {
    * joins, not window partitions. */
   def backward(lhs: DataFrame, rhs: DataFrame, horizon: Duration,
                saltBuckets: Int = 1): DataFrame = {
-    require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    val l0 = lhs.select(col("key"), col("value"), col("ts"), lit(1).as("side"))
-    val r0 = rhs.select(col("key"), col("value"), col("ts"), lit(0).as("side"))
-    val (tagged, partCols) =
-      if (saltBuckets == 1) (l0.unionByName(r0), Seq(col("key")))
-      else {
-        val l = l0.withColumn("salt",
-          pmod(xxhash64(col("value"), col("ts")), lit(saltBuckets.toLong)).cast("int"))
-        val r = r0.withColumn("salt",
-          explode(sequence(lit(0), lit(saltBuckets - 1))))
-        (l.unionByName(r), Seq(col("key"), col("salt")))
-      }
+    val (tagged, partCols) = saltedUnion(
+      lhs.select(col("key"), col("value"), col("ts"), lit(1).as("side")),
+      rhs.select(col("key"), col("value"), col("ts"), lit(0).as("side")), saltBuckets)
     val w = Window.partitionBy(partCols: _*)
       .orderBy(col("ts"), col("side"), col("value"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -70,6 +61,23 @@ object AsOfJoin {
         when(col("last_rts") >= expr(s"ts - INTERVAL $hMs MILLISECONDS"), col("last_rv"))
           .as("rvalue"),
         col("ts"))
+  }
+
+  /** The union of the side-tagged lefts `l0` and rights `r0`, and the
+   * window partition columns: `key` alone, or with `saltBuckets` > 1 also
+   * a `salt` that spreads the lefts by a hash of (value, ts) and
+   * replicates every right into each bucket. */
+  private def saltedUnion(l0: DataFrame, r0: DataFrame,
+                          saltBuckets: Int): (DataFrame, Seq[Column]) = {
+    require(saltBuckets >= 1, "saltBuckets must be >= 1")
+    if (saltBuckets == 1) (l0.unionByName(r0), Seq(col("key")))
+    else {
+      val l = l0.withColumn("salt",
+        pmod(xxhash64(col("value"), col("ts")), lit(saltBuckets.toLong)).cast("int"))
+      val r = r0.withColumn("salt",
+        explode(sequence(lit(0), lit(saltBuckets - 1))))
+      (l.unionByName(r), Seq(col("key"), col("salt")))
+    }
   }
 
   /** Oracle: correlated latest-right subquery with the same tie-break. */
@@ -100,18 +108,9 @@ object AsOfJoin {
    * in `AsOfJoinSpec`). */
   def forward(lhs: DataFrame, rhs: DataFrame, horizon: Duration,
               saltBuckets: Int = 1): DataFrame = {
-    require(saltBuckets >= 1, "saltBuckets must be >= 1")
-    val l0 = lhs.select(col("key"), col("value"), col("ts"), lit(0).as("side"))
-    val r0 = rhs.select(col("key"), col("value"), col("ts"), lit(1).as("side"))
-    val (tagged, partCols) =
-      if (saltBuckets == 1) (l0.unionByName(r0), Seq(col("key")))
-      else {
-        val l = l0.withColumn("salt",
-          pmod(xxhash64(col("value"), col("ts")), lit(saltBuckets.toLong)).cast("int"))
-        val r = r0.withColumn("salt",
-          explode(sequence(lit(0), lit(saltBuckets - 1))))
-        (l.unionByName(r), Seq(col("key"), col("salt")))
-      }
+    val (tagged, partCols) = saltedUnion(
+      lhs.select(col("key"), col("value"), col("ts"), lit(0).as("side")),
+      rhs.select(col("key"), col("value"), col("ts"), lit(1).as("side")), saltBuckets)
     // Desc-ts order: rights with r.ts >= l.ts precede their left; the
     // nearest (smallest eligible ts) is the LAST seen, so the accumulating
     // (unboundedPreceding, currentRow) frame applies. At equal ts, side

@@ -179,14 +179,16 @@ object Corpus {
     s"CAST((instr('0123456789abcdef', substring(md5(${sqlLit(salt)} || $idCol::VARCHAR), 1, 1)) - 1) * 16 " +
       s"+ (instr('0123456789abcdef', substring(md5(${sqlLit(salt)} || $idCol::VARCHAR), 2, 1)) - 1) AS INT)"
 
+  /** The train/val/test split of a [[hashBucket]] value. */
+  private def splitOf(bucket: Column): Column =
+    when(bucket < TrainUpto, lit("train")).when(bucket < ValUpto, lit("val"))
+      .otherwise(lit("test"))
+
   /** (doc_id, split_bucket, split): deterministic train/val/test
    * assignment. */
   def sampleSplit(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), hashBucket("doc_id").as("split_bucket"))
-      .withColumn("split",
-        when(col("split_bucket") < TrainUpto, lit("train"))
-          .when(col("split_bucket") < ValUpto, lit("val"))
-          .otherwise(lit("test")))
+      .withColumn("split", splitOf(col("split_bucket")))
 
   def sampleSplitSql(table: String): String =
     s"""SELECT doc_id, split_bucket,
@@ -212,10 +214,7 @@ object Corpus {
   def clusterSafeSplit(labeled: DataFrame): DataFrame =
     labeled.select(col("doc_id"), col("cluster_id"),
         hashBucket("cluster_id", ClusterSplitSalt).as("split_bucket"))
-      .withColumn("split",
-        when(col("split_bucket") < TrainUpto, lit("train"))
-          .when(col("split_bucket") < ValUpto, lit("val"))
-          .otherwise(lit("test")))
+      .withColumn("split", splitOf(col("split_bucket")))
 
   def clusterSafeSplitSql(labeledSql: String): String =
     s"""SELECT doc_id, cluster_id, split_bucket,

@@ -272,22 +272,29 @@ object Relational {
    * doubles are 2-decimal prices with representation noise 11 digits
    * below the (18,6) rounding position, so both engines round
    * identically — the [[pricingSummary]] determinism note). */
-  def sessionizeEvents(s: SparkSession, dir: String): DataFrame = {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("new_s",
-        when(col("gap_us").isNull || col("gap_us") > SessionGapUs, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_s")).over(run))
+  def sessionizeEvents(s: SparkSession, dir: String): DataFrame =
+    withSessions(Tables.events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts"), col("value")))
       .groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("ts")).as("session_start"),
         max(col("ts")).as("session_end"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-  }
+
+  /** A user's events in time order (ties by event_id). */
+  private def sessionOrder = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+
+  /** `ev` with its events numbered into sessions along [[sessionOrder]]:
+   * `gap_us` to the user's previous event, `new_s` = 1 where a session
+   * starts (a user's first event, or a gap over [[SessionGapUs]]), and
+   * `session_id` = the running sum of `new_s`. */
+  private def withSessions(ev: DataFrame): DataFrame =
+    ev.withColumn("gap_us",
+        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(sessionOrder))
+      .withColumn("new_s",
+        when(col("gap_us").isNull || col("gap_us") > SessionGapUs, 1L).otherwise(0L))
+      .withColumn("session_id", sum(col("new_s")).over(
+        sessionOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
 
   def sessionizeEventsSql: String =
     s"""WITH flagged AS (
@@ -324,23 +331,15 @@ object Relational {
    * pair. Transition-matrix cardinality is |event_type|², tiny at any
    * corpus scale, so the final aggregate is map-side-combined to
    * near-nothing before its exchange. */
-  def sessionTransitions(s: SparkSession, dir: String): DataFrame = {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("new_s",
-        when(col("gap_us").isNull || col("gap_us") > SessionGapUs, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("new_s")).over(run))
-      .withColumn("to_type", lead(col("event_type"), 1).over(order))
-      .withColumn("to_session", lead(col("session_id"), 1).over(order))
+  def sessionTransitions(s: SparkSession, dir: String): DataFrame =
+    withSessions(Tables.events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts"), col("event_type")))
+      .withColumn("to_type", lead(col("event_type"), 1).over(sessionOrder))
+      .withColumn("to_session", lead(col("session_id"), 1).over(sessionOrder))
       .filter(col("to_type").isNotNull && col("to_session") === col("session_id"))
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n_transitions"))
       .select(col("from_type"), col("to_type"), col("n_transitions"))
-  }
 
   def sessionTransitionsSql: String =
     s"""WITH flagged AS (
@@ -1234,20 +1233,6 @@ object Relational {
        |       count(*) AS n, min(value) AS min_v, max(value) AS max_v
        |FROM events GROUP BY event_type, CAST(floor(value / $HistBinWidth) AS BIGINT)""".stripMargin
 
-  // ---- weekly cohort retention ---------------------------------------------
-
-  /** Classic cohort-retention matrix over the events table: users
-   * grouped by first-seen week, counted in every week they return.
-   * The engagement table every growth dashboard draws, and a second
-   * multi-level temporal aggregate (beyond [[funnelStages]]) exercising
-   * truncation + self-alignment at scale.
-   *
-   * Shape: ALL heavy shuffles are keyed on `user_id` — the per-user
-   * cohort aggregate, then the events-side join back (co-partitioned;
-   * AQE picks the join strategy), then the (cohort, week, user) distinct
-   * whose keys are user-uniform. The final (cohort, week) rollup is
-   * O(weeks²) rows. `week_offset` is an integer day difference DIV 7 —
-   * no float anywhere. Week truncation is ISO-Monday in both engines. */
   /** Robust dispersion profile per event type: exact median and MAD
    * (median absolute deviation) of `value` — the outlier-resistant
    * (median, MAD) pair that replaces (mean, σ) when the stream carries
@@ -1780,6 +1765,20 @@ object Relational {
       |       CAST(n_events * 168 AS DOUBLE) / CAST(n_total AS DOUBLE) AS load
       |FROM cells, tot""".stripMargin
 
+  // ---- weekly cohort retention ---------------------------------------------
+
+  /** Classic cohort-retention matrix over the events table: users
+   * grouped by first-seen week, counted in every week they return.
+   * The engagement table every growth dashboard draws, and a second
+   * multi-level temporal aggregate (beyond [[funnelStages]]) exercising
+   * truncation + self-alignment at scale.
+   *
+   * Shape: ALL heavy shuffles are keyed on `user_id` — the per-user
+   * cohort aggregate, then the events-side join back (co-partitioned;
+   * AQE picks the join strategy), then the (cohort, week, user) distinct
+   * whose keys are user-uniform. The final (cohort, week) rollup is
+   * O(weeks²) rows. `week_offset` is an integer day difference DIV 7 —
+   * no float anywhere. Week truncation is ISO-Monday in both engines. */
   def userRetention(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))

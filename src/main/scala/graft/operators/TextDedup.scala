@@ -826,6 +826,13 @@ object TextDedup {
    * quadratic. Bounds per-gram join fan-out at DfMax·(DfMax−1)/2 pairs. */
   val DfMax = 8
 
+  /** Content-defined sampling rate: keep a gram iff its md5 starts with
+   * hex 0-3 (1 in 4). Shift-invariant (unlike strided sampling — a one
+   * char insertion would desynchronize stride positions), so near-dups
+   * sample the same grams from shared runs; Jaccard is then defined over
+   * the sampled sets, mirrored exactly by the oracle. */
+  val SampleHexMax = 4
+
   /** Near-duplicate pairs by character-n-gram Jaccard with an
    * inverted-index candidate stage (the scalable shape: an earlier
    * length-blocked all-pairs version was quadratic within blocks —
@@ -841,13 +848,6 @@ object TextDedup {
    * a qualifying pair whose every shared gram is globally common is
    * missed — the oracle mirrors the same candidate rule, and planted
    * near-dups always share rare grams. */
-  /** Content-defined sampling rate: keep a gram iff its md5 starts with
-   * hex 0-3 (1 in 4). Shift-invariant (unlike strided sampling — a one
-   * char insertion would desynchronize stride positions), so near-dups
-   * sample the same grams from shared runs; Jaccard is then defined over
-   * the sampled sets, mirrored exactly by the oracle. */
-  val SampleHexMax = 4
-
   def ngramJaccard(docs: DataFrame): DataFrame =
     ngramCandidatesVerified(docs)
       .select(col("id_a"), col("id_b"),
@@ -1329,20 +1329,6 @@ object TextDedup {
   /** Histogram bins per unit of Jaccard in [[neardupSimHist]] (width 0.02). */
   val SimHistBins = 50
 
-  /** Similarity histogram of the verified near-dup pairs — the
-   * threshold-tuning curve for the MinHash dedup family: the
-   * distribution of exact Jaccard over [[minhashLsh]]'s surviving pairs
-   * shows whether [[MinHashThreshold]] sits in a natural valley (a
-   * bimodal near-1.0 cluster of true dups vs a shoulder of coincidental
-   * overlap) or is cutting through a mode — read it BEFORE moving the
-   * dial. Output (bin, bin_lo, n_pairs, min_jaccard, max_jaccard) for
-   * 0.02-wide bins; exact 1.0 lands in its own top bin.
-   *
-   * Shape: the dedup pipeline unchanged (its plan is pinned in its own
-   * entry) plus ONE partial-agg groupBy to O([[SimHistBins]]) rows.
-   * `floor()` BEFORE the cast pins the Spark-truncate vs DuckDB-round
-   * cast divergence; min/max of the one-divide Jaccard doubles are
-   * order-free. */
   /** Source-mix of the near-duplicate graph: every minhash near-dup
    * pair classified by its endpoints' (sorted) source pair — the
    * mirror-vs-repost diagnostic: mass ON the diagonal (same source
@@ -1385,6 +1371,20 @@ object TextDedup {
        |JOIN $table db ON db.doc_id = p.id_b
        |GROUP BY 1, 2""".stripMargin
 
+  /** Similarity histogram of the verified near-dup pairs — the
+   * threshold-tuning curve for the MinHash dedup family: the
+   * distribution of exact Jaccard over [[minhashLsh]]'s surviving pairs
+   * shows whether [[MinHashThreshold]] sits in a natural valley (a
+   * bimodal near-1.0 cluster of true dups vs a shoulder of coincidental
+   * overlap) or is cutting through a mode — read it BEFORE moving the
+   * dial. Output (bin, bin_lo, n_pairs, min_jaccard, max_jaccard) for
+   * 0.02-wide bins; exact 1.0 lands in its own top bin.
+   *
+   * Shape: the dedup pipeline unchanged (its plan is pinned in its own
+   * entry) plus ONE partial-agg groupBy to O([[SimHistBins]]) rows.
+   * `floor()` BEFORE the cast pins the Spark-truncate vs DuckDB-round
+   * cast divergence; min/max of the one-divide Jaccard doubles are
+   * order-free. */
   def neardupSimHist(docs: DataFrame): DataFrame =
     minhashLsh(docs)
       .select(col("jaccard"),

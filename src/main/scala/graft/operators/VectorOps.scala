@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.storage.StorageLevel
@@ -145,6 +146,25 @@ object VectorOps {
   private def queryBoundSql: String =
     s"vec_id % $QueryStride = 0 AND vec_id < ${QueryStride.toLong * QueryBudget}"
 
+  /** The bounded query set of a (vec_id, q, n2, …) frame as
+   * (query_id, qq, nq, `more`…). */
+  private def queriesOf(qn: DataFrame, more: Column*): DataFrame =
+    qn.filter(queryBound)
+      .select(Seq(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq")) ++ more: _*)
+
+  /** A scored (query_id, neighbor_id, sim, …) frame's top-`k` rows per
+   * query by (sim desc, neighbor_id), numbered 1..k in `rank`. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+
+  /** [[topK]] as the ANN output (query_id, neighbor_id, rank, sim). */
+  private def topKNeighbors(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"), col("sim"))
+
   /** (vec_id, q, n2) projection — the one narrow map-side pass over the
    * corpus that everything else builds on.
    *
@@ -281,22 +301,6 @@ object VectorOps {
     }: _*)
   }
 
-  /** Near-duplicate pairs with cosine ≥ `threshold`, candidates blocked
-   * by banded hyperplane LSH with corpus-derived (R, B) — see
-   * [[bandTableFor]]. The threshold is the OPERATING POINT, not a
-   * constant: it fixes the per-plane agreement probability, hence the
-   * band table AND the deepest affordable R ([[bandRowsMaxFor]]) — the
-   * checked query runs at this corpus's measured [[NearDupSim]] = 0.4,
-   * a production crawl dedup at c ≥ 0.9 gets R up to 24 and
-   * non-degenerate buckets to ~4×10⁹ vectors from the same plane budget.
-   * Candidate generation is [[TextDedup.boundedBucketPairs]]: ONE
-   * groupBy shuffle on the band key with the [[NearDupMaxBucket]] cap
-   * enforced before any list is collected, oversize drops surfacing as
-   * observed metrics (`graft_embneardup_buckets`). Only in-bucket pairs
-   * pay the exact-cosine verify. Documented approximation (mirrored
-   * exactly by the oracle): a qualifying pair agreeing on no band is
-   * missed — 1 − recall ≈ 10% worst-case AT the threshold, much less
-   * above it. Output (id_a, id_b, sim), id_a < id_b. */
   /** Broadcast budget for the verify side's (vec_id, q, n2) relation, in
    * rows: a row is ~550 B (64 longs + hash-map overhead), so 49152 rows
    * ≈ 27 MB — comfortably broadcastable. Below the budget both verify
@@ -318,6 +322,22 @@ object VectorOps {
   private def vecJoinSide(n: Long): DataFrame => DataFrame =
     d => if (n <= NearDupBroadcastRows) broadcast(d) else d.hint("shuffle_hash")
 
+  /** Near-duplicate pairs with cosine ≥ `threshold`, candidates blocked
+   * by banded hyperplane LSH with corpus-derived (R, B) — see
+   * [[bandTableFor]]. The threshold is the OPERATING POINT, not a
+   * constant: it fixes the per-plane agreement probability, hence the
+   * band table AND the deepest affordable R ([[bandRowsMaxFor]]) — the
+   * checked query runs at this corpus's measured [[NearDupSim]] = 0.4,
+   * a production crawl dedup at c ≥ 0.9 gets R up to 24 and
+   * non-degenerate buckets to ~4×10⁹ vectors from the same plane budget.
+   * Candidate generation is [[TextDedup.boundedBucketPairs]]: ONE
+   * groupBy shuffle on the band key with the [[NearDupMaxBucket]] cap
+   * enforced before any list is collected, oversize drops surfacing as
+   * observed metrics (`graft_embneardup_buckets`). Only in-bucket pairs
+   * pay the exact-cosine verify. Documented approximation (mirrored
+   * exactly by the oracle): a qualifying pair agreeing on no band is
+   * missed — 1 − recall ≈ 10% worst-case AT the threshold, much less
+   * above it. Output (id_a, id_b, sim), id_a < id_b. */
   def embeddingNearDup(embeddings: DataFrame,
                        threshold: Double = NearDupSim): DataFrame = {
     val table = bandTableFor(threshold)
@@ -611,17 +631,10 @@ object VectorOps {
    * never shuffles; ranking shuffles only (query × k) candidate rows. */
   def annBruteTopK(embeddings: DataFrame): DataFrame = {
     val qn = quantized(embeddings)
-    val queries = qn.filter(queryBound)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-    val scored = broadcast(queries).join(qn, col("query_id") =!= col("vec_id"))
+    val scored = broadcast(queriesOf(qn)).join(qn, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim"))
-    scored
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= BruteK)
-      .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"), col("sim"))
+    topKNeighbors(scored, BruteK)
   }
 
   def annBruteTopKSql(table: String): String =
@@ -663,27 +676,25 @@ object VectorOps {
    * scoring stage for [[annIvfTopK]]'s cell-local candidates; the vote
    * stage is unchanged. */
   def knnLabel(embeddings: DataFrame): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val corpus = embeddings
-      .select(col("vec_id"), quantize(col("embedding")).as("q"), col("label"))
-      .select(col("vec_id"), col("q"), norm2(col("q")).as("n2"), col("label"))
-    val queries = corpus.filter(queryBound)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-    val scored = broadcast(queries).join(corpus, col("query_id") =!= col("vec_id"))
+    val corpus = labeledCorpus(embeddings)
+    val scored = broadcast(queriesOf(corpus)).join(corpus, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
         cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim"))
-    val topk = scored
-      .withColumn("rank", row_number().over(
-        W.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= KnnK)
-    topk.groupBy(col("query_id"), col("label"))
+    topK(scored, KnnK).groupBy(col("query_id"), col("label"))
       .agg(count(lit(1)).as("votes"), max(col("sim")).as("best_sim"))
       .withColumn("vr", row_number().over(
-        W.partitionBy("query_id").orderBy(col("votes").desc, col("label").asc)))
+        Window.partitionBy("query_id").orderBy(col("votes").desc, col("label").asc)))
       .filter(col("vr") === 1)
       .select(col("query_id"), col("label").cast("bigint").as("pred_label"),
         col("votes"), col("best_sim"))
   }
+
+  /** (vec_id, q, n2, label): the quantized corpus with its labels, from
+   * one scan. */
+  private def labeledCorpus(embeddings: DataFrame): DataFrame =
+    embeddings
+      .select(col("vec_id"), quantize(col("embedding")).as("q"), col("label"))
+      .select(col("vec_id"), col("q"), norm2(col("q")).as("n2"), col("label"))
 
   def knnLabelSql(table: String): String =
     s"""WITH ${quantizedSql(table)},
@@ -736,13 +747,8 @@ object VectorOps {
    * scored relation (persisted, so the corpus is scanned once), and
    * the final join brokers queries × k rows. */
   def hardNegatives(embeddings: DataFrame): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val corpus = embeddings
-      .select(col("vec_id"), quantize(col("embedding")).as("q"), col("label"))
-      .select(col("vec_id"), col("q"), norm2(col("q")).as("n2"), col("label"))
-    val queries = corpus.filter(queryBound)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        col("n2").as("nq"), col("label").as("qlabel"))
+    val corpus = labeledCorpus(embeddings)
+    val queries = queriesOf(corpus, col("label").as("qlabel"))
     val scored = broadcast(queries).join(corpus, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (col("label") === col("qlabel")).as("same"),
@@ -750,10 +756,7 @@ object VectorOps {
       .persist()
     val pos = scored.filter(col("same"))
       .groupBy(col("query_id")).agg(max(col("sim")).as("pos_sim"))
-    scored.filter(!col("same"))
-      .withColumn("rank", row_number().over(
-        W.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= HardNegK)
+    topK(scored.filter(!col("same")), HardNegK)
       .join(pos, Seq("query_id"), "left")
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("bigint").as("rank"), col("sim"),
@@ -841,20 +844,12 @@ object VectorOps {
   def annLshTopK(embeddings: DataFrame): DataFrame = {
     val planes = lshPlanesFor(corpusSize(embeddings))
     val qb = quantized(embeddings).withColumn("bucket", lshBucket(col("q"), planes))
-    val queries = qb.filter(queryBound)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        col("n2").as("nq"), col("bucket"))
-    val scored = queries
+    val scored = queriesOf(qb, col("bucket"))
       .join(qb, Seq("bucket"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim"))
-    scored
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= LshK)
-      .select(col("query_id"), col("neighbor_id"), col("rank").cast("bigint").as("rank"), col("sim"))
+    topKNeighbors(scored, LshK)
   }
 
   // ---- 4. IVF-flat ANN (the cluster-structure scale path) ------------------
@@ -898,6 +893,61 @@ object VectorOps {
     math.max(IvfCentroidStride.toLong, (math.max(n, 1L) + c - 1) / c)
   }
 
+  /** Nearest-centroid assignment (vec_id, cid, sim) by cosine, smallest
+   * cid on ties: a map-side arg-max over a (sim, −cid) struct — the
+   * broadcast join's output is still partitioned by the corpus scan, so
+   * the partial aggregate reduces N·C rows to N before any exchange.
+   * Shared by the IVF index build, [[kmeansAssign]] and
+   * [[semanticDedup]]'s clustering stage. */
+  private def nearestCentroid(qn: DataFrame, cents: DataFrame): DataFrame =
+    qn.crossJoin(broadcast(cents))
+      .select(col("vec_id"), struct(
+        cosine(dot(col("q"), col("cq")), col("n2"), col("cn2")).as("sim"),
+        (lit(0L) - col("cid")).as("ncid")).as("sc"))
+      .groupBy("vec_id").agg(max("sc").as("m"))
+      .select(col("vec_id"), (lit(0L) - col("m.ncid")).as("cid"), col("m.sim").as("sim"))
+
+  /** Seed centroids (cid, cq, cn2): every `stride`-th vector of `qn`. */
+  private def seedCentroids(qn: DataFrame, stride: Long): DataFrame =
+    qn.filter(col("vec_id") % stride === 0)
+      .select(col("vec_id").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
+
+  /** Each (query_id, qq, nq, …) query × the broadcast centroids, kept for
+   * the query's [[IvfProbes]] nearest centroids (smallest cid on ties). */
+  private def probeCells(queries: DataFrame, cents: DataFrame): DataFrame =
+    queries.crossJoin(broadcast(cents))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("query_id")
+          .orderBy(cosine(dot(col("qq"), col("cq")), col("nq"), col("cn2")).desc, col("cid"))))
+      .filter(col("rn") <= IvfProbes)
+
+  /** Oracle CTE pair `params`/`cents` — the derived stride and the seed
+   * centroid set. Shared by [[ivfAssignSql]] and [[kmeansAssignSql]];
+   * expects `qn` in scope. */
+  private def ivfCentsSql(table: String): String =
+    s"""params AS (SELECT GREATEST($IvfCentroidStride, (n + c - 1) // c) AS stride
+       |           FROM (SELECT count(*) AS n,
+       |                        LEAST(CAST(CEIL(SQRT(count(*))) AS BIGINT),
+       |                              $IvfCentroidBudget) AS c
+       |                 FROM $table)),
+       |cents AS (SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM qn
+       |          WHERE vec_id % (SELECT stride FROM params) = 0)""".stripMargin
+
+  /** Oracle CTE chain `params`/`cents`/`assign` shared by
+   * [[annIvfTopKSql]] and [[semanticDedupSql]]: the same derived stride,
+   * seed centroids, and rn=1 nearest-centroid pick (ORDER BY sim DESC,
+   * cid ASC ≡ the Spark struct-max on (sim, −cid)). Expects `qn` in
+   * scope. */
+  private def ivfAssignSql(table: String): String =
+    s"""${ivfCentsSql(table)},
+       |assign AS (
+       |  SELECT vec_id, q, n2, cid FROM (
+       |    SELECT v.vec_id, v.q, v.n2, c.cid,
+       |           row_number() OVER (PARTITION BY v.vec_id
+       |             ORDER BY ${cosineSql(dotSql("v.q", "c.cq"), "v.n2", "c.cn2")} DESC, c.cid ASC) AS rn
+       |    FROM qn v CROSS JOIN cents c)
+       |  WHERE rn = 1)""".stripMargin
+
   /** Approximate top-[[IvfK]] by IVF-flat: each corpus vector is assigned
    * to its nearest centroid (inverted lists), a query scans only its
    * [[IvfProbes]] nearest lists. Complements [[annLshTopK]]: hyperplane
@@ -914,72 +964,18 @@ object VectorOps {
    * pins the search join as an equi-join and forbids CartesianProduct);
    * the search itself is a plain equi-join on `cid`, shuffling only
    * probed lists. Output (query_id, neighbor_id, rank, sim). */
-  /** Nearest-centroid assignment (vec_id → cid) by cosine, smallest cid on
-   * ties: a map-side arg-max over a (sim, −cid) struct — the broadcast
-   * join's output is still partitioned by the corpus scan, so the partial
-   * aggregate reduces N·C rows to N before any exchange. Shared by the
-   * IVF index build and [[semanticDedup]]'s clustering stage. */
-  private def nearestCentroid(qn: DataFrame, cents: DataFrame): DataFrame =
-    qn.crossJoin(broadcast(cents))
-      .select(col("vec_id"), struct(
-        cosine(dot(col("q"), col("cq")), col("n2"), col("cn2")).as("sim"),
-        (lit(0L) - col("cid")).as("ncid")).as("sc"))
-      .groupBy("vec_id").agg(max("sc").as("m"))
-      .select(col("vec_id"), (lit(0L) - col("m.ncid")).as("cid"))
-
-  /** Oracle CTE chain `params`/`cents`/`assign` shared by
-   * [[annIvfTopKSql]] and [[semanticDedupSql]]: the same derived stride,
-   * seed centroids, and rn=1 nearest-centroid pick (ORDER BY sim DESC,
-   * cid ASC ≡ the Spark struct-max on (sim, −cid)). Expects `qn` in
-   * scope. */
-  /** Oracle CTE pair `params`/`cents` — the derived stride and the seed
-   * centroid set. Shared by [[ivfAssignSql]] and [[kmeansAssignSql]];
-   * expects `qn` in scope. */
-  private def ivfCentsSql(table: String): String =
-    s"""params AS (SELECT GREATEST($IvfCentroidStride, (n + c - 1) // c) AS stride
-       |           FROM (SELECT count(*) AS n,
-       |                        LEAST(CAST(CEIL(SQRT(count(*))) AS BIGINT),
-       |                              $IvfCentroidBudget) AS c
-       |                 FROM $table)),
-       |cents AS (SELECT vec_id AS cid, q AS cq, n2 AS cn2 FROM qn
-       |          WHERE vec_id % (SELECT stride FROM params) = 0)""".stripMargin
-
-  private def ivfAssignSql(table: String): String =
-    s"""${ivfCentsSql(table)},
-       |assign AS (
-       |  SELECT vec_id, q, n2, cid FROM (
-       |    SELECT v.vec_id, v.q, v.n2, c.cid,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |             ORDER BY ${cosineSql(dotSql("v.q", "c.cq"), "v.n2", "c.cn2")} DESC, c.cid ASC) AS rn
-       |    FROM qn v CROSS JOIN cents c)
-       |  WHERE rn = 1)""".stripMargin
-
   def annIvfTopK(embeddings: DataFrame): DataFrame = {
     val stride = ivfStrideFor(corpusSize(embeddings))
     val qn = quantized(embeddings).persist() // feeds centroids, assignment, queries
-    val cents = qn.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
+    val cents = seedCentroids(qn, stride)
     val assign = nearestCentroid(qn, cents)
       .join(qn, "vec_id") // recover (q, n2) for the verify stage
-    val queries = qn.filter(queryBound)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
-    val probed = queries.crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(cosine(dot(col("qq"), col("cq")), col("nq"), col("cn2")).desc,
-                   col("cid"))))
-      .filter(col("rn") <= IvfProbes)
+    val probed = probeCells(queriesOf(qn), cents)
       .select(col("query_id"), col("qq"), col("nq"), col("cid"))
-    probed.join(assign, Seq("cid"))
+    topKNeighbors(probed.join(assign, Seq("cid"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= IvfK)
-      .select(col("query_id"), col("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
+        cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim")), IvfK)
   }
 
   def annIvfTopKSql(table: String): String =
@@ -1035,7 +1031,6 @@ object VectorOps {
    * PERSISTED across its four consumers (centroids, assignment,
    * queries, verify) — one tokenize+embed pass. */
   def retrievalPlan(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val chunks = Corpus.docChunks(docs)
     val qn = chunks.select(
         (col("doc_id") * RetrChunkIdBase + col("chunk_id")).as("cvid"),
@@ -1056,22 +1051,12 @@ object VectorOps {
         col("doc_id") < lit(QueryStride.toLong * QueryBudget))
       .select(col("cvid").as("query_id"), col("doc_id").as("qdoc"),
         col("q").as("qq"), col("n2").as("nq"))
-    val probed = queries.crossJoin(broadcast(cents))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(cosine(dot(col("qq"), col("cq")), col("nq"), col("cn2")).desc,
-            col("cid"))))
-      .filter(col("rn") <= IvfProbes)
+    val probed = probeCells(queries, cents)
       .select(col("query_id"), col("qdoc"), col("qq"), col("nq"), col("cid"))
-    probed.join(assign, Seq("cid"))
+    topKNeighbors(probed.join(assign, Seq("cid"))
       .filter(col("doc_id") =!= col("qdoc")) // retrieval, not self-lookup: exclude the query's own document
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))))
-      .filter(col("rank") <= RetrK)
-      .select(col("query_id"), col("neighbor_id"),
-        col("rank").cast("bigint").as("rank"), col("sim"))
+        cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim")), RetrK)
   }
 
   /** Oracle — nests [[Corpus.docChunksSql]] verbatim as the chunk
@@ -1260,12 +1245,10 @@ object VectorOps {
     val n = corpusSize(embeddings)
     val stride = ivfStrideFor(n)
     val qn = quantized(embeddings).persist() // feeds centroids, assignment, verify
-    val cents = qn.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
     // persist: the N·C assignment feeds BOTH the candidate postings and
     // the final verdict join — without it the most expensive stage runs
     // twice (boundedBucketPairs' own persist only covers the pair branch)
-    val assign = nearestCentroid(qn, cents).persist()
+    val assign = nearestCentroid(qn, seedCentroids(qn, stride)).drop("sim").persist()
     // per-cluster sub-band parameters: ONE count aggregate over the
     // assignment, ≤ centroid-count rows — always broadcastable
     val sizes = assign.groupBy("cid").agg(count(lit(1)).as("csize"))
@@ -1624,15 +1607,12 @@ object VectorOps {
       quantize(col("embedding")).as("q"), coarse.as("q8"))
     val qn = base.select(col("vec_id"), col("q"), col("q8"),
       norm2(col("q")).as("n2"), norm2(col("q8")).as("m2"))
-    val queries = qn.filter(queryBound)
-      .select(col("vec_id").as("query_id"),
-        col("q").as("qq"), col("n2").as("nq"),
-        col("q8").as("qq8"), col("m2").as("mq"))
+    val queries = queriesOf(qn, col("q8").as("qq8"), col("m2").as("mq"))
     val scored = broadcast(queries).join(qn, col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(dot(col("qq"), col("q")), col("nq"), col("n2")).as("sim"),
         cosine(dot(col("qq8"), col("q8")), col("mq"), col("m2")).as("sim8"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+    val w = Window.partitionBy("query_id")
     val ranked = scored
       .withColumn("rk", row_number().over(w.orderBy(col("sim").desc, col("neighbor_id"))))
       .withColumn("rk8", row_number().over(w.orderBy(col("sim8").desc, col("neighbor_id"))))
@@ -1690,15 +1670,7 @@ object VectorOps {
   def kmeansAssign(embeddings: DataFrame): DataFrame = {
     val stride = ivfStrideFor(corpusSize(embeddings))
     val qn = quantized(embeddings)
-    val cents = qn.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
-    qn.crossJoin(broadcast(cents))
-      .select(col("vec_id"), struct(
-        cosine(dot(col("q"), col("cq")), col("n2"), col("cn2")).as("sim"),
-        (lit(0L) - col("cid")).as("ncid")).as("sc"))
-      .groupBy("vec_id").agg(max("sc").as("m"))
-      .select(col("vec_id"), (lit(0L) - col("m.ncid")).as("cid"),
-        col("m.sim").as("sim"))
+    nearestCentroid(qn, seedCentroids(qn, stride))
   }
 
   /** The arg-max is a STREAMING struct-max group-by — the same
@@ -1825,8 +1797,7 @@ object VectorOps {
    * commutative-associative). */
   def semanticDecontaminate(embeddings: DataFrame): DataFrame = {
     val qn = quantized(embeddings)
-    val queries = qn.filter(queryBound)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("nq"))
+    val queries = queriesOf(qn)
     // the corpus side excludes the WHOLE eval-bounded set, not just self:
     // two eval vectors that merely resemble each other are benchmark
     // redundancy, not training-data leakage, and must not inflate
@@ -1944,6 +1915,12 @@ object VectorOps {
   private def sortedArrAgg(d: Column, v: Column): Column =
     transform(array_sort(collect_list(struct(d.as("d"), v.as("v")))),
       x => x.getField("v"))
+
+  /** One row of [[embPcaPower]]'s mean (`m_arr`) and v₂ iterate
+   * (`v_arr`) as dim-ordered arrays, plus the `more` aggregates. */
+  private def pcaArrays(pca: DataFrame, more: Column*): DataFrame =
+    pca.agg(sortedArrAgg(col("dim"), col("mean_q")).as("m_arr"),
+      sortedArrAgg(col("dim"), col("v2_fx")).as("v_arr") +: more: _*)
 
   /** The chain itself; returns (result, every frame this call persisted,
    * leaf→root) so [[embPcaPower]] can re-persist the chain after a
@@ -2136,10 +2113,7 @@ object VectorOps {
 
     // pass a, scan-free: deflate the chain's v₁ iterate (== pass a's
     // normalized mat-vec, see scaladoc) against v = v₂ on one row
-    val u1 = pca.agg(
-      sortedArrAgg(col("dim"), col("mean_q")).as("m_arr"),
-      sortedArrAgg(col("dim"), col("v2_fx")).as("v_arr"),
-      sortedArrAgg(col("dim"), col("v1_fx")).as("wn_arr"))
+    val u1 = pcaArrays(pca, sortedArrAgg(col("dim"), col("v1_fx")).as("wn_arr"))
       .withColumn("vv", dot(col("v_arr"), col("v_arr"))) // ≤ Dim·2^40 = 2^46
       .withColumn("vw", dot(col("v_arr"), col("wn_arr"))) // ≤ Dim·2^40 = 2^46
       // division-free deflation: w' = (v·v)·wn − (v·wn)·v — exact
@@ -2259,11 +2233,7 @@ object VectorOps {
   def pcaResidualOutliers(embeddings: DataFrame): DataFrame = {
     val qn = quantized(embeddings)
     val pca = embPcaPower(embeddings)
-    val aux = pca.agg(
-      transform(array_sort(collect_list(struct(col("dim").as("d"), col("mean_q").as("v")))),
-        x => x.getField("v")).as("m_arr"),
-      transform(array_sort(collect_list(struct(col("dim").as("d"), col("v2_fx").as("v")))),
-        x => x.getField("v")).as("v_arr"))
+    val aux = pcaArrays(pca)
       .select(col("m_arr"), col("v_arr"),
         dot(col("m_arr"), col("m_arr")).as("mm"),
         dot(col("m_arr"), col("v_arr")).as("kv"),
@@ -2328,11 +2298,7 @@ object VectorOps {
    * O(labels) rows. */
   def labelSpectralDrift(embeddings: DataFrame): DataFrame = {
     val pca = embPcaPower(embeddings)
-    val aux = pca.agg(
-      transform(array_sort(collect_list(struct(col("dim").as("d"), col("mean_q").as("v")))),
-        x => x.getField("v")).as("m_arr"),
-      transform(array_sort(collect_list(struct(col("dim").as("d"), col("v2_fx").as("v")))),
-        x => x.getField("v")).as("v_arr"))
+    val aux = pcaArrays(pca)
       .select(col("v_arr"), dot(col("m_arr"), col("v_arr")).as("kv"))
     embeddings
       .select(col("label"), quantize(col("embedding")).as("q"))

@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /**
  * SQL surface for the native expressions: register as
@@ -25,6 +27,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plain-SQL bounded edit-distance predicates get the banded DP
     ext.injectOptimizerRule(_ => LevenshteinThresholdRule)
   }
+}
+
+/** An optimizer rule [[GraftExtensions]] injects at session build that can
+ * also attach to a LIVE session (extension injection only happens at
+ * session build; mirrors [[GraftFunctions.register]]). */
+private[plans] abstract class SessionRule extends Rule[LogicalPlan] {
+  /** Idempotent. */
+  def register(spark: SparkSession): Unit =
+    if (!spark.experimental.extraOptimizations.contains(this)) {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ this
+    }
 }
 
 object GraftFunctions {

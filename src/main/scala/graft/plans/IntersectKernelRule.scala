@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayIntersect, Expression, Size, SortArray}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /**
@@ -28,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType}
  * `spark.sql.legacy.sizeOfNull=true` returns −1 for NULL where the
  * kernel returns NULL, so legacy-mode `Size` nodes are also skipped.
  */
-object IntersectKernelRule extends Rule[LogicalPlan] {
+object IntersectKernelRule extends SessionRule {
 
   /** Producers whose output arrays provably contain no duplicates. */
   private def distinctSafe(e: Expression): Boolean = e match {
@@ -49,12 +47,4 @@ object IntersectKernelRule extends Rule[LogicalPlan] {
         if stringArray(a) && stringArray(b) && distinctSafe(a) && distinctSafe(b) =>
       ArrayIntersectSize(a, b)
   }
-
-  /** Attach to a LIVE session (extension injection only happens at
-   * session build; mirrors [[GraftFunctions.register]]). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
 }

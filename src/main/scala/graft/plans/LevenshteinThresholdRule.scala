@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Levenshtein, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /**
@@ -48,7 +46,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
  * and every rewrite produces `threshold = Some(...)`, so a second
  * optimizer pass finds nothing to do.
  */
-object LevenshteinThresholdRule extends Rule[LogicalPlan] {
+object LevenshteinThresholdRule extends SessionRule {
 
   /** `levenshtein(a, b)` with no threshold, bare or under an exact
    * INT→BIGINT widening cast (never lossy, any eval mode). */
@@ -87,12 +85,4 @@ object LevenshteinThresholdRule extends Rule[LogicalPlan] {
     case EqualTo(IntBound(k), UnboundedLev(a, b)) if k >= 0 && k <= Int.MaxValue =>
       EqualTo(Levenshtein(a, b, Some(Literal(k.toInt))), Literal(k.toInt))
   }
-
-  /** Attach to a LIVE session (extension injection only happens at
-   * session build; mirrors [[IntersectKernelRule.register]]). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/**
+/*
  * Native Catalyst expressions for the two hot loops where composed
  * higher-order built-ins are too slow. Both compute EXACTLY the same
  * values as the built-in compositions they replace (and as the mirrored
@@ -90,6 +90,48 @@ private object LowerHex {
       i += 1
     }
     new String(out)
+  }
+}
+
+/** The distinct strings of `seen` in insertion order as a Catalyst
+ * string array — the output step of [[WordShingles]] and [[CharGramSeq]]. */
+private object StringArrayOf {
+  def apply(seen: java.util.LinkedHashSet[String]): GenericArrayData = {
+    val out = new Array[Any](seen.size)
+    val it = seen.iterator()
+    var k = 0
+    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
+    new GenericArrayData(out)
+  }
+}
+
+/** A text's tokens, in order and with repeats: lower-cased, split on
+ * `[^a-z0-9]+`, empty tokens dropped — the tokenizer of every text kernel
+ * here. */
+private object Tokens {
+  private val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
+
+  def apply(text: UTF8String): Array[String] =
+    sep.split(text.toLowerCase.toString).filter(_.nonEmpty)
+}
+
+/** The 64 per-bit sums of a text's [[Tokens]] multiset: sum j adds +1 for each token whose
+ * md5 has bit (7−j%8) of byte j/8 set, −1 otherwise — md5 once per token,
+ * 64 integer adds per token. [[HashEmbed]] returns the sums,
+ * [[SimHash64]] their signs. */
+private object TokenBitSums {
+  def apply(text: UTF8String): Array[Long] = {
+    val md = MessageDigest.getInstance("MD5")
+    val sums = new Array[Long](64)
+    Tokens(text).foreach { tok =>
+      val d = md.digest(tok.getBytes(StandardCharsets.UTF_8))
+      var j = 0
+      while (j < 64) {
+        sums(j) += 2 * ((d(j >> 3) >> (7 - (j & 7))) & 1) - 1
+        j += 1
+      }
+    }
+    sums
   }
 }
 
@@ -210,11 +252,8 @@ case class WordShingles(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
 
-  @transient private lazy val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val toks = sep.split(text).filter(_.nonEmpty)
+    val toks = Tokens(input.asInstanceOf[UTF8String])
     if (toks.length < n) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]()
     var i = 0
@@ -225,11 +264,7 @@ case class WordShingles(child: Expression, n: Int)
       seen.add(sb.toString)
       i += 1
     }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
-    new GenericArrayData(out)
+    StringArrayOf(seen)
   }
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
@@ -256,23 +291,8 @@ case class TokenSeq(child: Expression)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "token_seq"
 
-  @transient private lazy val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val toks = sep.split(text)
-    var n = 0
-    var i = 0
-    while (i < toks.length) { if (toks(i).nonEmpty) n += 1; i += 1 }
-    val out = new Array[Any](n)
-    var k = 0
-    i = 0
-    while (i < toks.length) {
-      if (toks(i).nonEmpty) { out(k) = UTF8String.fromString(toks(i)); k += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(Tokens(input.asInstanceOf[UTF8String]).map(t => UTF8String.fromString(t): Any))
 
   override protected def withNewChildInternal(newChild: Expression): TokenSeq =
     copy(child = newChild)
@@ -297,11 +317,8 @@ case class CharGramSeq(child: Expression, n: Int, sampleNibbleMax: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "char_gram_seq"
 
-  @transient private lazy val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val nt = sep.split(text).filter(_.nonEmpty).mkString(" ")
+    val nt = Tokens(input.asInstanceOf[UTF8String]).mkString(" ")
     if (nt.length < n) return new GenericArrayData(Array.empty[Any])
     val md = MessageDigest.getInstance("MD5")
     val seen = new java.util.LinkedHashSet[String]()
@@ -317,11 +334,7 @@ case class CharGramSeq(child: Expression, n: Int, sampleNibbleMax: Int)
       }
       i += 1
     }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
-    new GenericArrayData(out)
+    StringArrayOf(seen)
   }
 
   override protected def withNewChildInternal(newChild: Expression): CharGramSeq =
@@ -330,10 +343,9 @@ case class CharGramSeq(child: Expression, n: Int, sampleNibbleMax: Int)
 
 /**
  * `SimHash64(text)`: 64-char '0'/'1' SimHash string over the token
- * multiset (lower-cased, split on `[^a-z0-9]+`, empty tokens dropped).
- * Char j is '1' iff Σ_tokens (+1 if bit (7−j%8) of md5(token) byte j/8
- * is set, else −1) > 0 — bit j of md5's hex string, most significant
- * first. One native pass: md5 once per token, 64 integer adds per token.
+ * multiset. Char j is '1' iff [[TokenBitSums]]'s sum j is > 0, i.e. bit j
+ * of md5's hex string (most significant first) is set for more tokens
+ * than not.
  */
 case class SimHash64(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -341,26 +353,8 @@ case class SimHash64(child: Expression)
   override def dataType: DataType = StringType
   override def prettyName: String = "simhash64"
 
-  @transient private lazy val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val md = MessageDigest.getInstance("MD5")
-    val sums = new Array[Int](64)
-    val toks = sep.split(text)
-    var t = 0
-    while (t < toks.length) {
-      if (toks(t).nonEmpty) {
-        val d = md.digest(toks(t).getBytes(StandardCharsets.UTF_8))
-        var j = 0
-        while (j < 64) {
-          sums(j) += 2 * ((d(j >> 3) >> (7 - (j & 7))) & 1) - 1
-          j += 1
-        }
-        md.reset()
-      }
-      t += 1
-    }
+    val sums = TokenBitSums(input.asInstanceOf[UTF8String])
     val out = new Array[Char](64)
     var j = 0
     while (j < 64) { out(j) = if (sums(j) > 0) '1' else '0'; j += 1 }
@@ -373,9 +367,8 @@ case class SimHash64(child: Expression)
 
 /**
  * `HashEmbed(text)`: deterministic 64-dim integer feature-hash embedding
- * of the token multiset — dim_j = Σ_tokens (±1 by bit j of md5(token)),
- * i.e. [[SimHash64]]'s bit-sum accumulator BEFORE the sign projection,
- * exposed as ARRAY<BIGINT>. The stand-in "encoder" of the retrieval
+ * of the token multiset — dim_j = [[TokenBitSums]]'s sum j, the sums
+ * [[SimHash64]] takes the signs of, as ARRAY<BIGINT>. The stand-in "encoder" of the retrieval
  * capstone: a signed-random-projection bag-of-words embedding (feature
  * hashing, Weinberger et al. 2009) whose components both engines derive
  * exactly (integer sums of ±1), so the downstream quantized cosine top-k
@@ -392,28 +385,8 @@ case class HashEmbed(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hash_embed"
 
-  @transient private lazy val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
-  override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val md = MessageDigest.getInstance("MD5")
-    val sums = new Array[Long](64)
-    val toks = sep.split(text)
-    var t = 0
-    while (t < toks.length) {
-      if (toks(t).nonEmpty) {
-        val d = md.digest(toks(t).getBytes(StandardCharsets.UTF_8))
-        var j = 0
-        while (j < 64) {
-          sums(j) += 2 * ((d(j >> 3) >> (7 - (j & 7))) & 1) - 1
-          j += 1
-        }
-        md.reset()
-      }
-      t += 1
-    }
-    new GenericArrayData(sums)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(TokenBitSums(input.asInstanceOf[UTF8String]))
 
   override protected def withNewChildInternal(newChild: Expression): HashEmbed =
     copy(child = newChild)
@@ -446,13 +419,11 @@ case class RollingWinnow(child: Expression, w: Int, k: Int, joined: Boolean = fa
     if (joined) StringType else ArrayType(LongType, containsNull = false)
   override def prettyName: String = "rolling_winnow"
 
-  @transient private lazy val sep = java.util.regex.Pattern.compile("[^a-z0-9]+")
   /** P_j = B^(w−1−j) mod M, spliced identically into the oracle SQL. */
   @transient private lazy val powers: Array[Long] = RollingWinnow.powers(w)
 
   override def nullSafeEval(input: Any): Any = {
-    val text = input.asInstanceOf[UTF8String].toLowerCase.toString
-    val nt = sep.split(text).filter(_.nonEmpty).mkString(" ")
+    val nt = Tokens(input.asInstanceOf[UTF8String]).mkString(" ")
     val n = nt.length
     val out: Array[Long] =
       if (n < w) Array.empty[Long]

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the suite-facts drift class the round-14 and round-15 verdicts
@@ -34,6 +36,22 @@ class SuiteFactsSpec extends AnyFunSuite {
        "of the two middle samples of an even one") {
     assert(Bench.median(Seq(0.455, 0.370, 0.512)) === 0.455)
     assert(Bench.median(Seq(0.455, 0.370)) === (0.455 + 0.370) / 2)
+  }
+
+  test("every scaladoc block in src/main sits on a definition, not above another doc block") {
+    val doc = "(?s)/\\*\\*.*?\\*/".r
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root)
+    val orphans = try {
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.UTF_8)
+        doc.findAllMatchIn(text)
+          .filter(m => text.substring(m.end).dropWhile(_.isWhitespace).startsWith("/**"))
+          .map(m => s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
+      }
+    } finally files.close()
+    assert(orphans.isEmpty, s"doc blocks followed by another doc block: ${orphans.mkString(", ")}")
   }
 
   private def stub(name: String) = SparkEntry.Query(name, (s, _) => s.emptyDataFrame)

@@ -43,23 +43,32 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkTestHarness {
   }
 
   test("hash_embed equals the aggregate/zip_with composition and signs to simhash64") {
-    val r = spark.sql(
-      """SELECT hash_embed('the fast dog the') AS q,
-        |       aggregate(
-        |         transform(filter(split(lower('the fast dog the'), '[^a-z0-9]+'), t -> t != ''), tk -> md5(tk)),
-        |         array_repeat(0L, 64),
-        |         (acc, h) -> zip_with(acc, sequence(0, 63), (a, j) ->
-        |           a + 2 * (shiftright(instr('0123456789abcdef', substring(h, (j DIV 4) + 1, 1)) - 1,
-        |                               3 - (j % 4)) & 1) - 1)) AS ref,
-        |       simhash64('the fast dog the') AS sig,
-        |       hash_embed('') AS empty""".stripMargin).head()
-    val q = r.getSeq[Long](0)
-    assert(q === r.getSeq[Long](1))
-    assert(q.length === 64)
-    // parity: |sum| of 4 tokens is even, never 0-crossing ambiguity here;
-    // the sign projection of the sums IS the SimHash bit string
-    assert(q.map(s => if (s > 0) '1' else '0').mkString === r.getString(2))
-    assert(r.getSeq[Long](3) === Seq.fill(64)(0L), "token-free text embeds to the zero vector")
+    // plain, empty, punctuation-only, non-ASCII, repeated-token, and a
+    // two-token text, whose bit sums are 0 wherever the two md5s differ
+    val texts = Seq("the fast dog the", "", "?!... -- ,;", "Naïve café ÜBER straße",
+      "dog dog dog cat", "alpha beta")
+    val sums = texts.map { t =>
+      val r = spark.sql(
+        """SELECT hash_embed(:t) AS q,
+          |       aggregate(
+          |         transform(filter(split(lower(:t), '[^a-z0-9]+'), t -> t != ''), tk -> md5(tk)),
+          |         array_repeat(0L, 64),
+          |         (acc, h) -> zip_with(acc, sequence(0, 63), (a, j) ->
+          |           a + 2 * (shiftright(instr('0123456789abcdef', substring(h, (j DIV 4) + 1, 1)) - 1,
+          |                               3 - (j % 4)) & 1) - 1)) AS ref,
+          |       simhash64(:t) AS sig""".stripMargin, Map("t" -> t)).head()
+      val q = r.getSeq[Long](0)
+      assert(q === r.getSeq[Long](1), t)
+      assert(q.length === 64)
+      // the sign projection of the sums IS the SimHash bit string; a sum
+      // of exactly 0 gives '0'
+      assert(q.map(s => if (s > 0) '1' else '0').mkString === r.getString(2), t)
+      t -> q
+    }.toMap
+    assert(sums("") === Seq.fill(64)(0L), "token-free text embeds to the zero vector")
+    assert(sums("?!... -- ,;") === Seq.fill(64)(0L), "punctuation is no token")
+    assert(sums("alpha beta").contains(0L), "the two-token text must reach a 0 sum")
+    assert(sums("dog dog dog cat").forall(s => s != 0L && math.abs(s) % 2 == 0))
   }
 
   test("char_gram_seq emits distinct sampled grams of the normalized text") {
