@@ -115,10 +115,10 @@ private object Tokens {
     sep.split(text.toLowerCase.toString).filter(_.nonEmpty)
 }
 
-/** The 64 per-bit sums of a text's [[Tokens]] multiset: sum j adds +1 for each token whose
- * md5 has bit (7−j%8) of byte j/8 set, −1 otherwise — md5 once per token,
- * 64 integer adds per token. [[HashEmbed]] returns the sums,
- * [[SimHash64]] their signs. */
+/** The 64 per-bit sums of a text's [[Tokens]] multiset: sum j adds +1
+ * for each token whose md5 has bit (7−j%8) of byte j/8 set, −1 otherwise
+ * — md5 once per token, 64 integer adds per token. [[HashEmbed]] returns
+ * the sums, [[SimHash64]] their signs. */
 private object TokenBitSums {
   def apply(text: UTF8String): Array[Long] = {
     val md = MessageDigest.getInstance("MD5")
@@ -368,11 +368,11 @@ case class SimHash64(child: Expression)
 /**
  * `HashEmbed(text)`: deterministic 64-dim integer feature-hash embedding
  * of the token multiset — dim_j = [[TokenBitSums]]'s sum j, the sums
- * [[SimHash64]] takes the signs of, as ARRAY<BIGINT>. The stand-in "encoder" of the retrieval
- * capstone: a signed-random-projection bag-of-words embedding (feature
- * hashing, Weinberger et al. 2009) whose components both engines derive
- * exactly (integer sums of ±1), so the downstream quantized cosine top-k
- * is hash-checkable end to end. A production pipeline substitutes real
+ * [[SimHash64]] takes the signs of, as ARRAY<BIGINT>. The stand-in
+ * "encoder" of the retrieval capstone: a signed-random-projection
+ * bag-of-words embedding (feature hashing, Weinberger et al. 2009) whose
+ * components both engines derive exactly (integer sums of ±1), so the
+ * downstream quantized cosine top-k is hash-checkable end to end. A production pipeline substitutes real
  * model vectors — the surrounding plan (dot/cosine over integer vectors,
  * IVF lists) is representation-agnostic. DuckDB mirror: token rows × bit
  * index, `sum(2*bit−1)` per (chunk, j), re-assembled with
