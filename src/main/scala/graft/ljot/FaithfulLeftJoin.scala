@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 /** One input record, side-tagged. `left = true` → lhs arm (the reference's
  * `ScheduleProcessor` input, `ScheduleProcessor.java:23-25`); `left = false`
  * → rhs arm feeding the windowed join. The key is boxed: a Kafka record
- * without a key arrives as a null key (see `LeftJoinOnTimeout.taggedUnion`). */
+ * without a key arrives as a null key (see `LeftJoinOnTimeout.keyedJoin`). */
 private[ljot] case class TaggedRec(key: java.lang.Long, value: String, ts: Timestamp, left: Boolean)
 
 /** Un-joined output row; the user joiner is applied afterwards as a Column

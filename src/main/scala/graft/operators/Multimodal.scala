@@ -256,41 +256,29 @@ object Multimodal {
    * Scale shape — exactly [[TextDedup.simhashDedup]]'s: the signature is
    * a scan-projection (no payload bytes ever shuffle — 64 chars + two
    * BIGINTs ride the one groupBy exchange), buckets are capped at
-   * [[TextDedup.MaxBucket]] with observed drop sentinels, Hamming
-   * verification is inline during pair expansion (native
-   * [[graft.plans.HammingStr]]), and the size band prunes
+   * [[TextDedup.MaxBucket]] by [[TextDedup.cappedPairs]] with observed
+   * drop counts, Hamming verification is inline during pair expansion
+   * (native [[graft.plans.HammingStr]]), and the size band prunes
    * histogram-coincidence candidates before the dedup exchange. */
   def phashNearDup(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     val chunkLen = PhashBits / PhashChunks
-    val sigs = docs.select(col("doc_id").as("asset_id"),
+    val sigs = docs.select(col("doc_id"),
       length(col("text")).cast("bigint").as("n_units"),
       phashSig(col("text")).as("sig"))
-    val postings = sigs.select(col("asset_id"), col("n_units"), col("sig"),
+    val postings = sigs.select(col("doc_id"), col("n_units"), col("sig"),
       explode(transform(sequence(lit(0), lit(PhashChunks - 1)),
         j => concat(j.cast("string"), lit(":"),
           substr(col("sig"), j * chunkLen + 1, lit(chunkLen))))).as("chunk"))
-      .persist() // bucket-size aggregate AND pair expansion (caller-lazy; one-shot mains drop the session)
-    val (ok, sentinels) = TextDedup.bucketBound(postings, "chunk", 2, TextDedup.MaxBucket)
-    val es = col("es")
-    val pairs = postings.join(ok, "chunk")
-      .groupBy(col("chunk"))
-      .agg(sort_array(collect_list(struct(col("asset_id"), col("n_units"), col("sig")))).as("es"))
-      .filter(size(es) >= 2 && size(es) <= TextDedup.MaxBucket)
-      .select(es, posexplode(es).as(Seq("i", "ea")))
-      .select(col("ea"), explode(slice(es, col("i") + 2, size(es) - col("i") - 1)).as("eb"))
-      .select(col("ea.asset_id").as("id_a"), col("eb.asset_id").as("id_b"),
-        toCol(graft.plans.HammingStr(toExpr(col("ea.sig")), toExpr(col("eb.sig"))))
-          .as("hamming"),
-        col("ea.n_units").as("na"), col("eb.n_units").as("nb"))
+    val (pairs, observed) = TextDedup.cappedPairs(postings, "chunk", TextDedup.MaxBucket)
+    val (na, nb) = (col("n_units_a"), col("n_units_b"))
+    val verified = pairs
+      .withColumn("hamming", toCol(graft.plans.HammingStr(toExpr(col("sig_a")), toExpr(col("sig_b")))))
       .filter(col("hamming") <= PhashHammingMax &&
-        abs(col("na") - col("nb")) * 100 <= lit(PhashLenBandPct.toLong) * greatest(col("na"), col("nb")))
+        abs(na - nb) * 100 <= lit(PhashLenBandPct.toLong) * greatest(na, nb))
       .select(col("id_a"), col("id_b"), col("hamming"))
       .distinct()
-    TextDedup.observeDrops(
-      pairs.withColumn("is_sentinel", lit(false))
-        .unionByName(sentinels.withColumn("hamming", lit(null).cast("long"))),
-      "graft_mm_phash_buckets")
+    observed(verified, "graft_mm_phash_buckets")
   }
 
   /** Oracle — the relational mirror, deriving the ± weights from

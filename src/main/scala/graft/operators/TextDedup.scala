@@ -90,155 +90,103 @@ object TextDedup {
     s"(CAST(len(list_intersect($a, $b)) AS DOUBLE) / " +
       s"CAST(len($a) + len($b) - len(list_intersect($a, $b)) AS DOUBLE))"
 
-  /** Candidate pairs from an inverted-index bucket relation (bucket, doc_id):
-   * group by bucket, collect the (deduplicated-upstream) doc ids, expand the
-   * in-bucket pairs with id_a < id_b via a sorted-array nested transform.
-   * Identical to the classic posting self-join `a JOIN b ON a.bk = b.bk AND
-   * a.doc_id < b.doc_id` — but ONE shuffle (the groupBy) instead of the
-   * join's two sorted exchanges over persisted postings, and no persist of
-   * exploded rows at all. `maxBucket` bounds the collected list — callers
-   * must have bounded bucket sizes UPSTREAM (a df filter, or
-   * [[boundedBucketPairs]]): the collect_list itself is O(bucket) memory,
-   * so this filter is a correctness backstop, not the memory bound. */
-  private def bucketPairs(postings: DataFrame, bucketCol: String,
-                          minBucket: Int, maxBucket: Int): DataFrame =
-    rawBucketPairs(postings, bucketCol, minBucket, maxBucket).distinct()
-
-  /** [[bucketPairs]] WITHOUT the cross-band distinct: emits each in-bucket
-   * pair once PER BUCKET it co-occurs in. For callers whose per-candidate
-   * verify is a cheap map-side expression — there, deduplicating the few
-   * survivors after the verify beats shuffling the full candidate set
-   * through a distinct first (emb_neardup sf1: 57M distinct candidates for
-   * 169k survivors; the duplication factor across its bands is only ~1.3×,
-   * so the re-verified work is far cheaper than the saved exchange). */
-  private def rawBucketPairs(postings: DataFrame, bucketCol: String,
-                             minBucket: Int, maxBucket: Int): DataFrame = {
-    val ids = col("ids")
-    val grouped = postings.groupBy(col(bucketCol))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(ids) >= minBucket && size(ids) <= maxBucket)
-    // pair expansion via two codegen'd generators (posexplode + slice) —
-    // a nested transform-into-structs lambda here evaluated interpreted,
-    // tens of CPU-seconds at a few hundred thousand buckets
-    grouped
-      .select(ids, posexplode(ids).as(Seq("i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(ids, col("i") + 2, size(ids) - col("i") - 1)).as("id_b"))
+  /** The one in-bucket pair expansion. `postings` holds doc_id,
+   * `bucketCol` and any payload columns: group by bucket, collect each
+   * bucket's postings as a sorted list, keep lists of 2 to `maxBucket`
+   * postings, and emit every in-bucket pair — (id_a, id_b, and `<c>_a`,
+   * `<c>_b` for each payload column c), id_a < id_b. Identical to the
+   * posting self-join `a JOIN b ON a.bk = b.bk AND a.doc_id < b.doc_id`,
+   * but ONE shuffle (the groupBy) instead of the join's two sorted
+   * exchanges; a payload narrow enough to ride that shuffle (simhash's
+   * signature, fuzzy's window) is verified inline, with no join back to
+   * the corpus. A pair comes out once PER BUCKET it co-occurs in: each
+   * caller places its own `.distinct()` (before a join-back verify, after
+   * a map-side one — there the few survivors are cheaper to deduplicate
+   * than the candidate set). Either place gives the same rows as long as
+   * the verdict is a deterministic function of the pair. The
+   * collect_list is O(bucket) memory, so callers bound bucket sizes
+   * upstream ([[cappedPairs]], or a df filter); the size filter here is
+   * a correctness backstop. */
+  private[operators] def pairsIn(postings: DataFrame, bucketCol: String,
+                                 maxBucket: Int): DataFrame = {
+    val payload = postings.columns.toSeq.filterNot(Set("doc_id", bucketCol))
+    // without a payload the list holds bare ids: a long array sorts
+    // natively, a struct list through the interpreted row ordering
+    // (~15% of dedup_ngram_jaccard's time at sf0.1 on a 4-core host)
+    val bare = payload.isEmpty
+    val elem = if (bare) col("doc_id") else struct(("doc_id" +: payload).map(col): _*)
+    def side(s: String): Seq[Column] =
+      (if (bare) col(s) else col(s"$s.doc_id")).as(s"id_$s") +:
+        payload.map(c => col(s"$s.$c").as(s"${c}_$s"))
+    val es = col("es")
+    postings.groupBy(col(bucketCol))
+      .agg(sort_array(collect_list(elem)).as("es"))
+      .filter(size(es).between(2, maxBucket))
+      // pair expansion via two codegen'd generators (posexplode + slice) —
+      // a nested transform-into-structs lambda here evaluated interpreted,
+      // tens of CPU-seconds at a few hundred thousand buckets
+      .select(es, posexplode(es).as(Seq("i", "a")))
+      .select(col("a"), explode(slice(es, col("i") + 2, size(es) - col("i") - 1)).as("b"))
+      .select(side("a") ++ side("b"): _*)
   }
 
-  /** Sentinel rows carry drop statistics through the candidate-pair
-   * relation (see [[boundedBucketPairs]]), flagged by a DEDICATED
-   * `is_sentinel` boolean column — never by the id value space, so every
-   * doc_id domain (negative ids included) is safe. Within the sentinel
-   * rows, `id_a` discriminates which metric the row carries. */
-  private val SentinelOversizeBuckets = 0L
-  private val SentinelOversizeDocs    = 1L
-
-  private[operators] def isSentinel: Column = col("is_sentinel")
-
-  /** [[bucketPairs]] with a HARD bucket-size bound enforced BEFORE any list
+  /** [[pairsIn]] with a HARD bucket-size bound enforced BEFORE any list
    * is collected. An adversarial corpus — a million byte-identical crawl
    * pages — puts every copy in the same signature bucket: collect_list
    * would buffer the whole bucket on one task and the pair expansion would
    * emit O(n²) rows. Here a count aggregate (codegen'd, map-side partial)
    * sizes each bucket first; oversize buckets are dropped before the
    * collect, and the join back to postings keeps the bucket key's hash
-   * partitioning, so the following groupBy adds no exchange.
+   * partitioning, so the following groupBy adds no exchange. The postings
+   * are persisted: they feed the size count AND the expansion, and
+   * unpersisted Catalyst would replay the whole posting pipeline (minhash
+   * signatures, hyperplane dots upstream) for each.
    *
-   * Returns the candidate pairs PLUS two sentinel rows
-   * (`is_sentinel` = true, `id_a` = the metric discriminator,
-   * `id_b` = the drop count — always present, 0 when nothing dropped),
-   * persisted: the caller consumes the pairs for candidate verification
-   * and re-unions the sentinels onto its FINAL result via
-   * [[observeDrops]]. The sentinel rows must travel to the very top of
-   * the query before being observed: round 3 attached `observe` below the
-   * cache boundary (swallowed — Spark substitutes `InMemoryRelation` into
-   * the analyzed plan, hiding the `CollectMetrics` from
+   * Returns the pairs and `observed(result, metricName)`, which attaches
+   * the drop counts to the caller's FINISHED result: it unions on one
+   * sentinel row (`is_sentinel` = true, the counts in their own columns,
+   * the result's columns null; always present, 0 when nothing dropped),
+   * publishes `oversize_buckets` / `oversize_docs` under `metricName`
+   * (QueryExecutionListener / StreamingQueryProgress surface them; zero
+   * driver-side actions), strips the sentinel and returns exactly the
+   * result's columns. The sentinel must reach the very top of the query
+   * before being observed: round 3 attached `observe` below the cache
+   * boundary (swallowed — Spark substitutes `InMemoryRelation` into the
+   * analyzed plan, hiding the `CollectMetrics` from
    * `qe.observedMetrics`), and a first fix above the cache was still
    * eliminated by AQE's `AQEPropagateEmptyRelation` precisely in the
    * adversarial all-dropped case (empty filtered branch → the whole
    * metrics-bearing subtree replaced by `EmptyRelation`). A top-level
-   * union with an always-2-row sentinel branch can never be
-   * empty-propagated away.
+   * union with an always-present sentinel branch can never be
+   * empty-propagated away, and Catalyst never pushes the strip-filter
+   * below the `CollectMetrics` node. The flag is a DEDICATED column,
+   * never the id value space, so every doc_id domain (negative ids
+   * included) is safe.
    *
    * Semantics note: a dropped bucket means "these docs are mutually
    * identical at this signature's resolution — beyond the pair budget";
    * run [[exact]] as the pre-pass so byte-identical mass is collapsed
    * before fuzzy matching, leaving genuine near-dup clusters (bounded by
    * construction) in the buckets. */
-  private[operators] def boundedBucketPairs(postings: DataFrame, bucketCol: String,
-                                 minBucket: Int, maxBucket: Int): DataFrame = {
-    // persisted: the postings relation feeds the bucket-size rollup AND
-    // the cap join — unpersisted, Catalyst replays the whole posting
-    // pipeline (minhash signatures / hyperplane dots upstream) twice for
-    // EVERY caller of this helper
+  private[operators] def cappedPairs(postings: DataFrame, bucketCol: String, maxBucket: Int)
+      : (DataFrame, (DataFrame, String) => DataFrame) = {
     val cached = postings.persist()
-    val (ok, sentinels) = bucketBound(cached, bucketCol, minBucket, maxBucket)
-    bucketPairs(cached.join(ok, bucketCol), bucketCol, minBucket, maxBucket)
-      .withColumn("is_sentinel", lit(false))
-      .unionByName(sentinels)
-      .persist()
-  }
-
-  /** [[boundedBucketPairs]] built on [[rawBucketPairs]]: same cap and
-   * sentinel machinery, but candidates are NOT deduplicated across
-   * buckets and the output is NOT persisted — for single-consumer
-   * callers that verify map-side and distinct the survivors. The
-   * verify-then-distinct rewrite is value-identical when the verdict
-   * columns are a deterministic function of (id_a, id_b): duplicates of
-   * a pair produce byte-identical rows, so a distinct over survivors
-   * equals a distinct over candidates followed by the verify. */
-  private[operators] def boundedRawBucketPairs(postings: DataFrame, bucketCol: String,
-                                 minBucket: Int, maxBucket: Int): DataFrame = {
-    val cached = postings.persist()
-    val (ok, sentinels) = bucketBound(cached, bucketCol, minBucket, maxBucket)
-    rawBucketPairs(cached.join(ok, bucketCol), bucketCol, minBucket, maxBucket)
-      .withColumn("is_sentinel", lit(false))
-      .unionByName(sentinels)
-  }
-
-  /** The size-cap machinery of [[boundedBucketPairs]] alone: (in-bound
-   * bucket keys, always-2-row sentinel relation carrying the drop
-   * counts). For callers that expand pairs themselves (e.g. with a
-   * payload column riding the collect — [[simhashDedup]]). The sizes
-   * exchange is shared between the two outputs via ReuseExchange. */
-  private[operators] def bucketBound(postings: DataFrame, bucketCol: String,
-                                     minBucket: Int, maxBucket: Int): (DataFrame, DataFrame) = {
-    val sizes = postings.groupBy(col(bucketCol)).agg(count(lit(1)).as("n"))
-    val ok = sizes.filter(col("n") >= minBucket && col("n") <= maxBucket)
-      .select(bucketCol)
+    // shared by the two uses below via ReuseExchange
+    val sizes = cached.groupBy(col(bucketCol)).agg(count(lit(1)).as("n"))
+    val ok = sizes.filter(col("n").between(2, maxBucket)).select(bucketCol)
     // one global row, always present (count over empty input is 0)
-    val drops = sizes.filter(col("n") > maxBucket)
-      .agg(count(lit(1)).as("ob"), coalesce(sum(col("n")), lit(0L)).as("od"))
-    val sentinels = drops.select(explode(array(
-        struct(lit(SentinelOversizeBuckets).as("id_a"), col("ob").as("id_b")),
-        struct(lit(SentinelOversizeDocs).as("id_a"), col("od").as("id_b")))).as("s"))
-      .select(col("s.id_a").as("id_a"), col("s.id_b").as("id_b"),
-        lit(true).as("is_sentinel"))
-    (ok, sentinels)
+    val sentinel = sizes.filter(col("n") > maxBucket)
+      .agg(count(lit(1)).as("oversize_buckets"),
+        coalesce(sum(col("n")), lit(0L)).as("oversize_docs"))
+      .withColumn("is_sentinel", lit(true))
+    def observed(result: DataFrame, metricName: String): DataFrame =
+      result.unionByName(sentinel, allowMissingColumns = true)
+        .observe(metricName, max(col("oversize_buckets")).as("oversize_buckets"),
+          max(col("oversize_docs")).as("oversize_docs"))
+        .filter(col("is_sentinel").isNull)
+        .select(result.columns.toSeq.map(col): _*)
+    (pairsIn(cached.join(ok, bucketCol), bucketCol, maxBucket), observed)
   }
-
-  /** Drop-metrics surfacing, attached at the TOP of a finished dedup
-   * query: `result` must be the verified pair output with the sentinel
-   * rows from [[boundedBucketPairs]] re-unioned on (extra columns null).
-   * `observe` publishes `oversize_buckets` / `oversize_docs` as named
-   * query metrics (QueryExecutionListener / StreamingQueryProgress
-   * surface them; zero driver-side actions, zero cost at scale), then the
-   * sentinels are stripped. Catalyst never pushes the strip-filter below
-   * the `CollectMetrics` node (that would change observed values), and
-   * the sentinel branch guarantees a non-empty input, so AQE cannot
-   * empty-propagate the metrics away. */
-  private[operators] def observeDrops(result: DataFrame, metricName: String,
-                                      discCol: String = "id_a",
-                                      countCol: String = "id_b"): DataFrame =
-    result
-      .observe(metricName,
-        max(when(isSentinel && col(discCol) === SentinelOversizeBuckets, col(countCol)))
-          .as("oversize_buckets"),
-        max(when(isSentinel && col(discCol) === SentinelOversizeDocs, col(countCol)))
-          .as("oversize_docs"))
-      .filter(!isSentinel)
-      .drop("is_sentinel")
 
   /** DuckDB mirror of the bucket-size cap: keep only buckets whose posting
    * count is within [2, maxBucket] before the candidate self-join. */
@@ -276,7 +224,7 @@ object TextDedup {
    * [[exact]] pre-pass is small; a bucket past this size is duplicate MASS
    * (boilerplate, a template crawled a million times) whose O(n²) pair set
    * no downstream consumer wants row-by-row. Oversize buckets are dropped
-   * with an observed-metrics count — see [[boundedBucketPairs]]. */
+   * with an observed-metrics count — see [[cappedPairs]]. */
   val MaxBucket = 256
 
   /** Per-doc minhash signature: sig_j = min over shingles of
@@ -306,7 +254,7 @@ object TextDedup {
    * id_a < id_b. */
   def minhashLsh(docs: DataFrame): DataFrame = {
     // Candidate generation: ONE shuffle — group the banded postings by
-    // band value and expand in-bucket pairs ([[bucketPairs]]). A bucket is
+    // band value and expand in-bucket pairs ([[cappedPairs]]). A bucket is
     // a set of docs agreeing on a band of minhash minima, i.e. a genuine
     // near-dup cluster w.h.p., so bucket sizes are cluster sizes and the
     // quadratic expansion is exactly the pair set any dedup must emit.
@@ -317,10 +265,9 @@ object TextDedup {
     // of candidate docs via a join on candidate ids.
     val banded = shingleDf(docs).select(col("doc_id"),
       explode(lshBands(minhashSignature(col("sh")))).as("bv"))
-    // persisted: pairs feed the three consumers below, sentinels ride to
-    // the top-level observeDrops — all from the cache, computed once
-    val staged = boundedBucketPairs(banded, "bv", 2, MaxBucket)
-    val cand = staged.filter(!isSentinel)
+    val (pairs, observed) = cappedPairs(banded, "bv", MaxBucket)
+    // persisted: the distinct candidates feed the three consumers below
+    val cand = pairs.distinct().persist()
     val candIds = cand.select(col("id_a").as("doc_id"))
       .union(cand.select(col("id_b").as("doc_id")))
       .distinct()
@@ -335,11 +282,7 @@ object TextDedup {
         size(col("sh_a")).as("na"), size(col("sh_b")).as("nb"))
       .select(col("id_a"), col("id_b"), jaccardFrom(col("ji"), col("na"), col("nb")).as("jaccard"))
       .filter(col("jaccard") >= MinHashThreshold)
-    observeDrops(
-      verified.withColumn("is_sentinel", lit(false))
-        .unionByName(staged.filter(isSentinel)
-          .withColumn("jaccard", lit(null).cast("double"))),
-      "graft_minhash_buckets")
+    observed(verified, "graft_minhash_buckets")
   }
 
   /** Oracle. DuckDB can't nest lambdas (the inner `for s in sh` can't see
@@ -732,8 +675,7 @@ object TextDedup {
   def simhashDedup(docs: DataFrame, chunks: Int = SimHashChunks): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
     val chunkLen = SimHashBits / chunks
-    // persist: the (narrow) signature relation feeds chunk blocking AND the
-    // two verify joins. Native one-pass signature ([[graft.plans.SimHash64]]).
+    // native one-pass signature ([[graft.plans.SimHash64]])
     val sigs = docs
       .filter(size(tokens(col("text"))) > 0)
       .select(col("doc_id"), toCol(graft.plans.SimHash64(toExpr(col("text")))).as("sig"))
@@ -746,29 +688,19 @@ object TextDedup {
     // uniform corpus, so at extreme scale the pair expansion within a hot
     // bucket is the quadratic cost any pigeonhole blocking pays — WIDER
     // chunks are the knob ([[simhashChunksFor]] derives the width from the
-    // corpus size), and the [[bucketBound]] cap hard-bounds the residue.
+    // corpus size), and the [[cappedPairs]] cap hard-bounds the residue.
     val postings = sigs.select(col("doc_id"), col("sig"),
       explode(transform(sequence(lit(0), lit(chunks - 1)),
         j => concat(j.cast("string"), lit(":"),
           substr(col("sig"), j * chunkLen + 1, lit(chunkLen))))).as("chunk"))
-      .persist() // consumed by the bucket-size aggregate AND the pair expansion
-    val (ok, sentinels) = bucketBound(postings, "chunk", 2, MaxBucket)
-    val es = col("es")
-    val pairs = postings.join(ok, "chunk")
-      .groupBy(col("chunk"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("es"))
-      .filter(size(es) >= 2 && size(es) <= MaxBucket)
-      .select(es, posexplode(es).as(Seq("i", "ea")))
-      .select(col("ea"), explode(slice(es, col("i") + 2, size(es) - col("i") - 1)).as("eb"))
-      .select(col("ea.doc_id").as("id_a"), col("eb.doc_id").as("id_b"),
-        toCol(graft.plans.HammingStr(toExpr(col("ea.sig")), toExpr(col("eb.sig"))))
+    val (pairs, observed) = cappedPairs(postings, "chunk", MaxBucket)
+    val verified = pairs
+      .select(col("id_a"), col("id_b"),
+        toCol(graft.plans.HammingStr(toExpr(col("sig_a")), toExpr(col("sig_b"))))
           .as("hamming"))
       .filter(col("hamming") <= HammingMax) // verify BEFORE the dedup exchange
       .distinct()
-    observeDrops(
-      pairs.withColumn("is_sentinel", lit(false))
-        .unionByName(sentinels.withColumn("hamming", lit(null).cast("long"))),
-      "graft_simhash_buckets")
+    observed(verified, "graft_simhash_buckets")
   }
 
   /** Oracle — relational SimHash (no nested lambdas, see minhash note):
@@ -865,7 +797,7 @@ object TextDedup {
     // distinct shuffle needed. Candidate generation is ONE shuffle: group
     // postings by gram, keep rare grams (df ≤ DfMax — so the collected id
     // list is bounded at DfMax elements), expand in-bucket pairs
-    // ([[bucketPairs]]). The posting relation is consumed exactly once —
+    // ([[pairsIn]]). The posting relation is consumed exactly once —
     // no persist, no self-join. (The earlier rare-filter + posting
     // self-join computed the same candidate set with two extra shuffles
     // over a persisted posting relation; it was the bench outlier at
@@ -878,7 +810,7 @@ object TextDedup {
             .as("gr"))
     }
     // Rare grams FIRST, via a codegen'd count aggregate (partial-agg
-    // friendly), so the collect_list in bucketPairs only ever sees
+    // friendly), so the collect_list in pairsIn only ever sees
     // df-capped postings. Collecting lists for ALL grams first and
     // filtering after was pathological: ObjectHashAggregate falls back to
     // sort-based aggregation past 128 groups, paying a TimSort over the
@@ -891,7 +823,7 @@ object TextDedup {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= DfMax)
       .select("gr")
-    val cand = bucketPairs(postings.join(rare, "gr"), "gr", 2, DfMax).persist()
+    val cand = pairsIn(postings.join(rare, "gr"), "gr", DfMax).distinct().persist()
     // verify only needs gram ARRAYS for candidate docs: recompute the
     // native gram pass for those few rows instead of collect_list-ing the
     // whole posting relation back into arrays (a full-corpus shuffle)
@@ -1010,7 +942,7 @@ object TextDedup {
    * simhash's token-multiset views).
    *
    * Scale shape: postings are (doc, minimal-hash) — ≤ K per doc — through
-   * the same [[boundedBucketPairs]] one-shuffle cap machinery as every
+   * the same [[cappedPairs]] one-shuffle cap machinery as every
    * other family; verify intersects the two K-element arrays via a hash
    * join back to the narrow sketch relation. Output
    * (id_a, id_b, n_shared), id_a < id_b. */
@@ -1020,19 +952,14 @@ object TextDedup {
       .filter(size(col("fps")) > 0)
       .persist() // feeds postings AND both verify joins
     val postings = fps.select(col("doc_id"), explode(col("fps")).as("wfp"))
-    val staged = boundedBucketPairs(postings, "wfp", 2, MaxBucket)
-    val verified = staged.filter(!isSentinel)
-      .select(col("id_a"), col("id_b"))
+    val (pairs, observed) = cappedPairs(postings, "wfp", MaxBucket)
+    val verified = pairs.distinct()
       .join(fps.select(col("doc_id").as("id_a"), col("fps").as("fa")), "id_a")
       .join(fps.select(col("doc_id").as("id_b"), col("fps").as("fb")), "id_b")
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("fa"), col("fb"))).cast("bigint").as("n_shared"))
       .filter(col("n_shared") >= WinnowShareMin)
-    observeDrops(
-      verified.withColumn("is_sentinel", lit(false))
-        .unionByName(staged.filter(isSentinel)
-          .withColumn("n_shared", lit(null).cast("bigint"))),
-      "graft_winnow_buckets")
+    observed(verified, "graft_winnow_buckets")
   }
 
   def winnowDedupSql(table: String): String =
@@ -1561,7 +1488,7 @@ object TextDedup {
    * RIDES the posting through the one groupBy shuffle and verification
    * happens inline during in-bucket pair expansion — no join-back pass
    * over the corpus. Buckets are hard-capped at [[MaxBucket]] postings
-   * via [[bucketBound]] (boilerplate openings — "copyright 2024 all
+   * via [[cappedPairs]] (boilerplate openings — "copyright 2024 all
    * rights reserved" — are exactly the adversarial mass the cap exists
    * for), with drops surfacing as `graft_fuzzy_buckets` observed
    * metrics. Verification uses the THRESHOLD levenshtein — the banded
@@ -1577,29 +1504,18 @@ object TextDedup {
         concat(lit("s:"), expr(
           s"substring(norm, length(norm) - ${FuzzyBlockLen - 1}, $FuzzyBlockLen)"))))
         .as("blk"))
-      .persist() // consumed by the bucket-size aggregate AND the pair expansion
-    val (ok, sentinels) = bucketBound(postings, "blk", 2, MaxBucket)
-    val es = col("es")
-    val pairs = postings.join(ok, "blk")
-      .groupBy(col("blk"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("norm")))).as("es"))
-      .filter(size(es) >= 2 && size(es) <= MaxBucket)
-      .select(es, posexplode(es).as(Seq("i", "ea")))
-      .select(col("ea"), explode(slice(es, col("i") + 2, size(es) - col("i") - 1)).as("eb"))
+    val (pairs, observed) = cappedPairs(postings, "blk", MaxBucket)
+    val verified = pairs
       // THRESHOLD form: banded DP, O((2k+1)·n) per candidate instead of
       // the full O(n²) matrix, with a free abs-length-difference bail —
       // returns the exact distance when ≤ k and -1 otherwise, so the
       // ≥ 0 filter is the same predicate as `dist <= FuzzyMaxDist` (the
       // LevenshteinThresholdRule rewrite, applied by hand on the hot path)
-      .select(col("ea.doc_id").as("id_a"), col("eb.doc_id").as("id_b"),
-        levenshtein(col("ea.norm"), col("eb.norm"), FuzzyMaxDist)
-          .cast("bigint").as("dist"))
+      .select(col("id_a"), col("id_b"),
+        levenshtein(col("norm_a"), col("norm_b"), FuzzyMaxDist).cast("bigint").as("dist"))
       .filter(col("dist") >= 0) // verify BEFORE the dedup exchange
       .distinct()
-    observeDrops(
-      pairs.withColumn("is_sentinel", lit(false))
-        .unionByName(sentinels.withColumn("dist", lit(null).cast("long"))),
-      "graft_fuzzy_buckets")
+    observed(verified, "graft_fuzzy_buckets")
   }
 
   def fuzzyPrefixDedupSql(table: String): String =

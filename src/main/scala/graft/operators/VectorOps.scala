@@ -224,7 +224,7 @@ object VectorOps {
    * ~1/p, so B(R) grows ~1.6× per step and the plane budget bounds R.
    * A production near-dup at c ≥ 0.9 (p ≈ 0.9) sustains far larger R for
    * the same budget — the table recomputes automatically from the
-   * threshold. Beyond the clamp, the [[TextDedup.boundedBucketPairs]] cap
+   * threshold. Beyond the clamp, the [[TextDedup.cappedPairs]] cap
    * drops residual hot buckets with observed drop metrics, exactly as the
    * text dedups do. */
   val NearDupTargetBucket = 256
@@ -330,7 +330,7 @@ object VectorOps {
    * checked query runs at this corpus's measured [[NearDupSim]] = 0.4,
    * a production crawl dedup at c ≥ 0.9 gets R up to 24 and
    * non-degenerate buckets to ~4×10⁹ vectors from the same plane budget.
-   * Candidate generation is [[TextDedup.boundedBucketPairs]]: ONE
+   * Candidate generation is [[TextDedup.cappedPairs]]: ONE
    * groupBy shuffle on the band key with the [[NearDupMaxBucket]] cap
    * enforced before any list is collected, oversize drops surfacing as
    * observed metrics (`graft_embneardup_buckets`). Only in-bucket pairs
@@ -356,21 +356,16 @@ object VectorOps {
     // scale with the OUTPUT, not the candidate set (sf1: 169k survivors vs
     // 57M distinct candidates; the old plan shuffled the candidate set three
     // times — distinct + two verify joins — before filtering anything).
-    val staged = TextDedup.boundedRawBucketPairs(banded, "bv", 2, NearDupMaxBucket)
+    val (pairs, observed) = TextDedup.cappedPairs(banded, "bv", NearDupMaxBucket)
     val vecSide = vecJoinSide(n)
-    val verified = staged.filter(!TextDedup.isSentinel)
-      .select(col("id_a"), col("id_b"))
+    val verified = pairs
       .join(vecSide(qn.select(col("vec_id").as("id_a"), col("q").as("qa"), col("n2").as("na"))), "id_a")
       .join(vecSide(qn.select(col("vec_id").as("id_b"), col("q").as("qb"), col("n2").as("nb"))), "id_b")
       .select(col("id_a"), col("id_b"),
         cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("sim"))
       .filter(col("sim") >= threshold)
       .distinct()
-    TextDedup.observeDrops(
-      verified.withColumn("is_sentinel", lit(false))
-        .unionByName(staged.filter(TextDedup.isSentinel)
-          .withColumn("sim", lit(null).cast("double"))),
-      "graft_embneardup_buckets")
+    observed(verified, "graft_embneardup_buckets")
   }
 
   /** Oracle: the full [[NearDupMaxPlanes]]-plane pool is embedded as
@@ -1208,7 +1203,7 @@ object VectorOps {
    * [[SemTargetBucket]] at ANY corpus size — under the pre-round-7
    * cid-only key every √n-sized cluster blew the posting cap past ~10⁶
    * vectors and the operator degenerated to keep-everything. Pairs ride
-   * [[TextDedup.boundedBucketPairs]] on the composite key — ONE groupBy
+   * [[TextDedup.cappedPairs]] on the composite key — ONE groupBy
    * shuffle, hard-capped at [[SemMaxBucket]] postings with residual
    * oversize drops surfacing as observed metrics
    * (`graft_semdedup_buckets`) — and only in-bucket candidates pay the
@@ -1247,7 +1242,7 @@ object VectorOps {
     val qn = quantized(embeddings).persist() // feeds centroids, assignment, verify
     // persist: the N·C assignment feeds BOTH the candidate postings and
     // the final verdict join — without it the most expensive stage runs
-    // twice (boundedBucketPairs' own persist only covers the pair branch)
+    // twice (cappedPairs' own persist only covers the postings)
     val assign = nearestCentroid(qn, seedCentroids(qn, stride)).drop("sim").persist()
     // per-cluster sub-band parameters: ONE count aggregate over the
     // assignment, ≤ centroid-count rows — always broadcastable
@@ -1291,10 +1286,9 @@ object VectorOps {
     // already on the SURVIVING id_b set, so the cross-bucket candidate
     // distinct (and the 1-copy candidate persist) bought nothing — a pair
     // duplicated across buckets yields the same id_b
-    val staged = TextDedup.boundedRawBucketPairs(postings, "bv", 2, SemMaxBucket)
+    val (pairs, observed) = TextDedup.cappedPairs(postings, "bv", SemMaxBucket)
     val vecSide = vecJoinSide(n)
-    val dropped = staged.filter(!TextDedup.isSentinel)
-      .select(col("id_a"), col("id_b"))
+    val dropped = pairs
       .join(vecSide(qn.select(col("vec_id").as("id_a"), col("q").as("qa"), col("n2").as("na"))), "id_a")
       .join(vecSide(qn.select(col("vec_id").as("id_b"), col("q").as("qb"), col("n2").as("nb"))), "id_b")
       .filter(cosine(dot(col("qa"), col("qb")), col("na"), col("nb")) >= SemDedupSim)
@@ -1302,12 +1296,7 @@ object VectorOps {
       .withColumn("hit", lit(true))
     val verdict = assign.join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"), col("hit").isNull.as("keep"))
-    val sentinels = staged.filter(TextDedup.isSentinel)
-      .select(col("id_a").as("vec_id"), col("id_b").as("cid"),
-        lit(null).cast("boolean").as("keep"), col("is_sentinel"))
-    TextDedup.observeDrops(
-      verdict.withColumn("is_sentinel", lit(false)).unionByName(sentinels),
-      "graft_semdedup_buckets", discCol = "vec_id", countCol = "cid")
+    observed(verdict, "graft_semdedup_buckets")
   }
 
   /** Oracle: the shared [[ivfAssignSql]] CTEs, the same per-cluster

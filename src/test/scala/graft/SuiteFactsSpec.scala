@@ -38,20 +38,32 @@ class SuiteFactsSpec extends AnyFunSuite {
     assert(Bench.median(Seq(0.455, 0.370)) === (0.455 + 0.370) / 2)
   }
 
+  /** (path, text) of every Scala source under src/main. */
+  private def mainSources(): Seq[(java.nio.file.Path, String)] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.map { f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+    } finally files.close()
+  }
+
   test("every scaladoc block in src/main sits on a definition, not above another doc block") {
     val doc = "(?s)/\\*\\*.*?\\*/".r
-    val root = java.nio.file.Paths.get("src/main")
-    val files = java.nio.file.Files.walk(root)
-    val orphans = try {
-      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
-        val text = new String(java.nio.file.Files.readAllBytes(f),
-          java.nio.charset.StandardCharsets.UTF_8)
-        doc.findAllMatchIn(text)
-          .filter(m => text.substring(m.end).dropWhile(_.isWhitespace).startsWith("/**"))
-          .map(m => s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
-      }
-    } finally files.close()
+    val orphans = mainSources().flatMap { case (f, text) =>
+      doc.findAllMatchIn(text)
+        .filter(m => text.substring(m.end).dropWhile(_.isWhitespace).startsWith("/**"))
+        .map(m => s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    }
     assert(orphans.isEmpty, s"doc blocks followed by another doc block: ${orphans.mkString(", ")}")
+  }
+
+  test("only TextDedup knows the drop-count sentinel format") {
+    val leaks = mainSources().collect {
+      case (f, text) if f.getFileName.toString != "TextDedup.scala" &&
+        "is_sentinel|isSentinel".r.findFirstIn(text).isDefined => f.toString
+    }
+    assert(leaks.isEmpty,
+      s"sources outside TextDedup name the sentinel column: ${leaks.mkString(", ")}; " +
+        "attach drop counts through TextDedup.cappedPairs")
   }
 
   private def stub(name: String) = SparkEntry.Query(name, (s, _) => s.emptyDataFrame)

@@ -30,8 +30,7 @@ class NearDupProbeSpec extends AnyFunSuite with SparkTestHarness {
     val (emb, qn, banded, _, _, _) = bandedPostings(dir)
     val qnP = qn.persist()
     // the pre-round-13 shape: distinct candidates first, then the verify
-    val old = TextDedup.boundedBucketPairs(banded, "bv", 2, VectorOps.NearDupMaxBucket)
-      .filter(!col("is_sentinel"))
+    val old = TextDedup.cappedPairs(banded, "bv", VectorOps.NearDupMaxBucket)._1.distinct()
       .select(col("id_a"), col("id_b"))
       .join(qnP.select(col("vec_id").as("id_a"), col("q").as("qa"), col("n2").as("na")), "id_a")
       .join(qnP.select(col("vec_id").as("id_b"), col("q").as("qb"), col("n2").as("nb")), "id_b")

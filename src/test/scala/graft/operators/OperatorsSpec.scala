@@ -598,6 +598,17 @@ class OperatorsSpec extends AnyFunSuite with SparkTestHarness {
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
+    // a fresh deadline per metric: an earlier wait may have consumed most
+    // of one on a slow host
+    def surfaced(metric: String): org.apache.spark.sql.Row = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!observed.contains(metric) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(observed.contains(metric),
+        s"$metric never surfaced to the QueryExecutionListener within 30s — " +
+          s"is the CollectMetrics node below a cache boundary? observed keys: ${observed.keySet}")
+      observed(metric)
+    }
     try {
       // the adversarial crawl: one template, 500 byte-identical copies —
       // every minhash band agrees, so ALL docs land in the same 6 buckets
@@ -607,28 +618,33 @@ class OperatorsSpec extends AnyFunSuite with SparkTestHarness {
       val out = TextDedup.minhashLsh(docs).collect()
       assert(out.isEmpty,
         "mega-buckets are duplicate mass for the exact pre-pass, not O(n^2) pairs")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!observed.contains("graft_minhash_buckets") && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(observed.contains("graft_minhash_buckets"),
-        s"drop metrics never surfaced to the QueryExecutionListener within 30s — " +
-          s"is the CollectMetrics node below a cache boundary? observed keys: ${observed.keySet}")
-      val m = observed("graft_minhash_buckets")
+      val m = surfaced("graft_minhash_buckets")
       assert(m.getAs[Long]("oversize_buckets") === TextDedup.LshBands.toLong)
       assert(m.getAs[Long]("oversize_docs") === 500L * TextDedup.LshBands)
       // simhash shares the bound; it must also complete without a
       // mega-bucket AND surface its own drop metrics (its observe path is
-      // a different shape: no cache, inline verify). Fresh deadline — the
-      // minhash wait above may have consumed the first one on a slow host.
+      // a different shape: no cache, inline verify)
       assert(TextDedup.simhashDedup(docs).collect().isEmpty)
-      val deadline2 = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!observed.contains("graft_simhash_buckets") && System.nanoTime() < deadline2)
-        Thread.sleep(50)
-      assert(observed.contains("graft_simhash_buckets"),
-        s"simhash drop metrics never surfaced; observed keys: ${observed.keySet}")
-      val sm = observed("graft_simhash_buckets")
+      val sm = surfaced("graft_simhash_buckets")
       assert(sm.getAs[Long]("oversize_buckets") === TextDedup.SimHashChunks.toLong)
       assert(sm.getAs[Long]("oversize_docs") === 500L * TextDedup.SimHashChunks)
+      // winnow: every copy posts the same RollingK distinct minimal window
+      // hashes, one bucket each
+      assert(TextDedup.winnowDedup(docs).collect().isEmpty)
+      val wm = surfaced("graft_winnow_buckets")
+      assert(wm.getAs[Long]("oversize_buckets") === TextFunctions.RollingK.toLong)
+      assert(wm.getAs[Long]("oversize_docs") === 500L * TextFunctions.RollingK)
+      // fuzzy: two block keys per copy, the opening ("p:") and the
+      // closing ("s:") of the normalized window
+      assert(TextDedup.fuzzyPrefixDedup(docs).collect().isEmpty)
+      val fm = surfaced("graft_fuzzy_buckets")
+      assert(fm.getAs[Long]("oversize_buckets") === 2L)
+      assert(fm.getAs[Long]("oversize_docs") === 500L * 2)
+      // phash: PhashChunks chunk keys of one signature per copy
+      assert(Multimodal.phashNearDup(docs).collect().isEmpty)
+      val pm = surfaced("graft_mm_phash_buckets")
+      assert(pm.getAs[Long]("oversize_buckets") === Multimodal.PhashChunks.toLong)
+      assert(pm.getAs[Long]("oversize_docs") === 500L * Multimodal.PhashChunks)
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -779,6 +795,13 @@ class OperatorsSpec extends AnyFunSuite with SparkTestHarness {
     val sh = TextDedup.simhashDedup(docs)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sh.contains((-5L, -3L)), s"simhash too; got $sh")
+    // the payload-carrying expansions: fuzzy's window, phash's size + signature
+    val fz = TextDedup.fuzzyPrefixDedup(docs)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(fz === Set((-5L, -3L)), s"fuzzy too; got $fz")
+    val ph = Multimodal.phashNearDup(docs)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(ph === Set((-5L, -3L)), s"phash too; got $ph")
   }
 
   test("ivfStrideFor scales the centroid count with sqrt(n) under the budget") {
