@@ -63,16 +63,13 @@ object SparkEntry {
 
     /** The anti-join (timeout-only) branch in isolation: lefts with NO
      * in-window right — semantically NOT EXISTS (SURVEY.md §2.1-O5). */
-    def timeoutOnly(s: SparkSession, dir: String): DataFrame = {
-      val l = eventsSide(s, dir, "purchase")
-        .select(col("key").as("lkey"), col("value").as("lvalue"), col("ts").as("lts"))
-      val r = eventsSide(s, dir, "error")
-        .select(col("key").as("rkey"), col("ts").as("rts"))
-      l.join(r, LeftJoinOnTimeout.bandCondition(ljotCfg), "left_anti")
+    def timeoutOnly(s: SparkSession, dir: String): DataFrame =
+      LeftJoinOnTimeout.bandJoin(
+        eventsSide(s, dir, "purchase"),
+        eventsSide(s, dir, "error"), ljotCfg, "left_anti")
         .select(col("lkey").as("key"),
                 concat(col("lvalue"), lit("+")).as("joined"),
                 col("lts").as("ts"))
-    }
 
     /** Text-analysis scalar pipeline (language-ID, quality, whitespace +
      * BPE-ish token counts, fingerprint) — no shuffle. The token array is

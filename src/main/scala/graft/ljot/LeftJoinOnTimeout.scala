@@ -73,15 +73,19 @@ object LeftJoinOnTimeoutConfig {
  * outputs with the triggering record's ts; we normalize to the left ts for
  * determinism (documented divergence, SURVEY.md §2.3-5).
  *
- * Batch inputs plan as ONE left-outer join — Catalyst's equi-join
- * extraction keys the shuffle on `key` and applies the time band as a
- * join-level filter; the reference's schedule/cancel machinery
- * (~400 LoC of timers, semaphores and changelogs) has no batch analog to
- * preserve. Streaming inputs run as ONE event-time keyed-state operator
- * over the side-tagged union of both watermarked inputs: the per-key band
- * probe is the join, and the event-time group timer at `l.ts + D` is the
- * schedule/cancel mechanism (SURVEY.md §2.1-O5). Streaming keys are long
- * and values string (see [[keyedJoin]]).
+ * Two mechanisms run the family, each bounding its state by R:
+ *  - [[bandJoin]], one Catalyst join on the band, runs every batch join
+ *    and the streaming inner and full-outer joins. Catalyst keys the
+ *    shuffle on `key` and keeps the band as a join-level filter; on
+ *    streams, Spark's stream-stream join holds a row until the other
+ *    side's R watermark clears its band and drops a row below the
+ *    watermark as late. The reference's schedule/cancel machinery
+ *    (~400 LoC of timers, semaphores and changelogs) has no batch analog.
+ *  - [[keyedJoin]], one event-time keyed-state operator over both
+ *    R-watermarked inputs, runs the streaming left join: the per-key band
+ *    probe is the join, and the group timer at `l.ts + D` is the
+ *    schedule/cancel mechanism (SURVEY.md §2.1-O5). Keys are long and
+ *    values string.
  */
 object LeftJoinOnTimeout {
 
@@ -105,18 +109,16 @@ object LeftJoinOnTimeout {
    *         `joiner(l, null)` row per left with no in-window match.
    */
   def apply(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
-            cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val streaming = lhs.isStreaming || rhs.isStreaming
-    if (streaming) streamingJoin(lhs, rhs, joiner, cfg)
-    else bandJoin(lhs, rhs, joiner, cfg, "left_outer")
-  }
+            cfg: LeftJoinOnTimeoutConfig): DataFrame =
+    if (lhs.isStreaming || rhs.isStreaming) streamingJoin(lhs, rhs, joiner, cfg)
+    else joined(bandJoin(lhs, rhs, cfg, "left_outer"), joiner)
 
   /** Inner windowed interval equi-join only (reference O4,
    * `LeftJoinOnTimeoutBuilder.java:112-115`): one output per in-window
    * (l, r) pair. */
   def innerJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
                 cfg: LeftJoinOnTimeoutConfig): DataFrame =
-    bandJoin(lhs, rhs, joiner, cfg, "inner")
+    joined(bandJoin(lhs, rhs, cfg, "inner"), joiner)
 
   /** Full-outer windowed interval equi-join — the symmetric completion
    * of the family (inner = O4, left = O5): unmatched LEFTS and unmatched
@@ -129,31 +131,31 @@ object LeftJoinOnTimeout {
    * reference `ValueJoiner` contract (`:30`) is left-biased and has no
    * null-left form to mirror. */
   def fullOuterJoin(lhs: DataFrame, rhs: DataFrame,
-                    cfg: LeftJoinOnTimeoutConfig): DataFrame = {
-    val (l0, r0) = tagged(lhs, rhs)
-    // streaming full-outer needs both watermarks (each side's orphans
-    // emit when the OTHER side's watermark clears its band) — same
-    // retention→watermark mapping as the streaming left join
-    val streaming = lhs.isStreaming || rhs.isStreaming
-    val wm = s"${cfg.retention.toMillis} milliseconds"
-    val (l, r) =
-      if (streaming) (l0.withWatermark("lts", wm), r0.withWatermark("rts", wm))
-      else (l0, r0)
-    l.join(r, bandCondition(cfg), "full_outer")
+                    cfg: LeftJoinOnTimeoutConfig): DataFrame =
+    bandJoin(lhs, rhs, cfg, "full_outer")
       .select(coalesce(col("lkey"), col("rkey")).as("key"),
               col("lvalue"), col("rvalue"), col("lts"), col("rts"))
+
+  /** The family's one band join: both sides side-tagged (`lkey`/`lvalue`/
+   * `lts`, `rkey`/`rvalue`/`rts`, so self-joins resolve), each watermarked
+   * at R when either input streams, joined as one `joinType` join on
+   * [[bandCondition]]. Returns the tagged columns; callers project. */
+  private[graft] def bandJoin(lhs: DataFrame, rhs: DataFrame, cfg: LeftJoinOnTimeoutConfig,
+                              joinType: String): DataFrame = {
+    val l = lhs.select(col("key").as("lkey"), col("value").as("lvalue"), col("ts").as("lts"))
+    val r = rhs.select(col("key").as("rkey"), col("value").as("rvalue"), col("ts").as("rts"))
+    val wm = s"${cfg.retention.toMillis} milliseconds"
+    val (lw, rw) =
+      if (lhs.isStreaming || rhs.isStreaming) (l.withWatermark("lts", wm), r.withWatermark("rts", wm))
+      else (l, r)
+    lw.join(rw, bandCondition(cfg), joinType)
   }
 
-  /** The band join as one `joinType` join (`inner` = O4, `left_outer` =
-   * batch O5): `(key, joiner(l.value, r.value), l.ts)`. */
-  private def bandJoin(lhs: DataFrame, rhs: DataFrame, joiner: Joiner,
-                       cfg: LeftJoinOnTimeoutConfig, joinType: String): DataFrame = {
-    val (l, r) = tagged(lhs, rhs)
-    l.join(r, bandCondition(cfg), joinType)
-      .select(col("lkey").as("key"),
-              joiner(col("lvalue"), col("rvalue")).as("joined"),
-              col("lts").as("ts"))
-  }
+  /** `(key, joiner(l.value, r.value), l.ts)` over [[bandJoin]]'s columns. */
+  private def joined(band: DataFrame, joiner: Joiner): DataFrame =
+    band.select(col("lkey").as("key"),
+                joiner(col("lvalue"), col("rvalue")).as("joined"),
+                col("lts").as("ts"))
 
   /**
    * Idiomatic streaming variant: the keyed-state stage ([[keyedJoin]]) with
@@ -273,18 +275,12 @@ object LeftJoinOnTimeout {
     matched
   }
 
-  /** Rename to side-tagged column names so self-joins (lhs and rhs carved
-   * from the same source) never hit ambiguous-attribute resolution. */
-  private def tagged(lhs: DataFrame, rhs: DataFrame): (DataFrame, DataFrame) =
-    (lhs.select(col("key").as("lkey"), col("value").as("lvalue"), col("ts").as("lts")),
-     rhs.select(col("key").as("rkey"), col("value").as("rvalue"), col("ts").as("rts")))
-
   /** `l.key = r.key AND r.ts ∈ [l.ts − D, l.ts + D]` over the tagged
    * `lkey`/`lts`/`rkey`/`rts` columns — the symmetric Kafka-0.11
    * `JoinWindows.of(D)` band (SURVEY.md §2.3-1). Expressed with
    * `expr` interval arithmetic so Catalyst extracts the equi-key for the
    * shuffle and keeps the band as a range predicate. */
-  private[graft] def bandCondition(cfg: LeftJoinOnTimeoutConfig): Column = {
+  private def bandCondition(cfg: LeftJoinOnTimeoutConfig): Column = {
     val d = cfg.joinWindow.toMillis
     col("lkey") === col("rkey") &&
       col("rts") >= expr(s"lts - INTERVAL $d MILLISECONDS") &&

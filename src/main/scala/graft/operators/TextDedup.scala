@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.functions.{TextFunctions, TextSql}
+import graft.streaming.StreamingOps
 
 /** One banded posting of a streaming document (see
  * [[TextDedup.streamingMinhashCandidates]]). */
@@ -371,17 +371,14 @@ object TextDedup {
    *  - per-bucket state holds at most [[MaxBucket]] recent docs (newest
    *    kept, oldest dropped — the streaming analog of the batch
    *    mega-bucket cap: duplicate MASS beyond the cap is an exact-dedup
-   *    concern, not a pairwise one) and evicts entries older than
-   *    `retention` behind the bucket's max event time; pair emission is
-   *    additionally guarded per pair by |ts_a − ts_b| ≤ retention, so an
-   *    out-of-order arrival pairs with exactly the surviving entries
-   *    within retention of ITSELF — no emitted pair ever spans more
-   *    than `retention` of event time, and an arrival behind the bucket
-   *    horizon does not enter state (the next eviction would remove it
-   *    before it could pair);
-   *  - a bucket idle past the watermark clears its state entirely via an
-   *    event-time timeout — total state is bounded by
-   *    (active buckets × MaxBucket).
+   *    concern, not a pairwise one); each arrival pairs with the entries
+   *    [[StreamingOps.BucketWindow.arrive]] returns, so no emitted pair
+   *    spans more than `retention` of event time, and an arrival behind
+   *    the bucket horizon does not enter state (the next eviction would
+   *    remove it before it could pair);
+   *  - each band bucket is one [[StreamingOps.bucketStage]] bucket, whose
+   *    idle-bucket rule bounds total state by
+   *    (buckets active within `retention` × MaxBucket).
    *
    * The shuffle key is the band value — identical partitioning to the
    * batch operator, so the 100 TB story carries over unchanged. */
@@ -401,33 +398,11 @@ object TextDedup {
         explode(lshBands(col("sig"))).as("bv"))
       .select(col("bv"), col("doc_id"), col("sig"), col("ts"))
       .as[BandRec]
-    banded
-      .groupByKey(_.bv)
-      .flatMapGroupsWithState[BucketState, CandPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, recs, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s0 = state.getOption.getOrElse(BucketState(Nil, Long.MinValue))
-            val (s1, out) = bucketTransition(recs, s0, retMs)
-            if (s1.entries.isEmpty) state.remove()
-            else {
-              state.update(s1)
-              // Clear the whole bucket once the watermark passes its
-              // horizon. With EventTimeTimeout the engine drops
-              // later-than-watermark rows BEFORE this function runs
-              // (FlatMapGroupsWithStateExec's late-event filter), so
-              // every record seen here has ts ≥ watermark and this
-              // timestamp is always ahead of it — a document later than
-              // the watermark is silently excluded from candidate
-              // detection, the documented lateness contract
-              // (StreamingDedupSpec's late-record test pins it).
-              state.setTimeoutTimestamp(s1.maxEventTs + retMs)
-            }
-            out.iterator
-          }
-      }
-      .toDF()
+    StreamingOps.bucketStage(banded, (r: BandRec) => r.bv, retention,
+        BucketState(Nil, Long.MinValue))(_.maxEventTs, _.entries.isEmpty) { (recs, s0) =>
+      val (s1, out) = bucketTransition(recs, s0, retMs)
+      (s1, out.iterator)
+    }
   }
 
   /** The pure per-bucket state transition of
@@ -439,53 +414,38 @@ object TextDedup {
                                           s0: BucketState,
                                           retMs: Long): (BucketState, List[CandPair]) = {
     val out = List.newBuilder[CandPair]
-    var entries = s0.entries
-    var maxTs = s0.maxEventTs
+    val w = new StreamingOps.BucketWindow(s0.entries, s0.maxEventTs, retMs)(_._1, _._3)
     recs.iterator.foreach { r =>
       val t = r.ts.getTime
-      maxTs = math.max(maxTs, t)
-      // evict BEFORE comparing: an entry past the horizon of the
-      // bucket's current stream time must not pair, even within
-      // one trigger (the horizon is event-time, not trigger-time)
-      entries = entries.filter(_._3 >= maxTs - retMs)
-      // pair emission is guarded PER PAIR by the event-time span: an
-      // out-of-order arrival (older than some entries, still >= the
-      // watermark) pairs with exactly the entries within `retention` of
-      // ITSELF — never with entries farther than retMs away (the
-      // advisor-flagged leak), and without losing the pairs that ARE
-      // within retention of each other (an earlier blanket skip of
-      // horizon-stale arrivals dropped those too)
-      entries.foreach { case (oid, osig, ots) =>
-        if (oid != r.doc_id && math.abs(ots - t) <= retMs) {
-          var agree = 0
-          var i = 0
-          while (i < MinHashK) {
-            if (osig(i) == r.sig(i)) agree += 1
-            i += 1
-          }
-          val (ia, ib) = if (oid < r.doc_id) (oid, r.doc_id) else (r.doc_id, oid)
-          out += CandPair(ia, ib, agree.toDouble / MinHashK,
-            new java.sql.Timestamp(math.max(ots, t)))
+      w.arrive(r.doc_id, t).foreach { case (oid, osig, ots) =>
+        var agree = 0
+        var i = 0
+        while (i < MinHashK) {
+          if (osig(i) == r.sig(i)) agree += 1
+          i += 1
         }
+        val (ia, ib) = if (oid < r.doc_id) (oid, r.doc_id) else (r.doc_id, oid)
+        out += CandPair(ia, ib, agree.toDouble / MinHashK,
+          new java.sql.Timestamp(math.max(ots, t)))
       }
       // the record enters state only inside the bucket horizon — beyond
       // it the next arrival's eviction would remove it before it could
       // ever pair, so inserting would only churn the cap logic
-      if (t >= maxTs - retMs) {
-        entries = (r.doc_id, r.sig, t) :: entries
-        if (entries.lengthCompare(MaxBucket) > 0) {
+      if (t >= w.horizon) {
+        w.entries = (r.doc_id, r.sig, t) :: w.entries
+        if (w.entries.lengthCompare(MaxBucket) > 0) {
           // bounded state: drop the oldest by EVENT TIME (arrival
           // order diverges from event order under out-of-order
           // input, and the contract promises the RECENT docs stay)
-          val oldest = entries.minBy(_._3)._3
+          val oldest = w.entries.minBy(_._3)._3
           var dropped = false
-          entries = entries.filter { e =>
+          w.entries = w.entries.filter { e =>
             if (!dropped && e._3 == oldest) { dropped = true; false } else true
           }
         }
       }
     }
-    (BucketState(entries, maxTs), out.result())
+    (BucketState(w.entries, w.streamTime), out.result())
   }
 
   // ---- incremental (cross-corpus) dedup --------------------------------------

@@ -6,8 +6,9 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.storage.StorageLevel
+
+import graft.streaming.StreamingOps
 
 /** One banded vector record of the streaming incremental semantic dedup
  * (band key, id, quantized vector, squared norm, event time). */
@@ -503,8 +504,8 @@ object VectorOps {
   }
 
   /** Streaming form of [[semanticIncremental]] — the standing corpus's
-   * band postings live in the STATE STORE (loaded as
-   * `flatMapGroupsWithState` initial state), freshly-embedded vectors
+   * band postings live in the STATE STORE (loaded as the `standing`
+   * state of [[StreamingOps.bucketStage]]), freshly-embedded vectors
    * stream in, and every new×old band collision within `retention` is
    * cosine-verified in place. Emits [[SemIncHit]] drop evidence
    * (append mode): a new vector with NO hit across its bands is a
@@ -516,10 +517,9 @@ object VectorOps {
    * state is bounded by the standing corpus's capped postings), and
    * oversize standing buckets (> [[NearDupMaxBucket]]) are dropped at
    * initial-state build exactly like the batch `okOld` filter.
-   * Event-time retention: standing entries stop matching once the
-   * bucket's stream time passes their horizon and are physically
-   * evicted on the next access ([[TextDedup.streamingMinhashCandidates]]'
-   * eviction contract applied to the vector state).
+   * Event-time retention: a standing entry stops matching once
+   * [[StreamingOps.BucketWindow.arrive]] evicts it behind the bucket's
+   * stream time.
    *
    * `rows`/`bands` must be the SAME derived banding the batch run uses
    * ([[nearDupRowsFor]] + [[bandTableFor]] over the corpus count) — the
@@ -548,60 +548,39 @@ object VectorOps {
         else VecBucketState(es, es.iterator.map(_._4).max)
         (bv, s)
       }
-    banded(newVecs.withWatermark("ts", s"$retMs milliseconds"))
-      .groupByKey(_.bv)
-      .flatMapGroupsWithState[VecBucketState, SemIncHit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout,
-        initPairs.groupByKey(_._1).mapValues(_._2)) {
-        (_, recs, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s0 = state.getOption.getOrElse(VecBucketState(Nil, Long.MinValue))
-            val (s1, out) = semIncTransition(recs, s0, retMs, SemDedupSim)
-            if (s1.entries.isEmpty) state.remove()
-            else {
-              state.update(s1)
-              // horizon cleanup once the watermark passes the bucket's
-              // newest event (streamingMinhashCandidates' contract)
-              state.setTimeoutTimestamp(s1.maxEventTs + retMs)
-            }
-            out.iterator
-          }
-      }
-      .toDF()
+    StreamingOps.bucketStage(banded(newVecs.withWatermark("ts", s"$retMs milliseconds")),
+        (r: VecBandRec) => r.bv, retention, VecBucketState(Nil, Long.MinValue), Some(initPairs))(
+        _.maxEventTs, _.entries.isEmpty) { (recs, s0) =>
+      val (s1, out) = semIncTransition(recs, s0, retMs, SemDedupSim)
+      (s1, out.iterator)
+    }
   }
 
   /** Pure per-bucket transition of [[streamingSemanticIncremental]] —
    * extracted for unit tests (the engine's within-batch group order is
-   * not deterministic). Evicts horizon-stale standing entries BEFORE
-   * matching, guards each pair by the event-time span, verifies with
-   * the exact integer dot + 3-IEEE-op cosine, and never admits a new
-   * vector into state. */
+   * not deterministic). Verifies each standing entry in the arrival's
+   * band ([[StreamingOps.BucketWindow.arrive]]) with the exact integer
+   * dot + 3-IEEE-op cosine, and never admits a new vector into state. */
   private[operators] def semIncTransition(recs: IterableOnce[VecBandRec],
                                           s0: VecBucketState,
                                           retMs: Long,
                                           threshold: Double): (VecBucketState, List[SemIncHit]) = {
     val out = List.newBuilder[SemIncHit]
-    var entries = s0.entries
-    var maxTs = s0.maxEventTs
+    val w = new StreamingOps.BucketWindow(s0.entries, s0.maxEventTs, retMs)(_._1, _._4)
     recs.iterator.foreach { r =>
       val t = r.ts.getTime
-      maxTs = math.max(maxTs, t)
-      entries = entries.filter(_._4 >= maxTs - retMs)
-      entries.foreach { case (oid, oq, on2, ots) =>
-        if (oid != r.vec_id && math.abs(ots - t) <= retMs) {
-          var d = 0L
-          var i = 0
-          while (i < oq.length && i < r.q.length) { d += oq(i) * r.q(i); i += 1 }
-          // degenerate zero vectors give sim NaN, which never ≥ threshold
-          val sim = d.toDouble / math.sqrt(on2.toDouble * r.n2.toDouble)
-          if (sim >= threshold)
-            out += SemIncHit(r.vec_id, oid, sim,
-              new java.sql.Timestamp(math.max(ots, t)))
-        }
+      w.arrive(r.vec_id, t).foreach { case (oid, oq, on2, ots) =>
+        var d = 0L
+        var i = 0
+        while (i < oq.length && i < r.q.length) { d += oq(i) * r.q(i); i += 1 }
+        // degenerate zero vectors give sim NaN, which never ≥ threshold
+        val sim = d.toDouble / math.sqrt(on2.toDouble * r.n2.toDouble)
+        if (sim >= threshold)
+          out += SemIncHit(r.vec_id, oid, sim,
+            new java.sql.Timestamp(math.max(ots, t)))
       }
     }
-    (VecBucketState(entries, maxTs), out.result())
+    (VecBucketState(w.entries, w.streamTime), out.result())
   }
 
   /** The exact all-pairs baseline the bucketed [[embeddingNearDup]] is

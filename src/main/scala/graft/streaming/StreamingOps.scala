@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.time.Duration
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Misra–Gries sketch state for one token shard of
  * [[StreamingOps.trendingTokens]]: at most `k` live counters plus the
@@ -128,17 +130,16 @@ object StreamingOps {
    * O(vocabulary); this is O(shards · k) FOREVER, the sketch's whole
    * point. Sharding by token hash spreads sketch work across
    * partitions; each token always lands in the same shard, so its
-   * counter is coherent. Idle shards drop their state after
-   * `retention` of event time (watermark timeout) — a quiet topic
-   * re-trends later rather than holding state forever.
+   * counter is coherent. Each shard is one [[bucketStage]] bucket, so a
+   * shard idle for `retention` behind its newest event clears — a quiet
+   * topic re-trends later rather than holding state forever.
    *
    * Input needs (ts, text); output is a stream of [[TrendAlert]]s. */
   def trendingTokens(in: DataFrame, shards: Int, threshold: Long,
-                     watermarkDelay: String, retention: java.time.Duration,
+                     watermarkDelay: String, retention: Duration,
                      k: Int = MgK): DataFrame = {
     val spark = in.sparkSession
     import spark.implicits._
-    val retMs = retention.toMillis
     // keep the WATERMARKED ts column itself through to the state op —
     // projecting it into a bigint would strip the event-time marker and
     // EventTimeTimeout needs it
@@ -148,23 +149,68 @@ object StreamingOps {
       .select(pmod(xxhash64(col("token")), lit(shards.toLong)).as("shard"),
         col("token"), col("ts"))
       .as[(Long, String, java.sql.Timestamp)]
-    toks.groupByKey(_._1)
-      .flatMapGroupsWithState[(MgState, Long), TrendAlert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, recs, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    // the state's Long is the shard's running maximum event time
+    bucketStage(toks, (_: (Long, String, java.sql.Timestamp))._1, retention,
+        (MgState(Map.empty, Set.empty), Long.MinValue))(
+        _._2, s => s._1.counters.isEmpty && s._1.alerted.isEmpty) { (recs, s) =>
+      val recList = recs.toList
+      val maxTs = recList.iterator.map(_._3.getTime).foldLeft(s._2)(math.max)
+      val (mg, alerts) = mgTransition(recList.map(_._2), s._1, k, threshold)
+      ((mg, maxTs), alerts.iterator)
+    }
+  }
+
+  /** The streaming catalog's one idle-bucket rule, as ONE
+   * `flatMapGroupsWithState(Append, EventTimeTimeout)` over `arrivals`
+   * grouped by `key`: a bucket starts from `empty` (or its `standing` row,
+   * applied in the query's first micro-batch), `step` folds its arrivals
+   * into it, a state that `isEmpty` is dropped, and the timer is the
+   * state's running maximum event time (`maxEventTs`) plus `retention`,
+   * so a bucket idle that long behind its newest event is removed. The
+   * engine drops rows below the watermark before `step` runs, so the
+   * timer is always ahead of the watermark and a late row never reaches a
+   * bucket (StreamingDedupSpec's late-record test pins it). */
+  private[graft] def bucketStage[K: Encoder, V, S: Encoder, U: Encoder](
+      arrivals: Dataset[V], key: V => K, retention: Duration, empty: S,
+      standing: Option[Dataset[(K, S)]] = None)(
+      maxEventTs: S => Long, isEmpty: S => Boolean)(
+      step: (Iterator[V], S) => (S, Iterator[U])): DataFrame = {
+    val initial = standing.getOrElse(arrivals.sparkSession.emptyDataset(
+      Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[S]])))
+    arrivals.groupByKey(key)
+      .flatMapGroupsWithState[S, U](OutputMode.Append, GroupStateTimeout.EventTimeTimeout,
+        initial.groupByKey(_._1).mapValues(_._2)) { (_: K, recs: Iterator[V], state: GroupState[S]) =>
+        if (state.hasTimedOut) { state.remove(); Iterator.empty }
+        else {
+          val (s, out) = step(recs, state.getOption.getOrElse(empty))
+          if (isEmpty(s)) state.remove()
           else {
-            val (s0, _) = state.getOption.getOrElse(
-              (MgState(Map.empty, Set.empty), Long.MinValue))
-            val recList = recs.toList
-            val maxTs = recList.map(_._3.getTime).foldLeft(Long.MinValue)(math.max)
-            val (s1, alerts) = mgTransition(recList.map(_._2), s0, k, threshold)
-            state.update((s1, maxTs))
-            state.setTimeoutTimestamp(maxTs + retMs)
-            alerts.iterator
+            state.update(s)
+            state.setTimeoutTimestamp(maxEventTs(s) + retention.toMillis)
           }
+          out
+        }
       }
       .toDF()
+  }
+
+  /** A bucket's retained entries and stream time (running maximum event
+   * time): the per-arrival step of the [[bucketStage]] transitions that
+   * pair an arrival with its bucket's recent entries. */
+  private[graft] final class BucketWindow[E](var entries: List[E], var streamTime: Long,
+                                             retMs: Long)(id: E => Long, ts: E => Long) {
+    def horizon: Long = streamTime - retMs
+
+    /** Advance the stream time to `t`, evict the entries below the new
+     * horizon BEFORE probing (even within one trigger), and return the
+     * entries within `retMs` of `t` itself, `self` excluded: an
+     * out-of-order arrival pairs with exactly the entries within
+     * retention of it. */
+    def arrive(self: Long, t: Long): Iterator[E] = {
+      streamTime = math.max(streamTime, t)
+      entries = entries.filter(ts(_) >= horizon)
+      entries.iterator.filter(e => id(e) != self && math.abs(ts(e) - t) <= retMs)
+    }
   }
 
   /** Windowed distinct-count sketch: per tumbling window, the

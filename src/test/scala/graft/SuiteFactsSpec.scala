@@ -66,6 +66,25 @@ class SuiteFactsSpec extends AnyFunSuite {
         "attach drop counts through TextDedup.cappedPairs")
   }
 
+  test("src/main runs two keyed-state stages: the LJOT left join's and the streaming catalog's") {
+    val calls = mainSources().flatMap { case (f, text) =>
+      "\\.flatMapGroupsWithState\\b".r.findAllMatchIn(text).map(_ => f.getFileName.toString)
+    }
+    assert(calls.sorted === Seq("LeftJoinOnTimeout.scala", "StreamingOps.scala"),
+      "flatMapGroupsWithState belongs to LeftJoinOnTimeout.keyedJoin and " +
+        "StreamingOps.bucketStage; route a new keyed bucket through bucketStage")
+  }
+
+  test("only graft.ljot names the interval band condition") {
+    val leaks = mainSources().collect {
+      case (f, text) if !f.toString.contains("graft/ljot/") && text.contains("bandCondition") =>
+        f.toString
+    }
+    assert(leaks.isEmpty,
+      s"sources outside graft.ljot restate the band: ${leaks.mkString(", ")}; " +
+        "project from LeftJoinOnTimeout.bandJoin")
+  }
+
   private def stub(name: String) = SparkEntry.Query(name, (s, _) => s.emptyDataFrame)
 
   test("the registry rejects a duplicate query name") {

@@ -137,6 +137,38 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
     } finally q.stop()
   }
 
+  test("streaming inner and full-outer joins hold only the last R of state " +
+       "and drop a pair far behind the watermark as late") {
+    // D 10 s, R 30 s, one pair a minute: a pair leaves state once the
+    // other side's watermark (max ts − R) clears its band, so at most the
+    // newest pair and the one before it are ever held
+    val c = LeftJoinOnTimeoutConfig(Duration.ofSeconds(10), Duration.ofSeconds(30))
+    val minute = 60000L
+    val last = base + 19 * minute
+    val joins = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "inner" -> ((l, r) => LeftJoinOnTimeout.innerJoin(l, r, LeftJoinOnTimeout.testJoiner, c)),
+      "full" -> ((l, r) => LeftJoinOnTimeout.fullOuterJoin(l, r, c)))
+    for ((kind, join) <- joins) {
+      val l = MemoryStream[Rec]; val r = MemoryStream[Rec]
+      val name = s"bounded_${kind}_out"
+      val q = startQuery(join(l.toDF(), r.toDF()), name)
+      try {
+        (0 until 20).foreach { i =>
+          l.addData(rec(1, s"l$i", base + i * minute)); r.addData(rec(1, s"r$i", base + i * minute))
+          q.processAllAvailable()
+        }
+        val peak = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal).max
+        assert(peak <= 4L, s"$kind: $peak state rows; at most two pairs lie within R")
+        l.addData(rec(1, "late_l", last - 19 * minute)); r.addData(rec(1, "late_r", last - 19 * minute))
+        q.processAllAvailable()
+        val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+        assert(dropped === 2L, s"$kind: both late rows are dropped and counted")
+        assert(spark.table(name).collect().forall(!_.mkString(",").contains("late")),
+          s"$kind: the late pair joined")
+      } finally q.stop()
+    }
+  }
+
   test("property: streaming left-outer == batch restatement on randomized " +
        "inputs, 5 seeds (SURVEY.md §5)") {
     // the streaming analog of LjotBatchSpec's randomized property: same

@@ -141,19 +141,10 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestHarness {
     // (bloom literal, CC convergence checksum) deliberately keep OUT of the
     // returned plan by resolving at construction time. localCheckpoint
     // lineages (RDDScan) are executor-resident and stay allowed.
-    // a zero-row LocalTableScanExec is the OPTIMIZER proving a branch empty
-    // (e.g. a sentinel filter constant-folding the non-sentinel union leg
-    // away — emb_neardup's raw-pair leg after round 13 removed the persist
-    // boundary that used to hide it); nothing was collected on the driver,
-    // so only non-empty local relations count as materializations
-    def countNonEmptyLocalScans(p: SparkPlan): Int = countMatching(p, {
-      case l: org.apache.spark.sql.execution.LocalTableScanExec => l.rows.nonEmpty
-      case _ => false
-    })
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan = fn(spark, dir).queryExecution.executedPlan
-      val hits = (Seq("CollectLimit").map(n => n -> countNodes(plan, n)) :+
-        ("LocalTableScan" -> countNonEmptyLocalScans(plan))).filter(_._2 > 0)
+      val hits = Seq("CollectLimit", "LocalTableScan").map(n => n -> countNodes(plan, n))
+        .filter(_._2 > 0)
       if (hits.nonEmpty)
         Some(s"$name: ${hits.map { case (n, c) => s"$n x$c" }.mkString(", ")}")
       else None

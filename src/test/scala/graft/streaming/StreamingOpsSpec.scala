@@ -212,6 +212,41 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestHarness {
     } finally q.stop()
   }
 
+  test("trending tokens: an out-of-order micro-batch does not pull a shard's " +
+       "clear forward") {
+    // one shard, watermark delay 10 s, retention 30 s: the shard's newest
+    // event is at +100 s, so it clears once the watermark passes +130 s.
+    // A batch of older events (+95 s, above the +90 s watermark) must not
+    // move that to +125 s: at watermark +127 s the shard and its alert
+    // stand, and the same burst does not alert a second time.
+    val in = MemoryStream[Doc]
+    val out = StreamingOps.trendingTokens(in.toDF(), shards = 1, threshold = 3L,
+      watermarkDelay = "10 seconds", retention = java.time.Duration.ofSeconds(30), k = 8)
+    val q = out.writeStream.format("memory").queryName("trend_ooo_out")
+      .outputMode("append").start()
+    def doc(sec: Long, text: String) = Doc(new Timestamp(base + sec * 1000), text)
+    def watermark = java.time.Instant.parse(q.lastProgress.eventTime.get("watermark")).toEpochMilli
+    try {
+      in.addData(doc(100, "hot hot hot"))
+      q.processAllAvailable()
+      in.addData(doc(95, "cold"))
+      q.processAllAvailable()
+      // a doc without tokens moves the watermark to +127 s and reaches no shard
+      in.addData(doc(137, ""))
+      val deadline = System.currentTimeMillis() + 60000L
+      q.processAllAvailable()
+      while (watermark != base + 127000 && System.currentTimeMillis() < deadline) {
+        Thread.sleep(50L); q.processAllAvailable()
+      }
+      assert(watermark === base + 127000)
+      in.addData(doc(128, "hot hot hot"))
+      q.processAllAvailable()
+      val rows = spark.table("trend_ooo_out").collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+      assert(rows.toList === List(("hot", 3L)), "the shard cleared early and re-alerted")
+    } finally q.stop()
+  }
+
   test("ljot topology wiring: wire-format decode -> join -> encode end-to-end") {
     // the Kafka topology (`KafkaTopics.ljotTopology`) minus the broker
     // leaf, which this zero-egress container cannot host: wire-schema
