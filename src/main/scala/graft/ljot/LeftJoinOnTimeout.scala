@@ -73,7 +73,10 @@ object LeftJoinOnTimeoutConfig {
  * outputs with the triggering record's ts; we normalize to the left ts for
  * determinism (documented divergence, SURVEY.md §2.3-5).
  *
- * Two mechanisms run the family, each bounding its state by R:
+ * Two mechanisms run the family, each bounding its state by R: a row
+ * stays in state while it lies within R + D behind the newest event time
+ * of the slower input (its watermark plus the band), so state holds at
+ * most the rows (keyed join: the keys) of that span at any rate.
  *  - [[bandJoin]], one Catalyst join on the band, runs every batch join
  *    and the streaming inner and full-outer joins. Catalyst keys the
  *    shuffle on `key` and keeps the band as a join-level filter; on

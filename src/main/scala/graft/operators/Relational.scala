@@ -254,9 +254,8 @@ object Relational {
    * — see [[graft.sources.Tables.events]]). */
   val SessionGapUs: Long = 30L * 60 * 1000 * 1000
 
-  /** Gap-based sessionization — the batch twin of the streaming
-   * `session_window` aggregation in
-   * [[graft.streaming.StreamingOps]]: a user's events split into
+  /** Gap-based sessionization — the batch twin of a streaming
+   * aggregation over Spark's `session_window`: a user's events split into
    * sessions wherever consecutive events are more than [[SessionGapUs]]
    * apart, then each session aggregates to one row (user_id,
    * session_id, n_events, session_start, session_end, total_value).

@@ -377,8 +377,10 @@ object TextDedup {
    *    the bucket horizon does not enter state (the next eviction would
    *    remove it before it could pair);
    *  - each band bucket is one [[StreamingOps.bucketStage]] bucket, whose
-   *    idle-bucket rule bounds total state by
-   *    (buckets active within `retention` × MaxBucket).
+   *    idle-bucket rule keeps a state row only for a bucket whose newest
+   *    document lies within 2 × `retention` (watermark delay plus idle
+   *    time) of the newest event: at most [[LshBands]] × the documents of
+   *    that span, each row ≤ MaxBucket entries.
    *
    * The shuffle key is the band value — identical partitioning to the
    * batch operator, so the 100 TB story carries over unchanged. */

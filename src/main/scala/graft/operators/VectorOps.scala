@@ -510,11 +510,11 @@ object VectorOps {
    * cosine-verified in place. Emits [[SemIncHit]] drop evidence
    * (append mode): a new vector with NO hit across its bands is a
    * keeper — exactly the batch operator's `keep = false` set, pinned
-   * streaming ≡ batch by `StreamingDedupSpec`.
+   * streaming ≡ batch by `StreamingCatalogPropertySpec`.
    *
    * Cross-side-only, as the batch twin: new vectors NEVER enter state
-   * (no new×new pairs, no state growth with the stream — per-bucket
-   * state is bounded by the standing corpus's capped postings), and
+   * (no new×new pairs, no state growth with the stream: at most one state
+   * row per standing band bucket, ≤ |standing| × `bands` at any rate), and
    * oversize standing buckets (> [[NearDupMaxBucket]]) are dropped at
    * initial-state build exactly like the batch `okOld` filter.
    * Event-time retention: a standing entry stops matching once

@@ -2,13 +2,16 @@ package graft.streaming
 
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Misra–Gries sketch state for one token shard of
  * [[StreamingOps.trendingTokens]]: at most `k` live counters plus the
- * tokens already alerted (so a trend fires once). */
+ * counted tokens already alerted in their current stay among the counters
+ * (`alerted ⊆ counters.keySet`, so at most 2k entries). */
 case class MgState(counters: Map[String, Long], alerted: Set[String])
 
 /** One trend alert: the token whose Misra–Gries estimate crossed the
@@ -16,53 +19,17 @@ case class MgState(counters: Map[String, Long], alerted: Set[String])
 case class TrendAlert(token: String, est_count: Long)
 
 /**
- * Streaming aggregation surface (SURVEY.md §2.2 "streaming windows" —
- * absent from the reference, built-in in Spark) plus the streaming face of
- * the dedup family. All operators take/return streaming DataFrames with
- * an event-time `ts` column and compose with `writeStream`.
+ * Streaming sketch operators plus the streaming catalog's shared keyed-state
+ * stage. All operators take/return streaming DataFrames with an event-time
+ * `ts` column and compose with `writeStream`; Spark's own `window`,
+ * `session_window`, `dropDuplicatesWithinWatermark` and stream-static joins
+ * cover the plain windowed, session, dedup and enrichment shapes.
  *
- * Scale: every operator is watermarked, so state is bounded by
- * (watermark delay × key cardinality) and Spark ages it out — the same
- * discipline the LJOT core applies (retention → watermark,
- * SURVEY.md §2.1-O5). Aggregations run partial → shuffle-by-key → final.
+ * Scale: every operator is watermarked and its scaladoc states its own
+ * state bound as a formula in rate and retention (`StreamingCatalogPropertySpec`
+ * checks each one). Aggregations run partial → shuffle-by-key → final.
  */
 object StreamingOps {
-
-  /** Tumbling event-time window counts+sums of `value` per key.
-   * Output: (key, window_start, window_end, n, total). */
-  def tumblingAgg(in: DataFrame, windowDur: String, watermarkDelay: String): DataFrame =
-    in.withWatermark("ts", watermarkDelay)
-      .groupBy(col("key"), window(col("ts"), windowDur))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .select(col("key"), col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("n"), col("total"))
-
-  /** Sliding event-time window counts per key. */
-  def slidingAgg(in: DataFrame, windowDur: String, slideDur: String,
-                 watermarkDelay: String): DataFrame =
-    in.withWatermark("ts", watermarkDelay)
-      .groupBy(col("key"), window(col("ts"), windowDur, slideDur))
-      .agg(count(lit(1)).as("n"))
-      .select(col("key"), col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("n"))
-
-  /** Session windows: events for a key within `gap` of each other merge
-   * into one session. Output: (key, session_start, session_end, n). */
-  def sessionAgg(in: DataFrame, gap: String, watermarkDelay: String): DataFrame =
-    in.withWatermark("ts", watermarkDelay)
-      .groupBy(col("key"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("n"))
-      .select(col("key"), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n"))
-
-  /** Streaming exact dedup on arbitrary key columns: drops records whose
-   * key was already seen within the watermark horizon — the streaming
-   * face of `TextDedup.exact`. State is bounded by the watermark (late
-   * duplicates beyond it pass through, documented). */
-  def dedupWithinWatermark(in: DataFrame, watermarkDelay: String,
-                           keys: Seq[String]): DataFrame =
-    in.withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** Idempotent `foreachBatch` parquet sink — the exactly-once leg of
    * the fault-tolerance story (the reference gets effective
@@ -95,11 +62,13 @@ object StreamingOps {
    * into at most `k` counters (classic MG'82: increment a live counter,
    * open one if a slot is free, otherwise decrement ALL and drop
    * zeros), returning the new state and the tokens whose ESTIMATE
-   * crossed `threshold` for the first time. The sketch guarantee —
-   * true_count ≥ estimate ≥ true_count − batch/k — makes an alert a
-   * certified lower bound on the true count. Extracted from the
-   * streaming operator so the sketch semantics are unit-testable
-   * without driving the engine. */
+   * crossed `threshold` for the first time in their current stay among
+   * the counters: a dropped counter takes its token out of `alerted` too,
+   * so the token alerts again if it re-enters and crosses again. The
+   * sketch guarantee — true_count ≥ estimate ≥ true_count − n/(k+1) over
+   * the shard's n tokens — makes an alert a certified lower bound on the
+   * true count. Extracted from the streaming operator so the sketch
+   * semantics are unit-testable without driving the engine. */
   private[streaming] def mgTransition(tokens: IterableOnce[String], s: MgState,
                                       k: Int, threshold: Long): (MgState, List[TrendAlert]) = {
     var counters = s.counters
@@ -111,6 +80,7 @@ object StreamingOps {
         case None if counters.size < k => counters = counters.updated(t, 1L)
         case None =>
           counters = counters.view.mapValues(_ - 1).filter(_._2 > 0).toMap
+          alerted = alerted.filter(counters.contains)
       }
       counters.get(t).foreach { c =>
         if (c >= threshold && !alerted(t)) {
@@ -123,16 +93,22 @@ object StreamingOps {
   }
 
   /** Streaming trending-token detection: a Misra–Gries heavy-hitter
-   * sketch per token shard, alerting the first time a token's estimate
-   * crosses `threshold` — the bursty-vocabulary monitor (breaking
+   * sketch per token shard, alerting when a token's estimate crosses
+   * `threshold` — once for each stay of the token among the shard's
+   * counters ([[mgTransition]]) — the bursty-vocabulary monitor (breaking
    * topics, spam floods, scraper loops) that exact windowed counts
-   * cannot provide at vocabulary scale: exact per-token state is
-   * O(vocabulary); this is O(shards · k) FOREVER, the sketch's whole
-   * point. Sharding by token hash spreads sketch work across
-   * partitions; each token always lands in the same shard, so its
-   * counter is coherent. Each shard is one [[bucketStage]] bucket, so a
-   * shard idle for `retention` behind its newest event clears — a quiet
-   * topic re-trends later rather than holding state forever.
+   * cannot provide at vocabulary scale. With `threshold` above n/(k+1)
+   * for a shard's n tokens, no alerted counter can be decremented away,
+   * so each token alerts at most once per shard lifetime. Sharding by
+   * token hash spreads sketch work across partitions; each token always
+   * lands in the same shard, so its counter is coherent. Each shard is one
+   * [[bucketStage]] bucket, so a shard idle for `retention` behind its
+   * newest event clears — a quiet topic re-trends later rather than
+   * holding state forever.
+   *
+   * State: at most `shards` rows, each ≤ k counters and ≤ k alerted
+   * tokens — O(shards · k) at any rate, vocabulary and retention, where
+   * exact per-token state is O(vocabulary).
    *
    * Input needs (ts, text); output is a stream of [[TrendAlert]]s. */
   def trendingTokens(in: DataFrame, shards: Int, threshold: Long,
@@ -152,7 +128,7 @@ object StreamingOps {
     // the state's Long is the shard's running maximum event time
     bucketStage(toks, (_: (Long, String, java.sql.Timestamp))._1, retention,
         (MgState(Map.empty, Set.empty), Long.MinValue))(
-        _._2, s => s._1.counters.isEmpty && s._1.alerted.isEmpty) { (recs, s) =>
+        _._2, _._1.counters.isEmpty) { (recs, s) =>
       val recList = recs.toList
       val maxTs = recList.iterator.map(_._3.getTime).foldLeft(s._2)(math.max)
       val (mg, alerts) = mgTransition(recList.map(_._2), s._1, k, threshold)
@@ -169,7 +145,7 @@ object StreamingOps {
    * so a bucket idle that long behind its newest event is removed. The
    * engine drops rows below the watermark before `step` runs, so the
    * timer is always ahead of the watermark and a late row never reaches a
-   * bucket (StreamingDedupSpec's late-record test pins it). */
+   * bucket (`StreamingCatalogPropertySpec` counts the dropped rows). */
   private[graft] def bucketStage[K: Encoder, V, S: Encoder, U: Encoder](
       arrivals: Dataset[V], key: V => K, retention: Duration, empty: S,
       standing: Option[Dataset[(K, S)]] = None)(
@@ -220,25 +196,19 @@ object StreamingOps {
    * `approx_count_distinct` twin exists in Spark, but its HLL state is
    * engine-internal; KMV's state is a pure function of the input SET,
    * so (a) the streaming answer is bit-identical to the batch answer
-   * over the same rows — pinned in `StreamingOpsSpec` — and (b) per-
-   * window state is O(k) FOREVER (an exact windowed distinct holds
-   * every key seen in the window — unbounded per-user state at scale).
+   * over the same rows under any micro-batch schedule and (b) per-window
+   * state is O(k) FOREVER (an exact windowed distinct holds every key
+   * seen in the window — unbounded per-user state at scale). State:
+   * [[windowedSketch]]'s bound.
    * Output: (window_start, window_end, m, hk, n_distinct_kmv). */
   def windowedKmvDistinct(in: DataFrame, windowDur: String,
-                          watermarkDelay: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
-    val h = md5(col("key").cast("string"))
-    val sk = toCol(graft.plans.KmvDistinctAgg(toExpr(h), k).toAggregateExpression())
-    // batch DataFrames run the identical plan minus the watermark — the
-    // backfill path of the same metric (and the spec's equality oracle)
-    val wm = if (in.isStreaming) in.withWatermark("ts", watermarkDelay) else in
-    wm.groupBy(window(col("ts"), windowDur))
-      .agg(sk.as("sk"))
+                          watermarkDelay: String, k: Int): DataFrame =
+    windowedSketch(in, windowDur, watermarkDelay, md5(col("key").cast("string")))(
+        graft.plans.KmvDistinctAgg(_, k))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("sk.m").as("m"), col("sk.hk").as("hk"),
         col("sk.est").as("n_distinct_kmv"))
-  }
 
   /** Windowed Misra-Gries heavy-hitter candidates over a document
    * stream — the third native sketch through the streaming state store
@@ -249,24 +219,17 @@ object StreamingOps {
    * bit-for-bit; what survives ANY merge schedule — micro-batch
    * partials merged incrementally into state included — is the Agarwal
    * et al. 2012 bound: est ≤ true ≤ est + n/(k+1), hence every token
-   * with true in-window frequency > n/(k+1) is RETAINED. The spec
-   * asserts exactly that guarantee against per-window truth, the same
+   * with true in-window frequency > n/(k+1) is RETAINED, the same
    * contract the batch `mg_heavy_hitters` closure certifies with an
-   * exact re-count. State per window is O(k) counters — bounded at any
-   * stream rate. */
+   * exact re-count. State: [[windowedSketch]]'s bound, O(k) counters per
+   * row. */
   def windowedMgHitters(in: DataFrame, windowDur: String,
-                        watermarkDelay: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
-    val sk = toCol(graft.plans.MisraGriesAgg(
-      toExpr(graft.functions.TextFunctions.tokens(col("text"))), k)
-      .toAggregateExpression())
-    val wm = if (in.isStreaming) in.withWatermark("ts", watermarkDelay) else in
-    wm.groupBy(window(col("ts"), windowDur))
-      .agg(sk.as("sk"))
+                        watermarkDelay: String, k: Int): DataFrame =
+    windowedSketch(in, windowDur, watermarkDelay,
+        graft.functions.TextFunctions.tokens(col("text")))(graft.plans.MisraGriesAgg(_, k))
       .select(col("window.start").as("window_start"), explode(col("sk")).as("e"))
       .select(col("window_start"), col("e.token").as("token"),
         col("e.est").as("est"), col("e.n").as("n_stream"))
-  }
 
   /** Windowed Count-Min frequency grid over a document stream — the
    * fourth native sketch through the streaming state store. Per
@@ -274,37 +237,34 @@ object StreamingOps {
    * for ANY token, not just retained heavy hitters) plus the exact
    * in-window token count. Count-Min is LINEAR — counters are sums —
    * so unlike MG the streaming answer is BIT-IDENTICAL to the batch
-   * aggregate over the same rows under any micro-batch schedule
-   * (pinned in `StreamingOpsSpec`), and per-window state is a fixed
-   * depth × width grid regardless of vocabulary or stream rate.
+   * aggregate over the same rows under any micro-batch schedule. State:
+   * [[windowedSketch]]'s bound, one depth × width grid per row
+   * regardless of vocabulary or stream rate.
    * Output: (window_start, window_end, n_tokens, counters). */
   def windowedCmGrid(in: DataFrame, windowDur: String, watermarkDelay: String,
-                     depth: Int, width: Int): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
-    val toks = in.select(col("ts"),
-      explode(graft.functions.TextFunctions.tokens(col("text"))).as("token"))
-    val wm = if (toks.isStreaming) toks.withWatermark("ts", watermarkDelay) else toks
-    val sk = toCol(graft.plans.CountMinAgg(toExpr(col("token")), depth, width)
-      .toAggregateExpression())
-    wm.groupBy(window(col("ts"), windowDur))
-      .agg(sk.as("cm"))
+                     depth: Int, width: Int): DataFrame =
+    windowedSketch(
+        in.select(col("ts"), explode(graft.functions.TextFunctions.tokens(col("text"))).as("token")),
+        windowDur, watermarkDelay, col("token"))(graft.plans.CountMinAgg(_, depth, width))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        col("cm.n").as("n_tokens"), col("cm.counters").as("counters"))
-  }
+        col("sk.n").as("n_tokens"), col("sk.counters").as("counters"))
 
-  /** Stream-static enrichment: join a streaming fact stream to a STATIC
-   * dimension on `key` — the lookup-join every event pipeline runs
-   * (user profile, device registry, doc metadata onto its stream).
-   * Left join keeps facts whose dimension row is missing (dim columns
-   * NULL) rather than silently dropping them.
+  /** The windowed-sketch step: `in` watermarked at `watermarkDelay` when it
+   * streams — a batch DataFrame runs the identical plan minus the
+   * watermark, the backfill path of the same metric and its batch twin —
+   * and grouped by a tumbling `window(ts, windowDur)` into ONE `sketch`
+   * aggregate of `input`, named `sk`.
    *
-   * Scale: a stream-static join is STATELESS — no watermark, no state
-   * store; each micro-batch plans a fresh batch join, so a small
-   * dimension broadcasts (AQE decides per-batch) and the stream side
-   * never shuffles. The static side is re-read per trigger: at scale,
-   * point it at a snapshot path (or persist it) so a concurrent
-   * dimension rewrite cannot tear mid-batch. */
-  def enrich(stream: DataFrame, dim: DataFrame, dimCols: Seq[String]): DataFrame =
-    stream.join(dim.select((col("key") +: dimCols.map(col)): _*), Seq("key"), "left")
+   * State: one row per window that ends after the watermark, i.e. the
+   * windows of the rows within `watermarkDelay + windowDur` of the newest
+   * event time — at most (watermarkDelay + a micro-batch's event-time
+   * advance) / windowDur + 2 rows at any rate. */
+  private def windowedSketch(in: DataFrame, windowDur: String, watermarkDelay: String,
+                             input: Column)(sketch: Expression => AggregateFunction): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
+    val wm = if (in.isStreaming) in.withWatermark("ts", watermarkDelay) else in
+    wm.groupBy(window(col("ts"), windowDur))
+      .agg(toCol(sketch(toExpr(input)).toAggregateExpression()).as("sk"))
+  }
 }

@@ -28,6 +28,22 @@ trait SparkTestHarness extends BeforeAndAfterAll { self: AnyFunSuite =>
     q.stop()
   }
 
+  /** Run micro-batches until one has run with watermark `wm`, for up to
+   * 60 s: a watermark advance is applied by the NEXT micro-batch (a no-data
+   * one if no input is pending), which processAllAvailable does not always
+   * wait for. Returns the watermark the last micro-batch ran with, None for
+   * a query without one. */
+  def settleWatermark(q: StreamingQuery, wm: Long): Option[Long] = {
+    def current = Option(q.lastProgress.eventTime.get("watermark"))
+      .map(java.time.Instant.parse(_).toEpochMilli)
+    val deadline = System.currentTimeMillis() + 60000L
+    q.processAllAvailable()
+    while (current.exists(_ != wm) && System.currentTimeMillis() < deadline) {
+      Thread.sleep(20L); q.processAllAvailable()
+    }
+    current
+  }
+
   override protected def afterAll(): Unit = {
     // a suite that stopped the shared context has no queries or cache left
     if (!spark.sparkContext.isStopped) {

@@ -85,6 +85,20 @@ class SuiteFactsSpec extends AnyFunSuite {
         "project from LeftJoinOnTimeout.bandJoin")
   }
 
+  test("every streaming operator is checked by StreamingCatalogPropertySpec") {
+    def read(path: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
+    val ops = read("src/main/scala/graft/streaming/StreamingOps.scala")
+    val publicDefs = "(?m)^  def (\\w+)".r.findAllMatchIn(ops).map(m => s"StreamingOps.${m.group(1)}").toSeq
+    val spec = read("src/test/scala/graft/streaming/StreamingCatalogPropertySpec.scala")
+    val missing = (publicDefs ++ Seq("TextDedup.streamingMinhashCandidates",
+      "VectorOps.streamingSemanticIncremental", "LeftJoinOnTimeout.apply",
+      "LeftJoinOnTimeout.innerJoin", "LeftJoinOnTimeout.fullOuterJoin")).filterNot(spec.contains)
+    assert(publicDefs.nonEmpty && missing.isEmpty,
+      s"StreamingCatalogPropertySpec does not check ${missing.mkString(", ")}; " +
+        "add each streaming operator to the property with its batch twin, late count and state bound")
+  }
+
   private def stub(name: String) = SparkEntry.Query(name, (s, _) => s.emptyDataFrame)
 
   test("the registry rejects a duplicate query name") {

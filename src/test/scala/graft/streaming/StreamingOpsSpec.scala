@@ -26,85 +26,6 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestHarness {
   private def sentinel = rec(99L, 0.0, base + 3600 * 1000L)
   private def sentinelDoc = Doc(new Timestamp(base + 3600 * 1000L), "sentinel")
 
-  test("tumbling window aggregation with watermark") {
-    val in = MemoryStream[VRec]
-    val out = StreamingOps.tumblingAgg(in.toDF(), "10 seconds", "5 seconds")
-    val q = out.writeStream.format("memory").queryName("tumbling_out")
-      .outputMode("append").start()
-    try {
-      in.addData(rec(1, 2.0, base + 1000), rec(1, 3.0, base + 2000),
-        rec(1, 5.0, base + 11000), rec(2, 7.0, base + 1500))
-      q.processAllAvailable()
-      in.addData(sentinel)
-      q.processAllAvailable()
-      val rows = spark.table("tumbling_out").collect()
-        .filter(_.getLong(0) < 99)
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(3), r.getDouble(4)))
-        .toSeq.sorted
-      assert(rows === Seq(
-        (1L, base, 2L, 5.0), (1L, base + 10000, 1L, 5.0), (2L, base, 1L, 7.0)))
-    } finally q.stop()
-  }
-
-  test("sliding windows: each event counts in every overlapping window") {
-    val in = MemoryStream[VRec]
-    val out = StreamingOps.slidingAgg(in.toDF(), "10 seconds", "5 seconds", "5 seconds")
-    val q = out.writeStream.format("memory").queryName("sliding_out")
-      .outputMode("append").start()
-    try {
-      // event at +7s lands in windows [0,10) and [5,15);
-      // event at +12s in [5,15) and [10,20)
-      in.addData(rec(1, 1.0, base + 7000), rec(1, 1.0, base + 12000))
-      q.processAllAvailable()
-      in.addData(sentinel)
-      q.processAllAvailable()
-      val rows = spark.table("sliding_out").collect()
-        .filter(_.getLong(0) < 99)
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(3)))
-        .toSeq.sorted
-      assert(rows === Seq(
-        (1L, base, 1L),           // [0,10): event@7
-        (1L, base + 5000, 2L),    // [5,15): events@7,12
-        (1L, base + 10000, 1L)))  // [10,20): event@12
-    } finally q.stop()
-  }
-
-  test("session windows merge events within the gap") {
-    val in = MemoryStream[VRec]
-    val out = StreamingOps.sessionAgg(in.toDF(), "5 seconds", "5 seconds")
-    val q = out.writeStream.format("memory").queryName("session_out")
-      .outputMode("append").start()
-    try {
-      // one session: 0s, 3s, 6s (gaps < 5s); separate session at 20s
-      in.addData(rec(1, 1.0, base), rec(1, 1.0, base + 3000),
-        rec(1, 1.0, base + 6000), rec(1, 1.0, base + 20000))
-      q.processAllAvailable()
-      in.addData(sentinel)
-      q.processAllAvailable()
-      val rows = spark.table("session_out").collect()
-        .filter(_.getLong(0) < 99)
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(3)))
-        .toSeq.sorted
-      assert(rows === Seq((1L, base, 3L), (1L, base + 20000, 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming dedup within watermark drops repeats of a key") {
-    val in = MemoryStream[VRec]
-    val out = StreamingOps.dedupWithinWatermark(in.toDF(), "10 seconds", Seq("key"))
-    val q = out.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      in.addData(rec(1, 1.0, base), rec(1, 2.0, base + 1000), rec(2, 3.0, base + 2000))
-      q.processAllAvailable()
-      in.addData(rec(1, 4.0, base + 3000), sentinel)
-      q.processAllAvailable()
-      val keys = spark.table("dedup_out").collect()
-        .filter(_.getLong(0) < 99).map(_.getLong(0)).toSeq.sorted
-      assert(keys === Seq(1L, 2L), "each key survives exactly once inside the watermark")
-    } finally q.stop()
-  }
-
   test("idempotent parquet sink: batches land in batch_id partitions; a replay " +
        "replaces its own batch, never duplicates or touches siblings") {
     val path = java.nio.file.Files.createTempDirectory("graft-sink").toString
@@ -140,33 +61,6 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestHarness {
     }
   }
 
-  test("stream-static enrichment joins dimension columns per micro-batch, " +
-       "keeps dimensionless facts, and stays stateless") {
-    val in = MemoryStream[VRec]
-    val dim = Seq((1L, "gold", "emea"), (2L, "silver", "apac"))
-      .toDF("key", "tier", "region")
-    val out = StreamingOps.enrich(in.toDF(), dim, Seq("tier", "region"))
-    val q = out.writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    try {
-      in.addData(rec(1, 2.0, base + 1000), rec(2, 3.0, base + 2000),
-        rec(7, 4.0, base + 3000)) // key 7 has no dimension row
-      q.processAllAvailable()
-      val rows = spark.table("enrich_out").collect()
-        .map(r => (r.getLong(0), r.getDouble(1),
-          Option(r.getString(3)), Option(r.getString(4))))
-        .toSeq.sortBy(_._1)
-      assert(rows === Seq(
-        (1L, 2.0, Some("gold"), Some("emea")),
-        (2L, 3.0, Some("silver"), Some("apac")),
-        (7L, 4.0, None, None)))
-      // stateless: no state store rows tracked for this query
-      assert(q.lastProgress == null ||
-        Option(q.lastProgress.stateOperators).forall(_.isEmpty),
-        "stream-static join must not allocate a state store")
-    } finally q.stop()
-  }
-
   test("misra-gries transition: bounded counters, lower-bound estimates, " +
        "one alert per token") {
     val k = 4
@@ -185,6 +79,29 @@ class StreamingOpsSpec extends AnyFunSuite with SparkTestHarness {
     // below-threshold tokens never alert
     val (_, none) = StreamingOps.mgTransition(List("rare"), MgState(Map.empty, Set.empty), k, 10L)
     assert(none.isEmpty)
+  }
+
+  test("misra-gries transition: a decrement that drops an alerted token's counter " +
+       "drops it from alerted too, so it alerts again after it re-enters and crosses") {
+    val (k, threshold) = (2, 2L)
+    val (s1, first) = StreamingOps.mgTransition(List("hot", "hot"), MgState(Map.empty, Set.empty),
+      k, threshold)
+    assert(first === List(TrendAlert("hot", 2L)))
+    // distinct tokens against a full table decrement every counter: "b" and
+    // "d" each take one from "hot", so its counter and its stay end
+    val (s2, none) = StreamingOps.mgTransition(List("a", "b", "c", "d"), s1, k, threshold)
+    assert(none.isEmpty)
+    assert(!s2.counters.contains("hot"))
+    assert(s2.alerted.isEmpty, s"an evicted token stays alerted: ${s2.alerted}")
+    val (_, again) = StreamingOps.mgTransition(List("hot", "hot"), s2, k, threshold)
+    assert(again === List(TrendAlert("hot", 2L)), "a new stay that crosses alerts again")
+    // alerted ⊆ counters after every token, so a shard holds at most 2k entries
+    val rnd = new scala.util.Random(7)
+    var s = MgState(Map.empty, Set.empty)
+    (1 to 2000).foreach { _ =>
+      s = StreamingOps.mgTransition(List(s"t${rnd.nextInt(12)}"), s, k = 4, threshold = 3L)._1
+      assert(s.alerted.subsetOf(s.counters.keySet) && s.counters.size <= 4, s"$s")
+    }
   }
 
   test("streaming trending tokens alerts once when a token bursts past the " +
